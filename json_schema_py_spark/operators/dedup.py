@@ -8,10 +8,10 @@ Four tiers, cheapest-first, all DataFrame-native:
    of (hash, id); partial aggregation makes the shuffle tiny.
 2. **n-gram Jaccard** — exact pairwise similarity, but only WITHIN candidate
    buckets (never all-pairs at scale).
-3. **MinHash + LSH** — the 100 TB path: per-doc signature (one projection),
-   banding → bucket join so only same-bucket docs ever meet. Shuffle cost is
-   O(docs × bands), independent of pair count. Candidates are verified with
-   exact Jaccard before reporting.
+3. **MinHash + LSH** — the 100 TB path: per-doc band keys (one projection),
+   one groupBy on the bucket so only same-bucket docs ever meet. Shuffle cost
+   is O(docs × bands) ids, independent of pair count. Candidates are
+   verified with exact Jaccard before reporting.
 4. **SimHash** — 32-bit majority-bit fingerprint; identical fingerprints (or
    small Hamming distance) = near-dup candidates.
 
@@ -170,42 +170,46 @@ def minhash_lsh_pairs(
     verified with exact Jaccard ≥ threshold.
 
     rows/band = num_hashes/bands; a pair colliding in ANY band becomes a
-    candidate (classic S-curve: P[candidate] = 1-(1-s^r)^b). The bucket join
-    shuffles on (band, bucket-key) — hot buckets (boilerplate docs) are the
-    skew risk; AQE skew-join splits them, and the verify step re-filters, so
-    correctness never depends on bucket sizes.
+    candidate (classic S-curve: P[candidate] = 1-(1-s^r)^b). Invariants:
 
-    Shuffle diet (round-2): the band-exploded exchange carries (band, bkey,
-    id) ONLY — never the shingle payload (round-1 shipped the full shingle
-    set ×bands through the shuffle). Shingles re-attach to the surviving
-    candidate PAIRS with ONE broadcast join: the candidate set is exploded
-    to (id_a, id_b, id∈{a,b}) rows, joined against the un-shuffled shingle
-    projection, and a single candidate-sized aggregation zips sh_a with
-    sh_b. The candidate subtree is evaluated once (it lives inside the
-    broadcast), and the full table is never shuffled with its payload;
-    asserted in tests/test_plan_shapes.py.
-
-    Plan shape: band keys come out of ONE aggregate pass (_band_keys),
-    fanned out by posexplode — the generator argument is evaluated once per
-    row. At 10^12 docs the sigs projection is what you'd persist/bucket on
-    the lake; here both join branches just recompute it."""
+    - **One fold per document.** The band keys come out of ONE aggregate
+      pass (_band_keys) fanned out by posexplode, and the banded frame is
+      consumed once: candidates come from a groupBy on the bucket, not a
+      self-join, so the md5 fold never depends on Spark reusing an
+      exchange across join branches.
+    - **Ids-only bucket exchange.** The (band, bkey) shuffle carries the
+      keys and doc ids only — never text or shingles. Each bucket's id list
+      with more than one id yields its pairs with id_a < id_b; pairs that
+      collide in several bands are deduplicated.
+    - **Candidate-only shingling.** The candidate pairs, exploded to one
+      row per side, are joined (broadcast unless ``broadcast_candidates``
+      is False) against the un-shuffled (id, text) projection. Shingles
+      are built only for the matched rows, and one candidate-sized
+      aggregate pairs sh_a with sh_b for the exact Jaccard verify.
+    - **Hot buckets.** A bucket's ids form one list, and its m(m-1)/2
+      pairs are generated by the one task that holds it: a boilerplate
+      bucket is a single-task hot spot (AQE's skew-join split does not
+      apply to an aggregate). Correctness never depends on bucket sizes —
+      every candidate is re-verified.
+    - **Shingle-less docs are skipped.** NULL text and docs with fewer
+      than ``shingle_k`` tokens get no band keys (minhash_signatures gives
+      them a NULL signature), so they are never candidates: with
+      ``threshold <= 0`` their Jaccard-0 pairs are not emitted."""
     sh = word_shingles(F.col(text_col), shingle_k)
-    base = ensure_parallelism(df)
-    banded = base.select(
+    keys = _band_keys(sh, num_hashes, bands, hash_impl=hash_impl)
+    banded = ensure_parallelism(df).select(
         F.col(id_col).alias("id"),
-        F.posexplode(_band_keys(sh, num_hashes, bands, hash_impl=hash_impl)).alias(
-            "band", "bkey"
-        ),
+        F.posexplode(F.when(F.size(sh) > 0, keys)).alias("band", "bkey"),
     )
     cand = (
-        banded.select("band", "bkey", F.col("id").alias("id_a"))
-        .join(banded.select("band", "bkey", F.col("id").alias("id_b")), ["band", "bkey"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        banded.groupBy("band", "bkey")
+        .agg(F.collect_list("id").alias("ids"))
+        .where(F.size("ids") > 1)
+        .select(F.explode("ids").alias("id_a"), "ids")
+        .select("id_a", F.explode(F.filter("ids", lambda b: b > F.col("id_a"))).alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
 
-    sh_df = base.select(F.col(id_col).alias("id"), sh.alias("shingles"))
     cand_sides = cand.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
     )
@@ -215,7 +219,11 @@ def minhash_lsh_pairs(
     # the pair side
     if broadcast_candidates:
         cand_sides = F.broadcast(cand_sides)
-    attached = sh_df.join(cand_sides, "id")
+    attached = (
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+        .join(cand_sides, "id")
+        .select("id_a", "id_b", "id", word_shingles(F.col("text"), shingle_k).alias("shingles"))
+    )
     pairs = attached.groupBy("id_a", "id_b").agg(
         F.first(
             F.when(F.col("id") == F.col("id_a"), F.col("shingles")), ignorenulls=True

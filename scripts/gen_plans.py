@@ -84,13 +84,18 @@ def main() -> int:
         ),
         (
             "MinHash-LSH near-dup pairs",
-            "Round-2 shuffle diet: the band exchanges carry (id, band, bkey) "
-            "ONLY — the shingle payload never rides a table-sized shuffle. "
-            "The candidate-id set is built once (band self-join → pair dedup "
-            "→ explode to pair sides), broadcast against the un-shuffled "
-            "shingle projection, and one candidate-sized aggregate zips sh_a "
-            "with sh_b before the exact Jaccard verify. Asserted in "
-            "tests/test_plan_shapes.py::test_lsh_band_exchange_carries_ids_only.",
+            "The md5 band-key fold runs once per document: ONE Generate "
+            "posexplode feeds ONE (band, bkey) groupBy, whose exchange "
+            "carries ids only — no text or shingles ride a table-sized "
+            "shuffle, and no self-join branch re-evaluates the fold. Each "
+            "bucket with more than one id yields its pairs (id_a < id_b, "
+            "deduplicated across bands); the pairs, exploded to pair sides, "
+            "are broadcast against the un-shuffled (id, text) projection, "
+            "shingles are built only for the matched rows, and one "
+            "candidate-sized aggregate zips sh_a with sh_b before the exact "
+            "Jaccard verify. Asserted in tests/test_plan_shapes.py::"
+            "test_lsh_band_exchange_carries_ids_only and "
+            "::test_lsh_band_fold_runs_once_and_shingles_only_candidates.",
             minhash_lsh_pairs(docs),
         ),
     ]

@@ -255,6 +255,63 @@ def test_lsh_pairs_shuffle_join_fallback_matches_broadcast(spark):
     assert a == b and len(a) >= 10
 
 
+def test_lsh_bucket_groupby_matches_direct_self_join(spark):
+    """Identity: minhash_lsh_pairs (bucket groupBy, candidate-only
+    shingling) ≡ the direct definition — _band_keys per doc, a plain
+    self-join on (band, bkey), brute-force Jaccard. The corpus adds a
+    one-token-variant family (buckets with > 2 ids), docs with fewer than
+    3 tokens (no shingles: never candidates) and a NULL-text row."""
+    from json_schema_py_spark.functions.text import word_shingles
+    from json_schema_py_spark.operators.dedup import _band_keys, minhash_lsh_pairs
+
+    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    base_text = d.where(F.col("doc_id") == 0).first()["text"]
+    extra = spark.createDataFrame(
+        [(200_000 + i, f"{base_text} variant{i}") for i in range(24)]
+        + [(300_000 + i, t) for i, t in enumerate(["", "one", "two words", "x y", "  a  "])]
+        + [(400_000, None)],
+        "doc_id long, text string",
+    )
+    corpus = d.unionByName(extra)
+    shingle_less = set(range(300_000, 300_005)) | {400_000}
+
+    sh = word_shingles(F.col("text"), 3)
+    banded = corpus.where(F.size(sh) > 0).select(
+        F.col("doc_id").alias("id"), F.posexplode(_band_keys(sh, 16, 4)).alias("band", "bkey")
+    )
+    biggest = banded.groupBy("band", "bkey").count().agg(F.max("count")).first()[0]
+    assert biggest > 2, "the variant family must share a bucket of more than 2 ids"
+    direct = {
+        (r["id_a"], r["id_b"])
+        for r in banded.select("band", "bkey", F.col("id").alias("id_a"))
+        .join(banded.select("band", "bkey", F.col("id").alias("id_b")), ["band", "bkey"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+        .collect()
+    }
+    shingles = {
+        r["doc_id"]: set(r["sh"] or []) for r in corpus.select("doc_id", sh.alias("sh")).collect()
+    }
+
+    def jaccard(a: int, b: int) -> float:
+        return len(shingles[a] & shingles[b]) / len(shingles[a] | shingles[b])
+
+    for bc in (True, False):
+        cand = minhash_lsh_pairs(corpus, threshold=0.0, broadcast_candidates=bc).collect()
+        assert {(r["id_a"], r["id_b"]) for r in cand} == direct, bc
+        paired = {r["id_a"] for r in cand} | {r["id_b"] for r in cand}
+        assert not paired & shingle_less
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in minhash_lsh_pairs(corpus, threshold=0.7, broadcast_candidates=bc).collect()
+        }
+        want = {p: jaccard(*p) for p in direct if jaccard(*p) >= 0.7}
+        assert got.keys() == want.keys(), bc
+        assert all(abs(got[p] - want[p]) < 1e-6 for p in want)
+        assert len(want) >= 24 * 23 // 2  # the variant family pairs up
+
+
 def test_simhash_near_pairs_exact_vs_bruteforce(spark):
     """Block-partitioned Hamming-ball join: the pigeonhole blocking is
     EXACT (distance ≤ k ⇒ one block agrees), so pairs equal brute force."""

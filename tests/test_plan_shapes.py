@@ -168,6 +168,43 @@ def test_lsh_band_exchange_carries_ids_only(spark):
         assert "id_a" in l and "id_b" in l, f"table-sized shingle shuffle: {l}"
 
 
+def _executed_nodes(spark, action) -> list[tuple[str, str]]:
+    """(name, description) of every node of the final adaptive plan the
+    SQL status store recorded for the last execution ``action`` ran —
+    writes included, whose plan the DataFrame itself never sees."""
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    runs = store.executionsList()
+    last = max(runs.apply(i).executionId() for i in range(runs.size()))
+    nodes = store.planGraph(last).allNodes()
+    return [(nodes.apply(i).name(), nodes.apply(i).desc()) for i in range(nodes.size())]
+
+
+def test_lsh_band_fold_runs_once_and_shingles_only_candidates(spark, tmp_path):
+    """The md5 band-key fold is ONE Generate in the executed plan, both
+    standalone and inside the curation write (the bucket groupBy consumes
+    the banded frame once — no reliance on exchange reuse), and shingles
+    for verification are only ever projected beside a candidate pair,
+    never over the full table."""
+    from json_schema_py_spark.operators.dedup import minhash_lsh_pairs
+    from json_schema_py_spark.plans.curation import curate_documents
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for action in (
+        lambda: minhash_lsh_pairs(docs).collect(),
+        lambda: curate_documents(docs).write.parquet(str(tmp_path / "verdicts")),
+    ):
+        nodes = _executed_nodes(spark, action)
+        assert any(d.startswith("AdaptiveSparkPlan isFinalPlan=true") for _, d in nodes)
+        folds = [d for n, d in nodes if n == "Generate" and "posexplode(" in d and "md5(" in d]
+        assert len(folds) == 1, folds
+        shingling = [
+            d for n, d in nodes if n == "Project" and "array_distinct(slice(zip_with(" in d
+        ]
+        assert shingling and all("id_a" in d and "id_b" in d for d in shingling), shingling
+
+
 def test_bucketed_join_eliminates_shuffle(spark):
     """The 100 TB co-location doctrine made concrete: two tables bucketed on
     doc_id join WITHOUT any Exchange — the shuffle happened once at write
