@@ -111,13 +111,17 @@ def corpus_index(
         ids, rep_rows = collapse_representatives(base, text_col, id_col)
         # exact tier collapses too: the normalized fingerprint is a pure
         # function of the text, so normalize+md5 run once per distinct
-        # text and fan back out by raw-md5 before the same groupBy
+        # text and fan back out by raw-md5 before the same groupBy. The
+        # key is null-safe ("" is never an md5): NULL-text docs keep their
+        # (NULL fingerprint, min id) group, as on the direct path
         rep_nfp = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"),
+            F.coalesce(F.md5(F.col(text_col)), F.lit("")).alias("_rfp"),
             text_fingerprint(F.col(text_col)).alias("fingerprint"),
         )
         exact = (
-            attach_per_text(ids, rep_nfp, mode)
+            attach_per_text(
+                ids.withColumn("_rfp", F.coalesce("_rfp", F.lit(""))), rep_nfp, mode
+            )
             .groupBy("fingerprint")
             .agg(F.min("id").alias("rep_id"))
         )

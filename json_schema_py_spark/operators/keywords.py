@@ -21,6 +21,7 @@ Exactly DuckDB-oracle-able (gate query q_tfidf_terms).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -67,8 +68,8 @@ def tfidf_top_terms(
         # ONE compact groupBy yields BOTH the multiplicity table and the
         # representative ids (the train_bigram_lm shape) — fusing the
         # separate `mult` aggregation of the first draft removed one full
-        # md5 corpus scan. Eagerly localCheckpoint-ed: bounded at the
-        # probe-verified distinct-text count, and both downstream
+        # md5 corpus scan. Persisted (lazily: building the plan runs no
+        # job): bounded at the distinct-text count, and both downstream
         # consumers (the weighted df and the representative semi-join)
         # read the materialized table instead of re-scanning the corpus.
         ids = base.select(
@@ -77,7 +78,7 @@ def tfidf_top_terms(
         grp = (
             ids.groupBy("_rfp")
             .agg(F.count(F.lit(1)).alias("_w"), F.min("id").alias("_rid"))
-            .localCheckpoint(eager=True)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         mult = grp.select("_rfp", "_w")
         rep_rows = base.join(

@@ -38,6 +38,7 @@ decide their fate, never a silent drop).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -113,10 +114,10 @@ def train_bigram_lm(
         # Generate's inferred size()>0 predicate would be pushed below
         # the representative semi-join and re-tokenize the full corpus.
         # ONE compact groupBy yields both the multiplicity table and the
-        # representative ids, eagerly localCheckpoint-ed (bounded at the
-        # probe-verified distinct-text count): the three LM tables the
-        # caller materializes (vocab, unigrams, bigrams) each re-evaluate
-        # this subtree, and without the checkpoint every materialization
+        # representative ids, persisted (lazily: building the plan runs
+        # no job; bounded at the distinct-text count): the three LM tables
+        # the caller materializes (vocab, unigrams, bigrams) each read
+        # this subtree, and without the persist every materialization
         # paid two extra full-corpus md5 scans
         ids = base.select(
             F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("_rfp")
@@ -124,7 +125,7 @@ def train_bigram_lm(
         grp = (
             ids.groupBy("_rfp")
             .agg(F.count(F.lit(1)).alias("_w"), F.min("id").alias("_rid"))
-            .localCheckpoint(eager=True)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         rep_rows = base.join(
             grp.select(F.col("_rid").alias(id_col)), id_col, "left_semi"

@@ -16,8 +16,8 @@ exact pandas path — 0.51s vs 0.52s (0.97x) after the round-4 lifts:
 string-key fast path for propertyNames (direct RLIKE/length on the key
 instead of to_json→parse_json→variant_get per key), open-object
 extra-entries without the constant-true filter wrap, a compiled-Column
-cache (the binder build was ~0.9s of serial driver py4j PER CALL —
-in-memory + disk via the compiler's cache machinery), and
+cache (the binder build is ~0.9s of serial driver py4j; one build per
+process serves every call via the compiler's cache), and
 ensure_parallelism (see the note at validate_json_variant). At a hostile
 50% violation rate the exact path is still ~2.4x faster (0.61s vs 1.44s)
 even after element-level viol gating (clean entries inside flagged docs
@@ -915,12 +915,9 @@ def validate_json_variant(
     nulls out produce real TYPE_ERRORs here, presence ≠ JSON null, and the
     whole thing stays JVM-side. Malformed JSON → SCHEMA_INVALID (exact-path
     convention)."""
-    # compiled-Column cache (same disease and cure as the static compiler,
-    # round-4): the binder's expression build is ~0.9s of serial driver-side
-    # py4j per call — 10x the small-corpus execution. The violations Column
-    # binds only F.col(json_col) by NAME, so one build serves every
-    # DataFrame; in-memory + disk (serialized catalyst tree) via the
-    # compiler's cache machinery.
+    # the violations Column binds only F.col(json_col) by NAME, so one build
+    # (~0.9 s of driver-side py4j) serves every DataFrame in the process via
+    # the compiler's compiled-Column cache
     from json_schema_py_spark.schema import compiler as _C
 
     vstruct = T.StructType([T.StructField(json_col, T.StringType())])
@@ -962,7 +959,7 @@ def validate_json_variant(
             0,
         )
 
-    violations = _C._cached_compile(ckey, vstruct, build, schema=schema)
+    violations = _C._cached_compile(ckey, build)
     # ensure_parallelism REINSTATED (round-4): the round-3 "AQE re-coalesces
     # anyway" claim was re-measured and does NOT hold for this path — the
     # heavy projection fuses into the SCAN stage (2 splits on a compacted
@@ -1028,7 +1025,7 @@ def validate_variant(
             0,
         )
 
-    violations = _C._cached_compile(ckey, vstruct, build, schema=schema)
+    violations = _C._cached_compile(ckey, build)
     from json_schema_py_spark.util import ensure_parallelism
 
     df = ensure_parallelism(df)

@@ -1103,306 +1103,32 @@ class RuleBinder:
 # ---------------------------------------------------------------------- #
 
 
-# Compiled-Column cache. Building the expression tree is DRIVER-side Python
-# crossing py4j once per Column op — measured ~1.3s for the documents
-# ruleset's unrolled tree, which DWARFS executing it (0.13s over 2M rows,
-# plan reused). A Column is an immutable unresolved-expression tree bound
-# to nothing but column NAMES, so one build serves every DataFrame with a
-# matching schema (and survives session restarts within the process — the
-# py4j gateway is per-process). Keyed by content (schema JSON + struct type
-# + flags), never id() (round-2 lesson: id() keys collide after gc).
-# Rule-instance schemas skip the cache (no stable content key).
+# Compiled-Column cache, per process. Building the expression tree is
+# driver-side Python crossing py4j once per Column op (~1.3 s for the
+# documents ruleset), far more than executing it. A Column is an immutable
+# unresolved-expression tree bound only to column NAMES, so one build serves
+# every DataFrame with a matching schema, across session restarts within the
+# process (the py4j gateway is per-process). Keys are content (schema JSON +
+# struct type + flags), never id(). Rule-instance schemas are not cached (no
+# stable content key). A hit returns the very Column the first build made;
+# compile-time diagnostics (RegexDialectWarning) are emitted by that build only.
 _COMPILE_CACHE: dict = {}
 _COMPILE_CACHE_MAX = 256
 
-# Disk-persisted compiled-expression cache (SURVEY §9.5; round-3 VERDICT
-# item 3). The in-memory cache amortizes the ~1.3s py4j expression build
-# within a process; spark-submit jobs pay it once per JOB. The compiled
-# Column's UNRESOLVED catalyst tree java-serializes (probed: SQL-text
-# round-trip is impossible — lambdafunction()/namedlambdavariable() don't
-# re-parse — but the serialized tree restores bit-identically and re-resolves
-# by column NAME against any matching DataFrame). One deserialize = one py4j
-# call instead of thousands of Column-op round trips.
-#
-# Keyed by sha256 of (format version, pyspark version, content key) —
-# a version bump or schema change can only MISS, never load a stale tree.
-# All disk I/O is best-effort: any failure falls back to a live build
-# (corrupt entries are deleted). Location: $SPARK_SCHEMA_COMPILE_CACHE, or
-# ~/.cache/json_schema_py_spark/compiled; set to 0/off/empty to disable.
-# The dir is trusted local state (java deserialization runs on load) —
-# point it only at paths you own.
-_DISK_FORMAT_VERSION = 1
-_ENGINE_SOURCE_HASH: Optional[str] = None
 
-
-def _engine_source_hash() -> Optional[str]:
-    """Hash of the source files that determine compiled output — a code
-    change invalidates every disk entry (the content key alone would keep
-    serving trees compiled by OLDER engine code). Covers every producer
-    that stores through this cache: the static binder's inputs AND the
-    variant binder (plans/json_variant.py caches its compiled Column here
-    too — review r04) plus the error-code vocabulary."""
-    global _ENGINE_SOURCE_HASH
-    if _ENGINE_SOURCE_HASH is None:
-        import hashlib
-        from pathlib import Path
-
-        h = hashlib.sha256()
-        here = Path(__file__).parent
-        pkg = here.parent
-        for path in (
-            here / "compiler.py",
-            here / "model.py",
-            here / "regex_dialect.py",
-            pkg / "errors.py",
-            pkg / "plans" / "json_variant.py",
-        ):
-            try:
-                h.update(path.read_bytes())
-            except OSError:
-                # source unreadable (zip/egg/pex deployment): a name-only
-                # hash would be CONSTANT across engine versions and keep
-                # serving stale trees after an upgrade (ADVICE r04) —
-                # disable the disk cache for this process instead
-                _ENGINE_SOURCE_HASH = ""
-                return None
-        _ENGINE_SOURCE_HASH = h.hexdigest()[:16]
-    return _ENGINE_SOURCE_HASH or None
-
-
-def _disk_cache_dir():
-    import os
-    from pathlib import Path
-
-    v = os.environ.get("SPARK_SCHEMA_COMPILE_CACHE")
-    if v is not None:
-        if v.strip().lower() in ("", "0", "off", "false", "none"):
-            return None
-        return Path(v)
-    return Path.home() / ".cache" / "json_schema_py_spark" / "compiled"
-
-
-def _trusted_cache_dir():
-    """Cache entries are Java-DESERIALIZED on load — a shared or
-    group/other-writable cache dir is an arbitrary-code-execution vector
-    (ADVICE r04). Returns the dir only when it exists, is owned by the
-    current user, and is not group/other-writable; ``create=True`` makes
-    it 0700 first. Anything else disables the disk cache."""
-    d = _disk_cache_dir()
-    if d is None:
-        return None
-    import os
-
-    try:
-        st = d.stat()
-        if hasattr(os, "getuid") and st.st_uid != os.getuid():
-            return None
-        if st.st_mode & 0o022:
-            return None
-    except OSError:
-        return None
-    return d
-
-
-def _disk_cache_path(key: tuple):
-    d = _disk_cache_dir()
-    if d is None:
-        return None
-    src_hash = _engine_source_hash()
-    if src_hash is None:
-        # engine source unreadable → cannot key entries to engine version
-        return None
-    import hashlib
-
-    import pyspark
-
-    h = hashlib.sha256(
-        repr(
-            (_DISK_FORMAT_VERSION, pyspark.__version__, src_hash, key)
-        ).encode()
-    ).hexdigest()
-    return d / f"{h}.expr"
-
-
-def _classic_jvm_session():
-    """Active classic-mode session with a live py4j gateway, else None
-    (Spark Connect has no _jvm — disk cache is a no-op there)."""
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is None or getattr(s, "_jvm", None) is None:
-        return None
-    return s
-
-
-def _disk_cache_load(key: tuple) -> Optional[Column]:
-    try:
-        path = _disk_cache_path(key)
-        if path is None or not path.is_file():
-            return None
-        if _trusted_cache_dir() is None:
-            # never deserialize from a dir we don't exclusively own
-            return None
-        spark = _classic_jvm_session()
-        if spark is None:
-            return None
-        # Spark-4 classic APIs; unavailable (e.g. pyspark 3.x, Connect) →
-        # plain miss, and NEVER unlink — deleting a valid entry on an
-        # environment limitation would turn the cache into a store/delete
-        # churn loop (review r04)
-        try:
-            from pyspark.sql.classic.column import Column as _ClassicColumn
-
-            eu = spark._jvm.org.apache.spark.sql.classic.ExpressionUtils
-        except Exception:
-            return None
-    except Exception:
-        return None
-    try:
-        jexpr = spark._jvm.org.apache.spark.util.Utils.deserialize(path.read_bytes())
-    except Exception:
-        # only a genuine read/deserialize failure marks the entry corrupt
-        try:
-            path.unlink(missing_ok=True)
-        except Exception:
-            pass
-        return None
-    try:
-        return _ClassicColumn(eu.column(jexpr))
-    except Exception:
-        # wrap failure is an ENVIRONMENT problem, not a corrupt entry: on a
-        # mixed-version deployment (pyspark 4.x modules over an older JVM)
-        # the _jvm attribute chain yields a silent JavaPackage and calling
-        # it throws here — never unlink for that (review r04b)
-        return None
-
-
-def _disk_cache_store(key: tuple, col: Column, struct_type: T.StructType) -> None:
-    try:
-        path = _disk_cache_path(key)
-        if path is None or path.is_file():
-            return
-        spark = _classic_jvm_session()
-        if spark is None:
-            return
-        # the unresolved expression is only reachable through a plan: project
-        # the Column over an empty frame of the bound schema and take the
-        # Alias child from the un-analyzed logical plan
-        df = spark.createDataFrame([], struct_type).select(col.alias("_c"))
-        jexpr = df._jdf.queryExecution().logical().expressions().apply(0).child()
-        data = bytes(spark._jvm.org.apache.spark.util.Utils.serialize(jexpr))
-        import os
-
-        if not path.parent.is_dir():
-            path.parent.mkdir(parents=True, exist_ok=True, mode=0o700)
-            try:
-                os.chmod(path.parent, 0o700)  # mkdir mode is masked by umask
-            except OSError:
-                pass
-        if _trusted_cache_dir() is None:
-            # PRE-EXISTING dir with wrong owner/permissions: don't seed it,
-            # and don't silently chmod-"repair" it — files planted before a
-            # repair would become loadable
-            return
-        tmp = path.with_suffix(f".tmp{id(col)}")
-        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        tmp.replace(path)  # atomic vs concurrent writers
-    except Exception:
-        return
-
-
-def _cached_compile(
-    key: Optional[tuple],
-    struct_type: T.StructType,
-    build: Callable[[], Column],
-    schema: Any = None,
-) -> Column:
-    """ONE memory→disk→build→store dance for every compiled-Column
-    producer (compile_ruleset, compile_fires, the variant binder) — three
-    hand-copies had already drifted on the eviction guard (review r04).
-
-    ``schema`` (the raw dict, when available) re-emits compile-time
-    DIAGNOSTICS on a disk hit: a cached tree skips the live build that
-    would have raised RegexDialectWarning, silently hiding dialect risk
-    from every later job (caught by test_regex_dialect_warning once the
-    disk cache landed). The warning walk is pure Python — no py4j."""
+def _cached_compile(key: Optional[tuple], build: Callable[[], Column]) -> Column:
+    """The one lookup → build → store path for every compiled-Column
+    producer (compile_ruleset, compile_fires, the variant binder)."""
     if key is not None:
         cached = _COMPILE_CACHE.get(key)
         if cached is not None:
             return cached
-        disk = _disk_cache_load(key)
-        if disk is not None:
-            if len(_COMPILE_CACHE) >= _COMPILE_CACHE_MAX:
-                _COMPILE_CACHE.clear()
-            _COMPILE_CACHE[key] = disk
-            if schema is not None:
-                _emit_dialect_warnings(schema)
-            return disk
     col = build()
     if key is not None:
         if len(_COMPILE_CACHE) >= _COMPILE_CACHE_MAX:
             _COMPILE_CACHE.clear()
         _COMPILE_CACHE[key] = col
-        _disk_cache_store(key, col, struct_type)
     return col
-
-
-def _emit_dialect_warnings(schema: Any) -> None:
-    """Walk a raw schema dict and run the regex dialect gate over every
-    pattern-bearing keyword (pattern, patternProperties keys) — the same
-    warnings a live build emits, re-raised on cache hits. Best-effort:
-    diagnostics must never fail a compile."""
-    try:
-        from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
-
-        def check(pat: str, kw: Optional[str] = None) -> None:
-            # per-pattern guard: one bad pattern must not truncate the
-            # remaining warnings (ADVICE r04) — and a raise here would be
-            # a false positive anyway (the live build that produced this
-            # cache entry compiled cleanly)
-            try:
-                if kw is None:
-                    checked_java_pattern(pat)
-                else:
-                    checked_java_pattern(pat, kw)
-            except Exception:
-                pass
-
-        # keys whose VALUES are data, not schema: a 'pattern' key inside a
-        # const/enum/default/examples literal is not a regex (ADVICE r04).
-        # Context matters (review r05): the skip applies only where the
-        # containing dict IS a schema — the keys of properties/
-        # patternProperties/$defs/definitions are arbitrary NAMES (a
-        # property legitimately called "default" holds a subschema), so
-        # those values walk as schemas without the key filter.
-        _DATA_KEYS = ("const", "enum", "default", "examples")
-        _NAME_MAPS = ("properties", "patternProperties", "$defs", "definitions")
-
-        def walk(node: Any) -> None:
-            if isinstance(node, dict):
-                pat = node.get("pattern")
-                if isinstance(pat, str):
-                    check(pat)
-                pp = node.get("patternProperties")
-                if isinstance(pp, dict):
-                    for p in pp:
-                        if isinstance(p, str):
-                            check(p, "patternProperties")
-                for k, v in node.items():
-                    if k in _NAME_MAPS and isinstance(v, dict):
-                        for sub in v.values():
-                            walk(sub)
-                    elif k not in _DATA_KEYS:
-                        walk(v)
-            elif isinstance(node, list):
-                for v in node:
-                    walk(v)
-
-        walk(schema)
-    except Exception:
-        return
 
 
 def _compile_cache_key(schema: Any, struct_type: T.StructType, mode: str) -> Optional[tuple]:
@@ -1473,7 +1199,7 @@ def compile_ruleset(
             0,
         )
 
-    return _cached_compile(key, struct_type, build, schema=schema)
+    return _cached_compile(key, build)
 
 
 def compile_fires(
@@ -1492,7 +1218,7 @@ def compile_fires(
             return bound.fires(root)
         return F.get(F.transform(F.array(root), lambda row: bound.fires(row)), 0)
 
-    return _cached_compile(key, struct_type, build, schema=schema)
+    return _cached_compile(key, build)
 
 
 def _is_plain_relation(df: DataFrame) -> bool:

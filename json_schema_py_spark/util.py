@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,18 +43,14 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
 # ``collapse="auto"|True|False`` escape hatch so production jobs with
 # known-unique corpora skip the probe scan entirely.
 
-_COLLAPSE_MAX_RATIO = float(os.environ.get("JSPS_COLLAPSE_MAX_RATIO", "0.5"))
+_COLLAPSE_MAX_RATIO = 0.5
 # cap chosen so the representative-ID set is ALWAYS genuinely
 # auto-broadcastable for the payload semi-join (2M bigints ≈ 16 MB raw,
 # well under the 64 MB session threshold even after HashedRelation
 # overhead) — the collapse path must never degrade to shuffling the
 # corpus payload, which the direct path never does
-_COLLAPSE_MAX_DISTINCT = int(
-    os.environ.get("JSPS_COLLAPSE_MAX_DISTINCT", str(2_000_000))
-)
-_COLLAPSE_BROADCAST_DISTINCT = int(
-    os.environ.get("JSPS_COLLAPSE_BROADCAST_DISTINCT", str(200_000))
-)
+_COLLAPSE_MAX_DISTINCT = 2_000_000
+_COLLAPSE_BROADCAST_DISTINCT = 200_000
 
 
 def duplication_probe(df: DataFrame, text_col: str) -> tuple[int, int]:
@@ -72,34 +66,33 @@ def collapse_mode(df: DataFrame, text_col: str, collapse="auto") -> str:
     """Decide whether per-distinct-text computation pays for itself, and
     how results re-attach to ids: "off" | "shuffle" | "broadcast".
 
-    True/False pin the answer without scanning (True → the scale-safe
-    shuffle-hash attach). "auto" runs ``duplication_probe`` and collapses
-    only when BOTH hold:
-      * distinct/total < JSPS_COLLAPSE_MAX_RATIO (default 0.5 — at least
-        2x average replication, so the saved work clearly exceeds the
-        probe + join-back overhead), and
-      * distinct count < JSPS_COLLAPSE_MAX_DISTINCT (default 2M — a
-        representative-id set small enough that the semi-join back to
-        the payload genuinely auto-broadcasts; beyond it the join back
-        would shuffle the corpus payload, which the direct path never
-        does).
+    A streaming frame is always "off", whatever is pinned: the probe
+    cannot run on a stream, and the collapsed plan fails streaming
+    analysis.
+    Otherwise True/False pin the answer without scanning (True → the
+    scale-safe shuffle-hash attach). "auto" runs ``duplication_probe`` and
+    collapses only when BOTH hold:
+      * distinct/total < 0.5 (at least 2x average replication, so the
+        saved work clearly exceeds the probe + join-back overhead), and
+      * distinct count < 2M (a representative-id set small enough that
+        the semi-join back to the payload genuinely auto-broadcasts;
+        beyond it the join back would shuffle the corpus payload, which
+        the direct path never does).
     The attach join is "broadcast" only when the PROBE proved the
-    per-text table tiny (< JSPS_COLLAPSE_BROADCAST_DISTINCT, default
-    200k — bounded by measurement, the DSIR ≤B-row precedent); otherwise
+    per-text table tiny (< 200k distinct texts — bounded by measurement,
+    the DSIR ≤B-row precedent); otherwise
     "shuffle" (shuffle-hash, which AQE still converts to broadcast from
     true runtime sizes when warranted). Without the hint the planner has
     no cardinality estimate for the post-semi-join rep subtree and has
     been observed to broadcast the CORPUS-SIZED id side instead (8.9s vs
     2.3s at 250k docs).
     """
-    if collapse is False:
+    if collapse is False or df.isStreaming:
         return "off"
     if collapse is True:
         return "shuffle"
     if collapse in ("off", "shuffle", "broadcast"):
         return collapse
-    if df.isStreaming:
-        return "off"
     n, d = duplication_probe(df, text_col)
     if not (n > 0 and d < _COLLAPSE_MAX_DISTINCT and d / n < _COLLAPSE_MAX_RATIO):
         return "off"

@@ -271,6 +271,27 @@ def test_corpus_index_collapse_identical_to_direct(spark):
     assert b_c.schema["bkey"].metadata["hash_impl"] == "md5"
 
 
+def test_corpus_index_collapse_keeps_null_text_rows(spark):
+    """The collapsed index equals the direct one on a corpus with NULL
+    texts: the exact tier keeps the (NULL fingerprint, min id) group in
+    every mode, and the band tier gives NULL texts no keys in any."""
+    from json_schema_py_spark.operators.incremental import corpus_index
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    nulls = spark.createDataFrame(
+        [(1_000_000_000, None), (1_000_000_001, None)], "doc_id long, text string"
+    )
+    corpus = docs.select("doc_id", "text").unionByName(nulls)
+    e_direct, b_direct = corpus_index(corpus, collapse=False)
+    assert e_direct.where("fingerprint IS NULL").collect()[0]["rep_id"] == 1_000_000_000
+    for mode in (True, "broadcast"):
+        e_c, b_c = corpus_index(corpus, collapse=mode)
+        assert e_c.exceptAll(e_direct).count() == 0
+        assert e_direct.exceptAll(e_c).count() == 0
+        assert b_c.exceptAll(b_direct).count() == 0
+        assert b_direct.exceptAll(b_c).count() == 0
+
+
 def test_incremental_dedup_null_text_rows_still_verdict_new(spark):
     """NULL-text batch docs must keep flowing to the 'new' verdict (they
     can never be exact or near dups) through the per-text collapse."""

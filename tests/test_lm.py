@@ -172,3 +172,44 @@ def test_lm_collapse_identical_to_direct(spark):
         a = s_d.select("doc_id", "n_bigrams", F.round("perplexity", 6).alias("p"))
         b = s_c.select("doc_id", "n_bigrams", F.round("perplexity", 6).alias("p"))
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_streaming_inputs_never_collapse(spark, tmp_path):
+    """A streaming frame can neither run the duplication probe nor carry
+    the collapsed plan, so collapse_mode answers "off" for it whatever
+    the caller pinned, and a pinned collapse still builds a stream."""
+    from json_schema_py_spark.operators.keywords import tfidf_top_terms
+    from json_schema_py_spark.util import collapse_mode
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    stream = spark.readStream.schema(docs.schema).parquet(f"{SF}/documents.parquet")
+    for pinned in (True, "shuffle", "broadcast", "auto"):
+        assert collapse_mode(stream, "text", pinned) == "off", pinned
+    assert tfidf_top_terms(stream, collapse=True).isStreaming
+
+
+def test_collapse_builders_run_no_job_before_an_action(spark):
+    """Building tf-idf or the bigram LM with collapse pinned on submits no
+    Spark job (the per-text table is persisted lazily, not checkpointed
+    eagerly), and the collapsed outputs equal the direct ones."""
+    from json_schema_py_spark.operators.keywords import tfidf_top_terms
+    from json_schema_py_spark.operators.lm import train_bigram_lm
+
+    sc = spark.sparkContext
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sc._jsc.sc().statusStore().jobsList(None).size()
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    try:
+        before = jobs()
+        t_c = tfidf_top_terms(docs, k=3, collapse=True)
+        lm_c = train_bigram_lm(docs, vocab_size=100, collapse=True)
+        assert jobs() == before
+        t_d = tfidf_top_terms(docs, k=3, collapse=False)
+        lm_d = train_bigram_lm(docs, vocab_size=100, collapse=False)
+        for a, b in ((t_c, t_d),) + tuple(zip(lm_c, lm_d)):
+            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    finally:
+        spark.catalog.clearCache()

@@ -316,178 +316,53 @@ print("OK")
     assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-2000:]
 
 
-def test_disk_compile_cache_across_processes(tmp_path):
-    """Round-4 (VERDICT r03 item 3): the disk-persisted compile cache. A
-    spark-submit job previously paid the ~1.3s py4j expression build once
-    per JOB; now process A serializes the unresolved catalyst tree and
-    process B restores it with ONE py4j deserialize call. Process B proves
-    it never live-builds (RuleBinder.bind is replaced with a bomb) and the
-    restored tree produces identical violations."""
+def test_compile_cache_is_in_process_only(tmp_path):
+    """Compiled Columns are cached in the process and nowhere else: a
+    second compile of a static ruleset and of a validate_json_variant
+    ruleset reuses the first build's Column, the cached Columns still
+    produce the right violations, and nothing is written to disk (HOME
+    points at an empty dir, the default location of any user cache)."""
+    import os
     import subprocess
     import sys
 
-    code_a = """
-from json_schema_py_spark.session import get_spark
-from pyspark.sql import types as T
-import pyspark.sql.functions as F
-from json_schema_py_spark.schema.compiler import compile_ruleset
-s = get_spark(cpus=2, app_name="diskcache-a")
-st = T.StructType([T.StructField("a", T.LongType()), T.StructField("s", T.StringType())])
-schema = {"properties": {"a": {"minimum": 5}, "s": {"minLength": 2, "pattern": "^x"}},
-          "required": ["a"]}
-c = compile_ruleset(schema, st)
-df = s.createDataFrame([(1, "xy"), (9, "q"), (None, None)], "a long, s string")
-rows = df.select(F.transform(c, lambda v: v["rule_id"]).alias("r")).collect()
-print("A:", [r["r"] for r in rows])
-"""
-    code_b = """
+    code = """
 from json_schema_py_spark.session import get_spark
 from pyspark.sql import types as T
 import pyspark.sql.functions as F
 import json_schema_py_spark.schema.compiler as C
-s = get_spark(cpus=2, app_name="diskcache-b")
-def boom(*a, **k): raise AssertionError("live build in process B")
-C.RuleBinder.bind = boom
+from json_schema_py_spark.plans.json_variant import validate_json_variant
+s = get_spark(cpus=2, app_name="cache-in-process")
 st = T.StructType([T.StructField("a", T.LongType()), T.StructField("s", T.StringType())])
 schema = {"properties": {"a": {"minimum": 5}, "s": {"minLength": 2, "pattern": "^x"}},
           "required": ["a"]}
 c = C.compile_ruleset(schema, st)
+assert C.compile_ruleset(schema, st) is c
 df = s.createDataFrame([(1, "xy"), (9, "q"), (None, None)], "a long, s string")
 rows = df.select(F.transform(c, lambda v: v["rule_id"]).alias("r")).collect()
-print("B:", [r["r"] for r in rows])
+print("S:", [r["r"] for r in rows])
+jdf = s.createDataFrame([(1, '{"a": 1}'), (2, '{"a": 9}'), (3, '{}')], "doc_id long, j string")
+import json_schema_py_spark.plans.json_variant as JV
+n = len(C._COMPILE_CACHE)
+v1 = validate_json_variant(jdf, "j", schema).collect()
+assert len(C._COMPILE_CACHE) == n + 1
+def boom(*a, **k): raise AssertionError("second variant compile rebuilt")
+JV.VariantBinder.bind = boom
+v2 = validate_json_variant(jdf, "j", schema).collect()
+assert len(C._COMPILE_CACHE) == n + 1 and v1 == v2
+print("V:", sorted((r["doc_id"], r["rule_id"], r["path"]) for r in v2))
 """
-    import os
-
-    env = dict(os.environ, SPARK_SCHEMA_COMPILE_CACHE=str(tmp_path / "cc"))
-    outs = []
-    for code in (code_a, code_b):
-        out = subprocess.run(
-            [sys.executable, "-c", code],
-            capture_output=True, text=True, timeout=300, env=env,
-        )
-        assert out.returncode == 0, out.stderr[-3000:]
-        outs.append(out.stdout)
+    env = dict(os.environ, HOME=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
     expect = "[['NUMBER_TOO_SMALL'], ['STRING_TOO_SHORT', 'PATTERN_MISMATCH'], ['REQUIRED_PROPERTY_MISSING']]"
-    assert f"A: {expect}" in outs[0], outs[0]
-    assert f"B: {expect}" in outs[1], outs[1]
-    # exactly one cache entry was written, and B added none
-    files = list((tmp_path / "cc").glob("*.expr"))
-    assert len(files) == 1, files
-
-
-def test_disk_compile_cache_disabled_and_corrupt_entry(tmp_path, monkeypatch):
-    """Cache robustness: SPARK_SCHEMA_COMPILE_CACHE=off disables all disk
-    I/O; a corrupt entry is deleted and falls back to a live build."""
-    import json_schema_py_spark.schema.compiler as C
-    from pyspark.sql import types as T
-
-    st = T.StructType([T.StructField("z", T.LongType())])
-    schema = {"properties": {"z": {"maximum": 3}}}
-
-    monkeypatch.setenv("SPARK_SCHEMA_COMPILE_CACHE", "off")
-    assert C._disk_cache_dir() is None
-    assert C._disk_cache_path(("k",)) is None
-
-    cc = tmp_path / "cc2"
-    monkeypatch.setenv("SPARK_SCHEMA_COMPILE_CACHE", str(cc))
-    key = C._compile_cache_key(schema, st, "viol:False:bindTrue")
-    path = C._disk_cache_path(key)
-    path.parent.mkdir(parents=True)
-    path.write_bytes(b"not a java object stream")
-    C._COMPILE_CACHE.pop(key, None)
-    col = C.compile_ruleset(schema, st)  # falls back to live build
-    assert col is not None
-    assert not path.exists() or path.stat().st_size > 100  # corrupt removed (rewritten by store)
-
-
-def test_disk_cache_refuses_untrusted_dir_and_sets_modes(tmp_path, monkeypatch, spark):
-    """ADVICE r04: cache entries are Java-deserialized, so the disk cache
-    (a) creates its dir 0700 / files 0600, (b) refuses to load from or
-    seed a group/other-writable dir, and (c) disables itself entirely
-    when the engine source is unreadable (zip/egg deployment) instead of
-    keying entries on a version-blind filename hash."""
-    import os
-
-    import json_schema_py_spark.schema.compiler as C
-    from pyspark.sql import types as T
-
-    st = T.StructType([T.StructField("q", T.LongType())])
-    schema = {"properties": {"q": {"minimum": 0}}}
-    key = C._compile_cache_key(schema, st, "viol:False:bindTrue")
-
-    # (a) fresh dir: store creates it 0700, entry file 0600
-    cc = tmp_path / "secure"
-    monkeypatch.setenv("SPARK_SCHEMA_COMPILE_CACHE", str(cc))
-    C._COMPILE_CACHE.pop(key, None)
-    C.compile_ruleset(schema, st)
-    files = list(cc.glob("*.expr"))
-    assert files, "store should have written an entry"
-    assert (cc.stat().st_mode & 0o777) == 0o700
-    assert (files[0].stat().st_mode & 0o777) == 0o600
-
-    # (b) world-writable dir: load refuses, store refuses to add entries
-    os.chmod(cc, 0o777)
-    assert C._trusted_cache_dir() is None
-    assert C._disk_cache_load(key) is None
-    key2 = C._compile_cache_key({"properties": {"q": {"minimum": 7}}}, st, "viol:False:bindTrue")
-    C._COMPILE_CACHE.pop(key2, None)
-    C.compile_ruleset({"properties": {"q": {"minimum": 7}}}, st)
-    assert len(list(cc.glob("*.expr"))) == 1  # nothing new seeded
-    os.chmod(cc, 0o700)
-    assert C._trusted_cache_dir() is not None
-
-    # (c) unreadable engine source -> no disk keying at all
-    monkeypatch.setattr(C, "_ENGINE_SOURCE_HASH", "")
-    assert C._engine_source_hash() is None
-    assert C._disk_cache_path(key) is None
-
-
-def test_dialect_warnings_skip_data_positions():
-    """ADVICE r04: the cache-hit warning walk flags 'pattern' only in
-    SCHEMA positions — a pattern-shaped key inside const/enum/default
-    literal values is data, not a regex; and one bad pattern never
-    truncates the remaining warnings."""
-    import warnings
-
-    import json_schema_py_spark.schema.compiler as C
-    from json_schema_py_spark.schema.regex_dialect import RegexDialectWarning
-
-    data_only = {
-        "properties": {
-            "a": {"const": {"pattern": "(?P<x>a)"}},
-            "b": {"enum": [{"pattern": "(?P<x>a)"}]},
-            "c": {"default": {"pattern": "(?P<x>a)"}},
-        }
-    }
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        C._emit_dialect_warnings(data_only)
-    assert not any(issubclass(x.category, RegexDialectWarning) for x in w)
-
-    mixed = {
-        "properties": {
-            # invalid-in-both-dialects pattern first: must not swallow the
-            # warning for the next property
-            "a": {"pattern": "("},
-            "b": {"pattern": "(?P<x>a)"},
-        }
-    }
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        C._emit_dialect_warnings(mixed)
-    assert any(issubclass(x.category, RegexDialectWarning) for x in w)
-
-    # review r05: a PROPERTY literally named 'default'/'enum' holds a
-    # subschema — its patterns must still warn (the data-key skip applies
-    # only in schema positions, and properties/$defs keys are names)
-    named = {
-        "properties": {"default": {"pattern": "(?P<x>a)"}},
-        "$defs": {"enum": {"pattern": "(?P<y>b)"}},
-    }
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        C._emit_dialect_warnings(named)
-    assert sum(issubclass(x.category, RegexDialectWarning) for x in w) >= 2
+    assert f"S: {expect}" in out.stdout, out.stdout
+    expect_v = "[(1, 'NUMBER_TOO_SMALL', '/a'), (3, 'REQUIRED_PROPERTY_MISSING', '/a')]"
+    assert f"V: {expect_v}" in out.stdout, out.stdout
+    assert list(tmp_path.iterdir()) == [], list(tmp_path.rglob("*"))
 
 
 def _with_auto_broadcast_off(spark):
