@@ -23,9 +23,9 @@ Scale shape (100 TB doctrine):
   - score: explode tokens -> join weights on token. The weights table is
     the training-set vocabulary — seed sets are small by construction
     (curated exemplars), so Spark's size threshold auto-broadcasts it;
-    the hint is NEVER forced (round-5 VERDICT item 2: at web scale a
-    vocabulary table can reach 10^8-10^9 rows and a forced broadcast
-    OOMs). Per-doc sum is one map-side-combinable groupBy.
+    the hint is NEVER forced (at web scale a vocabulary table can reach
+    10^8-10^9 rows and a forced broadcast OOMs). Per-doc sum is one
+    map-side-combinable groupBy.
   - everything stays in whole-stage codegen: no Python UDFs.
 
 Integer counts -> ln arithmetic -> round(6): deterministic, exactly
@@ -42,12 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from json_schema_py_spark.functions.text import tokens
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    collapse_representatives,
-    ensure_parallelism,
-)
+from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
 
 
 def train_nb_classifier(
@@ -74,23 +69,15 @@ def train_nb_classifier(
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
     base = ensure_parallelism(docs)
-    if collapse_mode(base, text_col, collapse) != "off":
-        # round-7 duplicate collapse: tokenize once per distinct
-        # (text, label) pair, count with multiplicity weights — the
-        # groupBy collapses replicas map-side before any shuffle
-        src = base.groupBy(
-            F.col(text_col).alias("_t"), F.col(label_col).cast("int").alias("_lbl")
-        ).agg(F.count(F.lit(1)).alias("_w"))
-        toks_w = src.select(
-            "_lbl", "_w", F.explode_outer(tokens(F.col("_t"))).alias("token")
-        ).where(F.col("token").isNotNull())
-        by_class = toks_w.groupBy("_lbl", "token").agg(F.sum("_w").alias("_c"))
-    else:
-        toks = base.select(
-            F.col(label_col).cast("int").alias("_lbl"),
-            F.explode(tokens(F.col(text_col))).alias("token"),
-        )
-        by_class = toks.groupBy("_lbl", "token").agg(F.count(F.lit(1)).alias("_c"))
+    mode = collapse_mode(base, text_col, collapse)
+    # a unit is one (text, label) pair: the same text may carry both labels
+    units, _ = text_units(base, text_col, id_col, mode, by=(label_col,))
+    toks = units.select(
+        F.col(label_col).cast("int").alias("_lbl"),
+        "_w",
+        F.explode_outer(tokens(F.col("_t"))).alias("token"),
+    ).where(F.col("token").isNotNull())
+    by_class = toks.groupBy("_lbl", "token").agg(F.sum("_w").alias("_c"))
     counts = by_class.groupBy("token").agg(
         F.sum(F.when(F.col("_lbl") == 1, F.col("_c")).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("_lbl") == 0, F.col("_c")).otherwise(0)).alias("c0"),
@@ -136,57 +123,27 @@ def score_quality(
     twice counts twice, the multinomial convention). ``matched`` counts
     occurrences found in the training vocabulary; tokens outside it
     contribute 0 (the standard open-vocabulary fallback). Documents with
-    zero tokens score exactly ``bias``.
-
-    ``collapse`` (round-7): the score is a pure function of (text,
-    model) — duplicate-heavy corpora score once per DISTINCT text and
-    fan back out to ids by raw-md5 (util.collapse_mode)."""
+    zero tokens score exactly ``bias``. Scored once per text unit
+    (util.text_units), so duplicate texts are scored once."""
     base = ensure_parallelism(docs)
     mode = collapse_mode(base, text_col, collapse)
-    if mode != "off":
-        ids, rep_rows = collapse_representatives(base, text_col, id_col)
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
-        )
-        toks = src.select(
-            "_rfp", F.explode_outer(tokens(F.col("_t"))).alias("token")
-        ).where(F.col("token").isNotNull())
-        scored = toks.join(weights.select("token", "weight"), "token", "left")
-        agg = scored.groupBy("_rfp").agg(
+    units, attach = text_units(base, text_col, id_col, mode)
+    # explode_outer keeps zero-token units as one NULL-token row, so every
+    # unit reaches the groupBy (n_tokens 0, score = bias). weights is
+    # training-vocab-bounded: auto-broadcast when small, a plain shuffle
+    # join at scale — never a forced hint
+    toks = units.select("_k", F.explode_outer(tokens(F.col("_t"))).alias("token"))
+    per_unit = (
+        toks.join(weights.select("token", "weight"), "token", "left")
+        .groupBy("_k")
+        .agg(
             F.count(F.col("token")).alias("n_tokens"),
             F.count(F.col("weight")).alias("matched"),
             F.coalesce(F.sum("weight"), F.lit(0.0)).alias("_w_sum"),
         )
-        # LEFT attach + coalesce: zero-token and NULL-text docs score
-        # exactly bias with 0 counts, as on the direct path
-        per_text = src.select("_rfp").join(agg, "_rfp", "left")
-        return (
-            attach_per_text(ids, per_text, mode, how="left")
-            .crossJoin(F.broadcast(bias))
-            .select(
-                F.col("id").alias("doc_id"),
-                F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-                F.coalesce("matched", F.lit(0)).alias("matched"),
-                F.round(
-                    F.coalesce(F.col("_w_sum"), F.lit(0.0)) + F.col("bias"),
-                    round_to,
-                ).alias("score"),
-            )
-        )
-    toks = base.select(
+    )
+    return attach(per_unit).crossJoin(F.broadcast(bias)).select(
         F.col(id_col).alias("doc_id"),
-        F.explode_outer(tokens(F.col(text_col))).alias("token"),
-    )
-    # weights is training-vocab-bounded: auto-broadcast when small, a
-    # plain shuffle join at scale — never a forced hint
-    scored = toks.join(weights.select("token", "weight"), "token", "left")
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.col("token")).alias("n_tokens"),
-        F.count(F.col("weight")).alias("matched"),
-        F.coalesce(F.sum("weight"), F.lit(0.0)).alias("_w_sum"),
-    )
-    return per_doc.crossJoin(F.broadcast(bias)).select(
-        "doc_id",
         "n_tokens",
         "matched",
         F.round(F.col("_w_sum") + F.col("bias"), round_to).alias("score"),

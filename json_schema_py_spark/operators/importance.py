@@ -57,11 +57,7 @@ from json_schema_py_spark.functions.text import (
     stable_hash64,
     tokens,
 )
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    collapse_representatives,
-)
+from json_schema_py_spark.util import collapse_mode, text_units
 
 _HASH_SPACE = 1 << 60  # stable_hash64 is a 60-bit value (15 hex chars)
 
@@ -91,31 +87,19 @@ def hashed_ngram_profile(
 ) -> DataFrame:
     """Bag-of-hashed-n-grams distribution of a corpus: (bucket, cnt),
     at most ``n_buckets`` rows at ANY corpus size. One explode + one
-    map-side-combinable groupBy.
-
-    ``collapse`` (round-7, util.collapse_mode): on a duplicate-heavy
-    corpus features are extracted once per DISTINCT text and counted
-    with multiplicity weights (groupBy(text) collapses replicas map-side
-    before any shuffle) — integer-identical counts, 1/dup-factor the
-    tokenize+hash work."""
+    map-side-combinable groupBy over text units (util.text_units), each
+    feature counted with its unit's weight: a duplicate-heavy corpus is
+    featurized once per distinct text, with integer-identical counts."""
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    if collapse_mode(df, text_col, collapse) != "off":
-        src = df.groupBy(F.col(text_col).alias("_t")).agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        feats = src.select(
-            "_w", F.explode_outer(dsir_features(F.col("_t"))).alias("feat")
-        ).where(F.col("feat").isNotNull())
-        return feats.groupBy(
-            _bucket(F.col("feat"), n_buckets, seed).alias("bucket")
-        ).agg(F.sum("_w").alias("cnt"))
-    feats = df.select(
-        F.explode(dsir_features(F.col(text_col))).alias("feat")
-    )
+    mode = collapse_mode(df, text_col, collapse)
+    units, _ = text_units(df, text_col, None, mode)
+    feats = units.select(
+        "_w", F.explode_outer(dsir_features(F.col("_t"))).alias("feat")
+    ).where(F.col("feat").isNotNull())
     return feats.groupBy(
         _bucket(F.col("feat"), n_buckets, seed).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
+    ).agg(F.sum("_w").alias("cnt"))
 
 
 def importance_weights(
@@ -138,11 +122,9 @@ def importance_weights(
     smoothing constant (lr=0 plus the n_feats term), which the left-join
     coalesce implements.
 
-    Round-7: ONE featurize pass — n_feats is counted in the same
-    exploded aggregation that sums the log-ratios (the r6 shape
-    evaluated dsir_features twice per doc, ADVICE r06), and on
-    duplicate-heavy corpora the whole weight is computed once per
-    DISTINCT text and fanned back out by raw-md5 (util.collapse_mode)."""
+    ONE featurize pass per text unit (util.text_units): n_feats is
+    counted in the same exploded aggregation that sums the log-ratios,
+    and a duplicate-heavy corpus is featurized once per distinct text."""
     # ≤ B rows by construction: forced broadcast is safe and intended.
     ratio = F.broadcast(
         target_profile.withColumnRenamed("cnt", "ct")
@@ -170,61 +152,31 @@ def importance_weights(
             ).alias("smooth_const")
         )
     )
-    def _agg(src: DataFrame, key: str) -> DataFrame:
-        """(key, _nf, s): feature count AND log-ratio sum from ONE
-        exploded pass (explode_outer so the filter cannot be inferred
-        and pushed below upstream joins)."""
-        return (
-            src.select(
-                key, F.explode_outer(dsir_features(F.col("_t"))).alias("feat")
-            )
-            .where(F.col("feat").isNotNull())
-            .select(key, _bucket(F.col("feat"), n_buckets, seed).alias("bucket"))
-            .join(ratio, "bucket", "left")
-            .groupBy(key)
-            .agg(
-                F.count(F.lit(1)).alias("_nf"),
-                F.sum(F.coalesce(F.col("lr"), F.lit(0.0))).alias("s"),
-            )
-        )
-
-    def _final(has_text, nf, s) -> list:
-        # n_feats: 0 for featureless docs, NULL for NULL text (the exact
-        # semantics of the r6 size(feats) formulation); log_w inherits
-        # the NULL through the n_feats term
-        n_feats = F.when(has_text, F.coalesce(nf, F.lit(0))).cast("long")
-        return [
-            n_feats.alias("n_feats"),
-            (
-                F.coalesce(s, F.lit(0.0)) + n_feats * F.col("smooth_const")
-            ).alias("log_w"),
-        ]
-
     mode = collapse_mode(df, text_col, collapse)
-    if mode != "off":
-        ids, rep_rows = collapse_representatives(df, text_col, id_col)
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
+    units, attach = text_units(df, text_col, id_col, mode)
+    # explode_outer keeps featureless units as one NULL-feature row (its
+    # NULL bucket matches no ratio), so every unit reaches the groupBy
+    per_unit = (
+        units.select(
+            "_k",
+            F.col("_t").isNotNull().alias("_has"),
+            F.explode_outer(dsir_features(F.col("_t"))).alias("feat"),
         )
-        per_text = src.select("_rfp").join(_agg(src, "_rfp"), "_rfp", "left")
-        return (
-            attach_per_text(ids, per_text, mode, how="left")
-            .crossJoin(const)
-            .select(
-                F.col("id").alias(id_col),
-                # _rfp is NULL only for NULL-text docs (they miss the
-                # per-text table entirely via the NULL-key join)
-                *_final(F.col("_rfp").isNotNull(), F.col("_nf"), F.col("s")),
-            )
+        .select("_k", "_has", _bucket(F.col("feat"), n_buckets, seed).alias("bucket"))
+        .join(ratio, "bucket", "left")
+        .groupBy("_k", "_has")
+        .agg(
+            F.count(F.col("bucket")).alias("_nf"),
+            F.sum(F.coalesce(F.col("lr"), F.lit(0.0))).alias("_s"),
         )
-    src = df.select(
-        F.col(id_col), F.col(text_col).alias("_t")
     )
-    return (
-        src.select(id_col, F.col("_t").isNotNull().alias("_has"))
-        .join(_agg(src, id_col), id_col, "left")
-        .crossJoin(const)
-        .select(id_col, *_final(F.col("_has"), F.col("_nf"), F.col("s")))
+    # n_feats: 0 for featureless docs, NULL for NULL text; log_w inherits
+    # the NULL through the n_feats term
+    n_feats = F.when(F.col("_has"), F.col("_nf")).cast("long")
+    return attach(per_unit).crossJoin(const).select(
+        id_col,
+        n_feats.alias("n_feats"),
+        (F.col("_s") + n_feats * F.col("smooth_const")).alias("log_w"),
     )
 
 

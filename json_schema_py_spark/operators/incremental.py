@@ -61,12 +61,7 @@ from pyspark.sql import functions as F
 
 from json_schema_py_spark.functions.text import text_fingerprint, word_shingles
 from json_schema_py_spark.operators.dedup import _band_keys, _jaccard
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    collapse_representatives,
-    ensure_parallelism,
-)
+from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
 
 
 def corpus_index(
@@ -85,74 +80,34 @@ def corpus_index(
 
     ``hash_impl``: 'md5' (default, the DuckDB-oracle-parity form) or
     'xxhash64' — the production build: 5.7x faster signatures at 2M docs
-    (BASELINE.md round-6), identical verdict semantics (verification is
+    (BASELINE.md), identical verdict semantics (verification is
     exact Jaccard, hash-free). The build parameters ride along as column
     metadata on ``bkey`` and incremental_dedup REFUSES a probe whose
     parameters disagree — a mismatched probe would silently find nothing
-    (the contamination CMS width/depth lesson, ADVICE r05).
+    (as a mismatched CMS width/depth would in operators/contamination.py).
 
-    ``collapse`` (round-7): signatures are pure functions of the text, so
-    on an exact-duplicate-heavy snapshot (the norm for crawl corpora; the
-    whole reason the exact tier exists) the band keys are computed once
-    per DISTINCT text and fanned back out to ids by raw-md5 — identical
-    rows, 1/dup-factor the hash work. "auto" (default) probes duplication
-    with one compact scan and collapses only when the representative set
-    is both small relative to the corpus AND small enough to broadcast
-    (util.should_collapse); True/False pin the choice without probing."""
+    ``collapse`` (util.collapse_mode): fingerprints and band keys are
+    pure functions of the text, so both tiers are computed once per text
+    unit (util.text_units) and fanned out to ids — on an exact-duplicate-
+    heavy snapshot, once per distinct text. "auto" (default) probes
+    duplication with one compact scan; True/False pin the choice without
+    probing."""
     base = ensure_parallelism(corpus)
-
-    def _keys(c):
-        return _band_keys(
-            word_shingles(c, shingle_k), num_hashes, bands, hash_impl=hash_impl
-        )
-
     mode = collapse_mode(base, text_col, collapse)
-    if mode != "off":
-        ids, rep_rows = collapse_representatives(base, text_col, id_col)
-        # exact tier collapses too: the normalized fingerprint is a pure
-        # function of the text, so normalize+md5 run once per distinct
-        # text and fan back out by raw-md5 before the same groupBy. The
-        # key is null-safe ("" is never an md5): NULL-text docs keep their
-        # (NULL fingerprint, min id) group, as on the direct path
-        rep_nfp = rep_rows.select(
-            F.coalesce(F.md5(F.col(text_col)), F.lit("")).alias("_rfp"),
-            text_fingerprint(F.col(text_col)).alias("fingerprint"),
-        )
-        exact = (
-            attach_per_text(
-                ids.withColumn("_rfp", F.coalesce("_rfp", F.lit(""))), rep_nfp, mode
-            )
-            .groupBy("fingerprint")
-            .agg(F.min("id").alias("rep_id"))
-        )
-        # posexplode BEFORE the join back: Generate's inferred pruning
-        # predicates (size(keys)>0, isnotnull) stay inside the small
-        # representative subtree — placed after the join they get pushed
-        # below the semi-join and re-evaluate the whole signature fold on
-        # every CORPUS row, which is the exact cost collapse exists to
-        # avoid (observed 17s vs 2s at 250k docs / 5k distinct texts)
-        rep_banded = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"),
-            F.posexplode(_keys(F.col(text_col))).alias("band", "bkey"),
-        )
-        # inner join on _rfp: docs with NULL text drop here exactly as
-        # they do from posexplode(NULL bkeys) on the direct path
-        exploded = attach_per_text(ids, rep_banded, mode).select(
-            "id", "band", "bkey"
-        )
-    else:
-        exact = (
-            base.select(
-                text_fingerprint(F.col(text_col)).alias("fingerprint"),
-                F.col(id_col).alias("id"),
-            )
-            .groupBy("fingerprint")
-            .agg(F.min("id").alias("rep_id"))
-        )
-        exploded = base.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(_keys(F.col(text_col))).alias("band", "bkey"),
-        )
+    units, attach = text_units(base, text_col, id_col, mode)
+    # every unit has a fingerprint (NULL for NULL text): the exact tier
+    # keeps the (NULL fingerprint, min id) group
+    fps = units.select("_k", text_fingerprint(F.col("_t")).alias("fingerprint"))
+    exact = attach(fps).groupBy("fingerprint").agg(F.min(id_col).alias("rep_id"))
+    # band keys are exploded per unit, before the attach join (after it,
+    # the signature fold would run once per doc). NULL-text units get no
+    # keys.
+    sh = word_shingles(F.col("_t"), shingle_k)
+    keys = _band_keys(sh, num_hashes, bands, hash_impl=hash_impl)
+    per_unit = units.select(
+        "_k", F.posexplode_outer(keys).alias("band", "bkey")
+    ).where(F.col("bkey").isNotNull())
+    exploded = attach(per_unit).select(F.col(id_col).alias("id"), "band", "bkey")
     banded = (
         exploded
         .withMetadata(
@@ -281,7 +236,7 @@ def incremental_dedup(
     aggregation PER BATCH — fine for one-shot use, wrong for a
     continuous probe loop.
 
-    Round-7 plan shape: the expensive per-text work (fingerprint,
+    Plan shape: the expensive per-text work (fingerprint,
     shingles, 16-hash band keys, exact Jaccard) is computed once per
     DISTINCT text / text pair and eagerly ``localCheckpoint``-ed. The
     checkpoints are all bounded by contract — the batch is small, the

@@ -12,7 +12,7 @@ table re-attaches to the tf frame with a plain shuffle join on term:
 its cardinality is the CORPUS VOCABULARY (Heaps' law: 10^8-10^9 terms
 at web scale), so it must never be force-broadcast — Spark's size
 threshold / AQE still auto-broadcasts it when a small corpus genuinely
-fits (round-5 VERDICT item 2).
+fits.
 
 Smoothed idf (sklearn's convention): idf(t) = ln((1+N)/(1+df(t))) + 1 —
 strictly positive, so a term in every document still ranks by tf.
@@ -21,16 +21,11 @@ Exactly DuckDB-oracle-able (gate query q_tfidf_terms).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from json_schema_py_spark.functions.text import tokens
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    ensure_parallelism,
-)
+from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
 
 
 def tfidf_top_terms(
@@ -47,70 +42,32 @@ def tfidf_top_terms(
     two runs always pick the same terms). Terms appearing in fewer than
     ``min_df`` documents are excluded BEFORE ranking (hapax noise).
 
-    ``collapse`` (round-7, util.collapse_mode): a document's top-k terms
-    are a pure function of (text, df table, N) — duplicate-heavy corpora
-    compute tf and the ranked top-k once per DISTINCT text (df counts
-    are multiplicity-weighted, integer-identical) and fan the k rows
-    back out to ids by raw-md5."""
+    Computed per text unit (util.text_units): tf and the ranked top-k
+    once per unit, df as the sum of unit weights, so a duplicate-heavy
+    corpus does the work once per distinct text."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if min_df < 1:
         raise ValueError(f"min_df must be >= 1, got {min_df}")
     # N folded into the plan as a broadcast 1-row aggregate — an eager
     # .count() would scan the corpus once at plan-build time and again in
-    # the real job (review r05)
+    # the real job
     n_row = F.broadcast(
         docs.agg(F.count_distinct(F.col(id_col)).cast("double").alias("_N"))
     )
     base = ensure_parallelism(docs)
     mode = collapse_mode(base, text_col, collapse)
-    if mode != "off":
-        # ONE compact groupBy yields BOTH the multiplicity table and the
-        # representative ids (the train_bigram_lm shape) — fusing the
-        # separate `mult` aggregation of the first draft removed one full
-        # md5 corpus scan. Persisted (lazily: building the plan runs no
-        # job): bounded at the distinct-text count, and both downstream
-        # consumers (the weighted df and the representative semi-join)
-        # read the materialized table instead of re-scanning the corpus.
-        ids = base.select(
-            F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("_rfp")
-        )
-        grp = (
-            ids.groupBy("_rfp")
-            .agg(F.count(F.lit(1)).alias("_w"), F.min("id").alias("_rid"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        mult = grp.select("_rfp", "_w")
-        rep_rows = base.join(
-            grp.select(F.col("_rid").alias(id_col)), id_col, "left_semi"
-        )
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
-        )
-        toks = src.select(
-            "_rfp", F.explode_outer(tokens(F.col("_t"))).alias("term")
-        ).where(F.col("term").isNotNull())
-        tf = toks.groupBy("_rfp", "term").agg(F.count(F.lit(1)).alias("tf"))
-        # df = docs containing the term = sum of text multiplicities
-        dfreq = (
-            tf.join(mult, "_rfp")
-            .groupBy("term")
-            .agg(F.sum("_w").alias("df"))
-            .where(F.col("df") >= min_df)
-        )
-        key = "_rfp"
-    else:
-        toks = base.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
-        )
-        tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-        dfreq = (
-            tf.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") >= min_df)
-        )
-        key = "doc_id"
+    units, attach = text_units(base, text_col, id_col, mode)
+    toks = units.select(
+        "_k", "_w", F.explode_outer(tokens(F.col("_t"))).alias("term")
+    ).where(F.col("term").isNotNull())
+    tf = toks.groupBy("_k", "_w", "term").agg(F.count(F.lit(1)).alias("tf"))
+    # df = docs containing the term = sum of the weights of units holding it
+    dfreq = (
+        tf.groupBy("term")
+        .agg(F.sum("_w").alias("df"))
+        .where(F.col("df") >= min_df)
+    )
     # dfreq is vocabulary-sized (unbounded at web scale): no broadcast
     # hint — the shuffle join on term is the right plan, and the size
     # threshold still auto-broadcasts genuinely small vocabularies
@@ -129,14 +86,12 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(key).orderBy(F.col("tfidf").desc(), F.col("term").asc())
+    w = Window.partitionBy("_k").orderBy(F.col("tfidf").desc(), F.col("term").asc())
     topk = (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(key, "term", "tf", "df", "tfidf", F.col("rank").cast("int").alias("rank"))
+        .select("_k", "term", "tf", "df", "tfidf", F.col("rank").cast("int").alias("rank"))
     )
-    if mode == "off":
-        return topk
-    return attach_per_text(ids, topk, mode).select(
-        F.col("id").alias("doc_id"), "term", "tf", "df", "tfidf", "rank"
+    return attach(topk).select(
+        F.col(id_col).alias("doc_id"), "term", "tf", "df", "tfidf", "rank"
     )

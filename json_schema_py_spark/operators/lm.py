@@ -7,7 +7,7 @@ per-token scoring join) while staying exactly DuckDB-oracle-able — the
 smoothing arithmetic is recomputed bit-for-bit by the gate query
 (q_lm_perplexity).
 
-Scale shape (round-7 rework):
+Scale shape:
 * ``train_bigram_lm`` — adjacent bigrams are built by ONE in-row zip of
   the token array (never a per-doc window, which costs a corpus-wide
   shuffle+sort of the exploded token stream); RAW pairs are counted
@@ -22,11 +22,11 @@ Scale shape (round-7 rework):
   on (w, w2) because its cardinality is observed-corpus-bigrams (up to
   V², multi-TB at web scale), with Spark's size threshold still
   auto-broadcasting genuinely small LMs — and one per-doc aggregation.
-* both operators collapse duplicate texts ("auto": util.collapse_mode):
-  counts are multiplicity-weighted over distinct texts and perplexity is
-  scored once per distinct text, then fanned back out to ids by raw-md5
-  — identical outputs, 1/dup-factor the tokenize/join work on the
-  replicated corpora crawl pipelines actually see.
+* both operators run one body over text units (util.text_units):
+  counts sum the unit weights and perplexity is scored once per unit,
+  so on a duplicate-heavy corpus (collapse mode from
+  util.collapse_mode) the tokenize/join work is done once per distinct
+  text with outputs identical to the per-doc form.
 
 Smoothing: add-k (Laplace for k=1):
     P(w2 | w1) = (c(w1,w2) + k) / (c(w1) + k·V)
@@ -38,17 +38,11 @@ decide their fate, never a silent drop).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from json_schema_py_spark.functions.text import tokens
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    collapse_representatives,
-    ensure_parallelism,
-)
+from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
 
 UNK = "<unk>"
 
@@ -107,51 +101,17 @@ def train_bigram_lm(
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
     base = ensure_parallelism(corpus)
     mode = collapse_mode(base, text_col, collapse)
-    if mode != "off":
-        # duplicate-heavy corpus: count once per distinct text, weighted
-        # by its multiplicity — integer-exact vs the per-doc counts.
-        # explode_outer + filter (not plain explode): a non-outer
-        # Generate's inferred size()>0 predicate would be pushed below
-        # the representative semi-join and re-tokenize the full corpus.
-        # ONE compact groupBy yields both the multiplicity table and the
-        # representative ids, persisted (lazily: building the plan runs
-        # no job; bounded at the distinct-text count): the three LM tables
-        # the caller materializes (vocab, unigrams, bigrams) each read
-        # this subtree, and without the persist every materialization
-        # paid two extra full-corpus md5 scans
-        ids = base.select(
-            F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("_rfp")
-        )
-        grp = (
-            ids.groupBy("_rfp")
-            .agg(F.count(F.lit(1)).alias("_w"), F.min("id").alias("_rid"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        rep_rows = base.join(
-            grp.select(F.col("_rid").alias(id_col)), id_col, "left_semi"
-        )
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
-        ).join(grp.select("_rfp", "_w"), "_rfp")
-        toks_w = src.select(
-            "_w", F.explode_outer(tokens(F.col("_t"))).alias("tok")
-        ).where(F.col("tok").isNotNull())
-        counts = toks_w.groupBy("tok").agg(F.sum("_w").alias("cnt"))
-        pair_w = src.select(
-            "_w", F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("_p")
-        ).where(F.col("_p").isNotNull())
-        big_raw = pair_w.groupBy(
-            F.col("_p.w1r").alias("w1r"), F.col("_p.w2r").alias("w2r")
-        ).agg(F.sum("_w").alias("cnt"))
-    else:
-        toks = base.select(F.explode(tokens(F.col(text_col))).alias("tok"))
-        counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-        pair_s = base.select(
-            F.explode(_adjacent_pairs(F.col(text_col))).alias("_p")
-        )
-        big_raw = pair_s.groupBy(
-            F.col("_p.w1r").alias("w1r"), F.col("_p.w2r").alias("w2r")
-        ).agg(F.count(F.lit(1)).alias("cnt"))
+    units, _ = text_units(base, text_col, id_col, mode)
+    toks = units.select(
+        "_w", F.explode_outer(tokens(F.col("_t"))).alias("tok")
+    ).where(F.col("tok").isNotNull())
+    counts = toks.groupBy("tok").agg(F.sum("_w").alias("cnt"))
+    pairs = units.select(
+        "_w", F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("_p")
+    ).where(F.col("_p").isNotNull())
+    big_raw = pairs.groupBy(
+        F.col("_p.w1r").alias("w1r"), F.col("_p.w2r").alias("w2r")
+    ).agg(F.sum("_w").alias("cnt"))
     # two-stage exact top-k (the _rank_topk shape): every count partition
     # keeps its LOCAL top vocab_size first, so the global rank sorts
     # ≤ partitions × vocab_size survivors — never the full distinct-token
@@ -172,7 +132,7 @@ def train_bigram_lm(
     )
     # unigrams DERIVED from the raw count table: in-vocab tokens keep
     # their count, everything else folds into one <unk> row — no second
-    # corpus pass (the r6 implementation re-tokenized the whole corpus)
+    # corpus pass
     v = vocab.select(F.col("w").alias("tok"), F.lit(True).alias("_in_v"))
     unigrams = (
         counts.join(F.broadcast(v), "tok", "left")
@@ -209,84 +169,55 @@ def score_perplexity(
     NULL scores (n_bigrams 0). The vocab and unigram tables broadcast
     (≤ V rows); the bigram table shuffle-joins (see module doc); the
     corpus-sized shuffles are that bigram join and the final per-doc
-    aggregation — the r6 per-doc lead() window (a full shuffle+sort of
-    the token stream) is gone, replaced by the in-row pair zip."""
+    aggregation; bigrams come from the in-row pair zip, never a per-doc
+    window over the token stream."""
     if k <= 0:
         raise ValueError(f"smoothing k must be > 0, got {k}")
     base = ensure_parallelism(docs)
     # V = unigram TYPE count (incl. <unk>), folded into the plan as a
-    # broadcast 1-row aggregate — an eager .count() here re-executed the
-    # whole train lineage (full corpus tokenize + vocab + groupBy) once
-    # at plan-build time and again inside the scoring job (review r05)
+    # broadcast 1-row aggregate: an eager .count() would re-execute the
+    # whole train lineage at plan-build time and again in the scoring job
     v_row = F.broadcast(unigrams.agg(F.count(F.lit(1)).cast("double").alias("_V")))
     uni = unigrams.select(F.col("w").alias("w"), F.col("cnt").alias("_c1"))
     bi = bigrams.select(F.col("w1").alias("w"), F.col("w2"), F.col("cnt").alias("_c2"))
 
-    def _scored(src: DataFrame, key: str) -> DataFrame:
-        """(key, n_bigrams, _sum_lp) per source row key."""
-        pairs = (
-            src.select(
-                key, F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("_p")
-            )
-            .where(F.col("_p").isNotNull())
-            .select(key, F.col("_p.w1r").alias("w1r"), F.col("_p.w2r").alias("w2r"))
-        )
-        mapped = _map_oov(_map_oov(pairs, vocab, "w1r", "w"), vocab, "w2r", "w2")
-        # uni broadcasts (truly bounded by the capped vocab: ≤ V rows);
-        # the BIGRAM table is bounded by observed corpus bigrams — up to
-        # V² rows (2.5×10^9 at V=50k), multi-TB on a web corpus — so it
-        # must NEVER be force-broadcast: a plain shuffle join on (w, w2)
-        # with AQE is the right plan, and Spark's size threshold still
-        # auto-broadcasts it when a small LM genuinely fits (r5 VERDICT)
-        scored = (
-            mapped.join(bi, ["w", "w2"], "left")
-            .join(F.broadcast(uni), "w", "left")
-            .crossJoin(v_row)
-            .select(
-                key,
-                (
-                    F.log(
-                        (F.coalesce(F.col("_c2"), F.lit(0)) + F.lit(k))
-                        / (
-                            F.coalesce(F.col("_c1"), F.lit(0))
-                            + F.lit(k) * F.col("_V")
-                        )
-                    )
-                ).alias("_lp"),
-            )
-        )
-        return scored.groupBy(key).agg(
-            F.count(F.lit(1)).alias("n_bigrams"), F.sum("_lp").alias("_sum_lp")
-        )
-
-    def _final(nb: Column, s: Column) -> list[Column]:
-        n = F.coalesce(nb, F.lit(0)).cast("long")
-        return [
-            n.alias("n_bigrams"),
-            F.round(s / n, round_to).alias("avg_logp"),
-            F.round(F.exp(-s / n), round_to).alias("perplexity"),
-        ]
-
     mode = collapse_mode(base, text_col, collapse)
-    if mode != "off":
-        # perplexity is a pure function of (text, LM): score once per
-        # distinct text, fan back out by raw-md5 (LEFT attach: NULL-text
-        # docs keep their n_bigrams=0 row — zero row loss)
-        ids, rep_rows = collapse_representatives(base, text_col, id_col)
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
-        )
-        per_text = src.select("_rfp").join(_scored(src, "_rfp"), "_rfp", "left")
-        return attach_per_text(ids, per_text, mode, how="left").select(
-            F.col("id").alias("doc_id"),
-            *_final(F.col("n_bigrams"), F.col("_sum_lp")),
-        )
-    src = base.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
+    units, attach = text_units(base, text_col, id_col, mode)
+    pairs = (
+        units.select("_k", F.explode_outer(_adjacent_pairs(F.col("_t"))).alias("_p"))
+        .where(F.col("_p").isNotNull())
+        .select("_k", F.col("_p.w1r").alias("w1r"), F.col("_p.w2r").alias("w2r"))
     )
-    agg = _scored(src, "doc_id")
-    return (
-        docs.select(F.col(id_col).alias("doc_id"))
-        .join(agg, "doc_id", "left")
-        .select("doc_id", *_final(F.col("n_bigrams"), F.col("_sum_lp")))
+    mapped = _map_oov(_map_oov(pairs, vocab, "w1r", "w"), vocab, "w2r", "w2")
+    # uni broadcasts (truly bounded by the capped vocab: ≤ V rows);
+    # the BIGRAM table is bounded by observed corpus bigrams — up to
+    # V² rows (2.5×10^9 at V=50k), multi-TB on a web corpus — so it
+    # must NEVER be force-broadcast: a plain shuffle join on (w, w2)
+    # with AQE is the right plan, and Spark's size threshold still
+    # auto-broadcasts it when a small LM genuinely fits
+    scored = (
+        mapped.join(bi, ["w", "w2"], "left")
+        .join(F.broadcast(uni), "w", "left")
+        .crossJoin(v_row)
+        .select(
+            "_k",
+            (
+                F.log(
+                    (F.coalesce(F.col("_c2"), F.lit(0)) + F.lit(k))
+                    / (F.coalesce(F.col("_c1"), F.lit(0)) + F.lit(k) * F.col("_V"))
+                )
+            ).alias("_lp"),
+        )
+        .groupBy("_k")
+        .agg(F.count(F.lit(1)).alias("n_bigrams"), F.sum("_lp").alias("_s"))
+    )
+    # units with < 2 tokens have no pairs: the left join keeps them with
+    # n_bigrams 0 and NULL scores
+    per_unit = units.select("_k").join(scored, "_k", "left")
+    n = F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long")
+    return attach(per_unit).select(
+        F.col(id_col).alias("doc_id"),
+        n.alias("n_bigrams"),
+        F.round(F.col("_s") / n, round_to).alias("avg_logp"),
+        F.round(F.exp(-F.col("_s") / n), round_to).alias("perplexity"),
     )

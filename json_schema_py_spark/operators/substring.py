@@ -46,12 +46,7 @@ from json_schema_py_spark.functions.text import (
     positional_shingles_of_tokens,
     tokens,
 )
-from json_schema_py_spark.util import (
-    attach_per_text,
-    collapse_mode,
-    collapse_representatives,
-    ensure_parallelism,
-)
+from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
 
 
 def _positional(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
@@ -78,35 +73,23 @@ def hot_ngrams(
     """(ngram, cnt) — k-token shingles occurring >= ``min_count`` times
     corpus-wide. Counts OCCURRENCES, not documents: a passage repeated
     five times inside one document is exactly the self-repetition the
-    substring tier exists to strip.
-
-    ``collapse`` (round-7, util.collapse_mode): duplicate-heavy corpora
-    shingle once per DISTINCT text and count with multiplicity weights
-    (groupBy(text) collapses replicas map-side before any shuffle) —
-    integer-identical counts."""
+    substring tier exists to strip. Shingles are counted per text unit
+    (util.text_units) with the unit's weight: a duplicate-heavy corpus
+    is shingled once per distinct text, with integer-identical counts."""
     if min_count < 2:
         raise ValueError(f"min_count must be >= 2, got {min_count}")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if collapse_mode(docs, text_col, collapse) != "off":
-        src = docs.groupBy(F.col(text_col).alias("_t")).agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        occ = src.select(
-            "_w",
-            F.explode_outer(
-                positional_shingles_of_tokens(tokens(F.col("_t")), k)
-            ).alias("ngram"),
-        ).where(F.col("ngram").isNotNull())
-        return (
-            occ.groupBy("ngram")
-            .agg(F.sum("_w").alias("cnt"))
-            .where(F.col("cnt") >= min_count)
-        )
+    base = ensure_parallelism(docs)
+    mode = collapse_mode(docs, text_col, collapse)
+    units, _ = text_units(base, text_col, id_col, mode)
+    shingles = positional_shingles_of_tokens(tokens(F.col("_t")), k)
+    occ = units.select("_w", F.explode_outer(shingles).alias("ngram")).where(
+        F.col("ngram").isNotNull()
+    )
     return (
-        _positional(docs, text_col, id_col, k)
-        .groupBy("ngram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        occ.groupBy("ngram")
+        .agg(F.sum("_w").alias("cnt"))
         .where(F.col("cnt") >= min_count)
     )
 
@@ -133,49 +116,6 @@ def duplicate_ngram_spans(
     )
 
 
-def _strip_by_key(src: DataFrame, hot: DataFrame, k: int, key: str) -> DataFrame:
-    """(key, clean_text, n_tokens, n_removed) over a (key, _t) frame —
-    the strip pipeline body, shared by the direct and collapsed paths.
-    explode_outer everywhere a generator sits above a join so Catalyst
-    cannot push inferred size()>0 predicates below upstream semi-joins
-    (the round-7 corpus-scan re-shingle trap)."""
-    occ = src.select(
-        key,
-        F.posexplode_outer(
-            positional_shingles_of_tokens(tokens(F.col("_t")), k)
-        ).alias("start_tok", "ngram"),
-    ).where(F.col("ngram").isNotNull())
-    covered = (
-        occ.join(hot.select("ngram"), "ngram")
-        .select(
-            key,
-            F.explode(
-                F.sequence(F.col("start_tok"), F.col("start_tok") + F.lit(k) - 1)
-            ).alias("_idx"),
-        )
-        .groupBy(key)
-        .agg(F.array_sort(F.collect_set("_idx")).alias("_covered"))
-    )
-    base = src.select(key, tokens(F.col("_t")).alias("_toks"))
-    joined = base.join(covered, key, "left").select(
-        key,
-        "_toks",
-        F.coalesce("_covered", F.array().cast("array<int>")).alias("_cov"),
-    )
-    return joined.select(
-        key,
-        F.array_join(
-            F.filter(
-                F.col("_toks"),
-                lambda t, i: ~F.array_contains(F.col("_cov"), i.cast("int")),
-            ),
-            " ",
-        ).alias("clean_text"),
-        F.size("_toks").alias("n_tokens"),
-        F.size("_cov").alias("n_removed"),
-    )
-
-
 def strip_duplicate_ngrams(
     docs: DataFrame,
     hot: DataFrame,
@@ -190,31 +130,56 @@ def strip_duplicate_ngrams(
     (the conservative training-data policy: repeated boilerplate carries
     no signal worth keeping once); a keep-first-copy policy is a
     downstream choice over duplicate_ngram_spans, not baked in here.
-
-    ``collapse`` (round-7): clean_text is a pure function of (text, hot
-    set) — duplicate-heavy corpora strip once per DISTINCT text and fan
-    the result back out to ids by raw-md5 (util.collapse_mode)."""
+    Stripped once per text unit (util.text_units), so duplicate texts
+    are stripped once."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    base = ensure_parallelism(docs)
     mode = collapse_mode(docs, text_col, collapse)
-    if mode != "off":
-        ids, rep_rows = collapse_representatives(docs, text_col, id_col)
-        src = rep_rows.select(
-            F.md5(F.col(text_col)).alias("_rfp"), F.col(text_col).alias("_t")
+    units, attach = text_units(base, text_col, id_col, mode)
+    occ = units.select(
+        "_k",
+        F.posexplode_outer(
+            positional_shingles_of_tokens(tokens(F.col("_t")), k)
+        ).alias("start_tok", "ngram"),
+    ).where(F.col("ngram").isNotNull())
+    covered = (
+        occ.join(hot.select("ngram"), "ngram")
+        .select(
+            "_k",
+            F.explode(
+                F.sequence(F.col("start_tok"), F.col("start_tok") + F.lit(k) - 1)
+            ).alias("_idx"),
         )
-        per_text = _strip_by_key(src, hot, k, "_rfp")
-        return attach_per_text(ids, per_text, mode, how="left").select(
-            F.col("id").alias("doc_id"),
-            "clean_text",
-            "n_tokens",
-            # NULL-text docs (the only rows missing from the per-text
-            # table) report 0 removed, like the direct path's empty _cov
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-        )
-    src = ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
+        .groupBy("_k")
+        .agg(F.array_sort(F.collect_set("_idx")).alias("_covered"))
     )
-    return _strip_by_key(src, hot, k, "doc_id")
+    # left join: units with no hot shingle (NULL text included) keep an
+    # empty cover
+    toks = (
+        units.select("_k", tokens(F.col("_t")).alias("_toks"))
+        .join(covered, "_k", "left")
+        .select(
+            "_k",
+            "_toks",
+            F.coalesce("_covered", F.array().cast("array<int>")).alias("_cov"),
+        )
+    )
+    per_unit = toks.select(
+        "_k",
+        F.array_join(
+            F.filter(
+                F.col("_toks"),
+                lambda t, i: ~F.array_contains(F.col("_cov"), i.cast("int")),
+            ),
+            " ",
+        ).alias("clean_text"),
+        F.size("_toks").alias("n_tokens"),
+        F.size("_cov").alias("n_removed"),
+    )
+    return attach(per_unit).select(
+        F.col(id_col).alias("doc_id"), "clean_text", "n_tokens", "n_removed"
+    )
 
 
 # --- line-level boilerplate removal (C4/CCNet line tier) ------------------

@@ -149,16 +149,20 @@ def test_tfidf_top_terms_hand_computed(spark):
 
 
 def test_lm_collapse_identical_to_direct(spark):
-    """Round-7: duplicate-text collapse (weighted counts, per-text
-    scoring) must reproduce the direct path's LM tables and scores
-    exactly on a replicated corpus."""
+    """Duplicate-text collapse (weighted counts, per-text scoring) must
+    reproduce the direct path's LM tables and scores exactly on a
+    replicated corpus, including NULL-text and empty-text docs."""
     from pyspark.sql import functions as F
 
     from json_schema_py_spark.operators.lm import score_perplexity, train_bigram_lm
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     big = docs.crossJoin(spark.range(6).select(F.col("id").alias("_r"))).select(
-        (F.col("doc_id") + F.col("_r") * 1000).alias("doc_id"), "text"
+        (F.col("doc_id") + F.col("_r") * 1000).alias("doc_id"),
+        F.when(F.col("doc_id") % 49 == 0, F.lit(None))
+        .when(F.col("doc_id") % 31 == 0, F.lit(""))
+        .otherwise(F.col("text"))
+        .alias("text"),
     )
     v_d, u_d, b_d = train_bigram_lm(big, vocab_size=300, collapse=False)
     v_c, u_c, b_c = train_bigram_lm(big, vocab_size=300, collapse="broadcast")
@@ -174,39 +178,108 @@ def test_lm_collapse_identical_to_direct(spark):
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_streaming_inputs_never_collapse(spark, tmp_path):
+def _jobs(spark) -> int:
+    """Number of Spark jobs submitted so far in this session."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc._jsc.sc().statusStore().jobsList(None).size()
+
+
+def _collapsible_operators(static):
+    """name -> build(docs, collapse) for the ten operators that can
+    collapse duplicate texts; their model, profile and hot-set inputs are
+    fit on the batch frame ``static`` with collapse off."""
+    from json_schema_py_spark.operators.classifier import (
+        score_quality,
+        train_nb_classifier,
+    )
+    from json_schema_py_spark.operators.importance import (
+        hashed_ngram_profile,
+        importance_weights,
+    )
+    from json_schema_py_spark.operators.incremental import corpus_index
+    from json_schema_py_spark.operators.keywords import tfidf_top_terms
+    from json_schema_py_spark.operators.lm import score_perplexity, train_bigram_lm
+    from json_schema_py_spark.operators.substring import (
+        hot_ngrams,
+        strip_duplicate_ngrams,
+    )
+
+    def labeled(d):
+        return d.withColumn("label", (F.crc32(F.col("text")) % 2).cast("int"))
+
+    lm = train_bigram_lm(static, vocab_size=100, collapse=False)
+    nb = train_nb_classifier(labeled(static), collapse=False)
+    prof = hashed_ngram_profile(static, 512, collapse=False)
+    hot = hot_ngrams(static, k=3, collapse=False)
+    return {
+        "train_bigram_lm": lambda d, c: train_bigram_lm(d, vocab_size=100, collapse=c),
+        "score_perplexity": lambda d, c: score_perplexity(d, *lm, collapse=c),
+        "train_nb_classifier": lambda d, c: train_nb_classifier(labeled(d), collapse=c),
+        "score_quality": lambda d, c: score_quality(d, *nb, collapse=c),
+        "hashed_ngram_profile": lambda d, c: hashed_ngram_profile(d, 512, collapse=c),
+        "importance_weights": lambda d, c: importance_weights(
+            d, prof, prof, 512, collapse=c
+        ),
+        "hot_ngrams": lambda d, c: hot_ngrams(d, k=3, collapse=c),
+        "strip_duplicate_ngrams": lambda d, c: strip_duplicate_ngrams(
+            d, hot, k=3, collapse=c
+        ),
+        "tfidf_top_terms": lambda d, c: tfidf_top_terms(d, k=3, collapse=c),
+        "corpus_index": lambda d, c: corpus_index(d, collapse=c),
+    }
+
+
+def test_collapse_mode_rejects_unknown_values_before_any_scan(spark):
+    """A ``collapse`` value outside True/False/"auto"/"off"/"shuffle"/
+    "broadcast" raises instead of silently running the probe scan as
+    "auto" — on batch and streaming frames alike, with no job submitted."""
+    from json_schema_py_spark.util import collapse_mode
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    stream = spark.readStream.schema(docs.schema).parquet(f"{SF}/documents.parquet")
+    before = _jobs(spark)
+    for bad in ("Off", "none", "true", 0, 1, None):
+        for df in (docs, stream):
+            with pytest.raises(ValueError, match="collapse"):
+                collapse_mode(df, "text", bad)
+    assert _jobs(spark) == before
+
+
+def test_streaming_inputs_never_collapse(spark):
     """A streaming frame can neither run the duplication probe nor carry
     the collapsed plan, so collapse_mode answers "off" for it whatever
-    the caller pinned, and a pinned collapse still builds a stream."""
-    from json_schema_py_spark.operators.keywords import tfidf_top_terms
+    the caller pinned, and every collapsible operator with collapse
+    pinned on still builds a stream."""
     from json_schema_py_spark.util import collapse_mode
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     stream = spark.readStream.schema(docs.schema).parquet(f"{SF}/documents.parquet")
     for pinned in (True, "shuffle", "broadcast", "auto"):
         assert collapse_mode(stream, "text", pinned) == "off", pinned
-    assert tfidf_top_terms(stream, collapse=True).isStreaming
+    for name, build in _collapsible_operators(docs).items():
+        out = build(stream, True)
+        frames = out if isinstance(out, tuple) else (out,)
+        assert all(f.isStreaming for f in frames), name
 
 
 def test_collapse_builders_run_no_job_before_an_action(spark):
-    """Building tf-idf or the bigram LM with collapse pinned on submits no
-    Spark job (the per-text table is persisted lazily, not checkpointed
-    eagerly), and the collapsed outputs equal the direct ones."""
+    """Building any collapsible operator with collapse pinned on submits
+    no Spark job (the per-text table is persisted lazily, not
+    checkpointed eagerly), and the collapsed tf-idf and bigram-LM outputs
+    equal the direct ones."""
     from json_schema_py_spark.operators.keywords import tfidf_top_terms
     from json_schema_py_spark.operators.lm import train_bigram_lm
 
-    sc = spark.sparkContext
-
-    def jobs() -> int:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return sc._jsc.sc().statusStore().jobsList(None).size()
-
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     try:
-        before = jobs()
+        ops = _collapsible_operators(docs)
+        before = _jobs(spark)
+        for name, build in ops.items():
+            build(docs, True)
+            assert _jobs(spark) == before, name
         t_c = tfidf_top_terms(docs, k=3, collapse=True)
         lm_c = train_bigram_lm(docs, vocab_size=100, collapse=True)
-        assert jobs() == before
         t_d = tfidf_top_terms(docs, k=3, collapse=False)
         lm_d = train_bigram_lm(docs, vocab_size=100, collapse=False)
         for a, b in ((t_c, t_d),) + tuple(zip(lm_c, lm_d)):

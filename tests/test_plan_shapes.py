@@ -499,7 +499,8 @@ def test_substring_hot_table_is_not_force_broadcast(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     hot = hot_ngrams(docs, k=8, min_count=2)
     hot_plan = _physical(hot)
-    assert "partial_count" in hot_plan, "hot count must map-side combine"
+    # occurrences are counted as a sum of text-unit weights
+    assert "partial_sum" in hot_plan, "hot count must map-side combine"
     with _with_auto_broadcast_off(spark):
         plan = _physical(strip_duplicate_ngrams(docs, hot, k=8))
     assert "SortMergeJoin" in plan, "hot joins must survive without broadcast"
