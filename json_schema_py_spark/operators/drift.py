@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 def bucket_expr(col: str, lo: float, hi: float, nbins: int):
     """The clamped fixed-width bucket id as a Column — ONE definition shared
     by the batch histogram and streaming_psi so batch/stream parity is
-    structural (review r03). Validates the binning up front: a width-0 or
+    structural. Validates the binning up front: a width-0 or
     zero-bin histogram would otherwise only surface as an ANSI
     divide-by-zero mid-stream."""
     if nbins < 1:

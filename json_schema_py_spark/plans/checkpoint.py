@@ -7,7 +7,7 @@ partitions away. Exactly-once semantics under retry come from
 last-writer-wins dedup on read: duplicate (run_id, partition_key) appends are
 collapsed by a window over ``ts`` — idempotent re-runs.
 
-Partition identity (ADVICE r01 fix): ``spark_partition_id()`` is NOT durable
+Partition identity: ``spark_partition_id()`` is NOT durable
 across runs — ids depend on split planning (maxPartitionBytes, core count,
 file layout, AQE). Two defenses:
 
@@ -143,7 +143,7 @@ class LineageLog:
             current = planning_fingerprint(self.spark)
             # null-safe: a NULL layout (older-schema or external writer) is
             # stale, not exempt — plain != would filter those rows out and
-            # silently bypass the guard (ADVICE r02)
+            # silently bypass the guard
             stale = (
                 done.where(~F.col("layout").eqNullSafe(F.lit(current)))
                 .limit(1)

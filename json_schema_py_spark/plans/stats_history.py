@@ -13,6 +13,10 @@ sandbox, an Iceberg table in production, identical read-side logic):
     log.append(df, run_id)                                  # this run becomes
                                                             # the next baseline
 
+``append`` also takes {column: (bucket, cnt)} histograms already built on
+the log's bounds, so a job that aggregates each watched column once for
+its drift check snapshots that same aggregate (scripts/run_validation_job.py).
+
 Every run appends one nbins-row histogram per watched column (bounded:
 columns × nbins rows per run); the newest PREVIOUS run is the baseline, so
 drift always means "vs the last accepted snapshot", and retention is a
@@ -70,20 +74,33 @@ class HistogramLog:
         self.path = path
         self.bounds = dict(bounds)
 
-    def append(self, df: DataFrame, run_id: str) -> None:
-        """Snapshot every watched column's histogram for ``run_id``."""
-        ts = time.time()
-        parts = []
-        for col, (lo, hi, nbins) in self.bounds.items():
-            parts.append(
-                histogram(df, col, lo, hi, nbins).select(
-                    F.lit(run_id).alias("run_id"),
-                    F.lit(col).alias("column"),
-                    F.col("bucket"),
-                    F.col("cnt"),
-                    F.lit(ts).alias("ts"),
+    def append(self, df: DataFrame | Mapping[str, DataFrame], run_id: str) -> None:
+        """Snapshot every watched column's histogram for ``run_id``.
+
+        ``df`` is a frame carrying the watched columns, or the histograms
+        themselves: {column: (bucket, cnt)} built on this log's bounds for
+        every watched column — a job that already aggregates each column
+        once (for its drift check) hands that aggregate over instead of
+        scanning the table again."""
+        if isinstance(df, Mapping):
+            if set(df) != set(self.bounds):
+                raise ValueError(
+                    f"histograms for {sorted(df)} != watched columns {sorted(self.bounds)}"
                 )
+            hists = dict(df)
+        else:
+            hists = {col: histogram(df, col, *b) for col, b in self.bounds.items()}
+        ts = time.time()
+        parts = [
+            h.select(
+                F.lit(run_id).alias("run_id"),
+                F.lit(col).alias("column"),
+                F.col("bucket"),
+                F.col("cnt"),
+                F.lit(ts).alias("ts"),
             )
+            for col, h in hists.items()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -119,7 +136,7 @@ class HistogramLog:
         ``keep_newest`` most recent snapshots survive regardless of the
         cutoff (default 2: the current snapshot AND the previous one —
         an idempotent re-run calls latest_baselines(exclude_run=own) and
-        must still find a baseline after its own append, review r04c).
+        must still find a baseline after its own append).
         Columns no longer in bounds (dropped from the watch list, or an
         old bucket-grid epoch) age out by the cutoff alone. keep_newest=0
         prunes unconditionally.

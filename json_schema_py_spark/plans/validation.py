@@ -2,19 +2,28 @@
 per-partition verdicts (the reference's ValidationResult lifted to a table;
 reference: json_schema/api.py:42-79, json_schema/validator.py:31-60).
 
-Plan shape (one fused scan for all per-row work):
+Plan shape (every ruleset evaluated once per row, in one projection):
 
-    parquet scan ──(ONE projection: concat of every ruleset's violations)──┐
-        │                                                                  ├──
-        ├── per-partition rollup (partition_key groupBy)                   │
-        ├── uniqueness: salted 2-stage agg + semi join ────────────────────┤
-        └── FK: posexplode + broadcast/salted anti-join ───────────────────┘
-                                                                → violations
+    scan ─┬─ rules frame (doc_id, partition_key, violations: the concat
+          │  of every ruleset's arrays)
+          │    ├── explode ───────────────────────────────── violations
+          │    └── rollup by partition_key ───────────────── verdicts
+          ├─ uniqueness: salted 2-stage agg + join back ──── violations
+          ├─ FK: posexplode + broadcast/salted anti-join ─── violations
+          └─ key columns (key, partition_key)
+               └── cross-row attribution by violating key ── verdicts
+
+``run_validation`` builds all of it lazily and persists nothing. Both
+outputs read the rules frame (``ValidationRun.rules``) and cross-row
+attribution reads key columns only, never the rules column; a caller that
+runs both outputs persists the rules frame first and unpersists it after,
+so the rules run once per row (scripts/run_validation_job.py also shares
+one key projection of the full table between uniqueness, FK and drift).
 
 Per-row rulesets never shuffle; the only shuffles are the engine-level
 cross-row checks, each individually skew-hardened (see their modules).
 
-Verdict semantics (ADVICE r01 fix): a partition's pass/fail covers BOTH the
+Verdict semantics: a partition's pass/fail covers BOTH the
 per-row rulesets (all of them, not just the first) AND the cross-row engine
 checks attributable to its rows — cross-row violation counts are joined back
 by key, so a partition carrying a duplicate or FK miss can no longer be
@@ -53,7 +62,7 @@ def _partition_key_col(partition_key: Union[str, Column, None]) -> Column:
     # NULL partition values coalesce to a sentinel: verdict grouping, cross-
     # row attribution joins, and lineage anti-joins all use plain (non-null-
     # safe) equality — a NULL key would silently drop attributed violations
-    # and never match on resume (review finding r02c)
+    # and never match on resume
     expr = (
         F.col(partition_key) if isinstance(partition_key, str) else partition_key
     )
@@ -74,7 +83,7 @@ def partition_verdicts(
             # explicit int64 on both counters: the DuckDB oracle SUM() would
             # otherwise return HUGEINT (int128) where Spark emits BIGINT, and
             # the driver's value-hash canonicalization distinguishes the
-            # physical types even when values agree (round-3 hash flag)
+            # physical types even when values agree
             F.count(F.lit(1)).cast("long").alias("docs"),
             F.sum(F.size("violations")).cast("long").alias("violations"),
             (F.sum(F.size("violations")) == 0).alias("pass"),
@@ -93,7 +102,7 @@ def partition_verdicts(
 class ValidationRun:
     violations: DataFrame  # (doc_id, rule_id, path, observed)
     verdicts: DataFrame  # (run_id, partition_key, pass, docs, violations)
-    annotated: DataFrame  # input + violations array (ALL rulesets) + valid flag
+    rules: DataFrame  # (doc_id, partition_key, violations): every ruleset, once per row
 
 
 def run_validation(
@@ -115,6 +124,11 @@ def run_validation(
     ``drift_threshold`` adds one table-level DISTRIBUTION_DRIFT row
     (doc_id NULL) to the violations union and a ``__table__`` verdict row.
 
+    Lazy: building the run submits no Spark job and persists nothing.
+    ``violations`` and ``verdicts`` both read ``rules``; a caller that
+    runs both persists ``run.rules`` first (and unpersists it after), so
+    the rules are evaluated once per row — see scripts/run_validation_job.py.
+
     Scale note: cross-row verdict attribution broadcast-joins the violating
     KEYS back onto the table — it assumes violating keys ≪ table size (the
     normal regime; a table where half the keys violate has bigger problems
@@ -122,12 +136,13 @@ def run_validation(
     struct_type = T.StructType([f for f in df.schema.fields])
     arrays = [compile_ruleset(schema, struct_type) for schema in rulesets.values()]
     combined = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-    annotated = df.withColumn("violations", combined).withColumn(
-        "valid", F.size("violations") == 0
+    pkey = _partition_key_col(partition_key)
+    rules = df.select(
+        F.col(key_col).alias("doc_id"),
+        pkey.alias("partition_key"),
+        combined.alias("violations"),
     )
-    row_viols = annotated.select(
-        F.col(key_col).alias("doc_id"), F.explode("violations").alias("v")
-    ).select(
+    row_viols = rules.select("doc_id", F.explode("violations").alias("v")).select(
         "doc_id",
         F.col("v.rule_id").alias("rule_id"),
         F.col("v.path").alias("path"),
@@ -167,8 +182,7 @@ def run_validation(
     )
 
     # ---- verdicts: per-row rollup + cross-row attribution by key ----
-    pkey = _partition_key_col(partition_key)
-    rollup = annotated.groupBy(pkey.alias("partition_key")).agg(
+    rollup = rules.groupBy("partition_key").agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum(F.size("violations")).alias("_row_viols"),
     )
@@ -194,7 +208,8 @@ def run_validation(
                 counts.where(F.col("doc_id").isNull()).select("_kviols")
             )
             by_key = counts.where(F.col("doc_id").isNotNull())
-            keyed = annotated.select(
+            # key columns only: attribution never reads the rules column
+            keyed = df.select(
                 F.col(src_col).cast("string").alias("doc_id"),
                 pkey.alias("partition_key"),
             )
@@ -242,8 +257,8 @@ def run_validation(
     if cross_specs:
         # cross-row violations on NULL-keyed rows cannot be attributed to a
         # partition by key; they surface on a failing __nullkey__ pseudo-
-        # partition row so no checkpoint/resume can mark them pass (review
-        # finding r02 — the synth corpus deliberately plants NULL doc_ids)
+        # partition row so no checkpoint/resume can mark them pass (the
+        # synth corpus deliberately plants NULL doc_ids)
         nullkey = (
             reduce(lambda a, b: a.unionByName(b), null_counts)
             .agg(F.coalesce(F.sum("_kviols"), F.lit(0)).alias("violations"))
@@ -270,11 +285,11 @@ def run_validation(
             )
         )
         verdicts = verdicts.unionByName(tbl)
-    return ValidationRun(violations=violations, verdicts=verdicts, annotated=annotated)
+    return ValidationRun(violations=violations, verdicts=verdicts, rules=rules)
 
 
 def violations_diff(prev: DataFrame, cur: DataFrame) -> DataFrame:
-    """Cross-run regression diff over two violation sets (round-4): one
+    """Cross-run regression diff over two violation sets: one
     row per (doc_id, rule_id, path) seen in EITHER run —
 
     * ``new``       — fires now, didn't before (a regression)
@@ -305,7 +320,7 @@ def violations_diff(prev: DataFrame, cur: DataFrame) -> DataFrame:
                 *[F.col(k).alias(f"_{tag}_{k}") for k in keys + ["observed"]],
                 # literal presence marker: rule_id IS NOT NULL would
                 # misclassify a (schema-permitted) NULL-rule_id row as
-                # absent from its own side (ADVICE r04)
+                # absent from its own side
                 F.lit(True).alias(f"_{tag}_present"),
             )
         )
@@ -352,7 +367,7 @@ def schema_drift(df: DataFrame, expected: T.StructType) -> DataFrame:
         elif len(ats) > 1:
             # a join can legally leave two same-named columns — a drift
             # checker that keeps only the last one can mask a genuine type
-            # change behind the duplicate (review r04b): surface it
+            # change behind the duplicate: surface it
             rows.append((name, "duplicated", et, ",".join(ats)))
         elif ats[0] != et:
             rows.append((name, "type_changed", et, ats[0]))

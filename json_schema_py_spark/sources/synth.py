@@ -148,7 +148,7 @@ def spans_documents(
     ``docs`` substitutes a pre-read frame with the raw documents schema for
     the parquet read — the derivation is a stateless projection, so a
     ``readStream`` frame binds unchanged (the streaming drift arm of
-    scripts/run_validation_job.py, round-5). Not combinable with
+    scripts/run_validation_job.py). Not combinable with
     ``include_source_file`` (``_metadata`` is a batch-scan column)."""
     if docs is not None and include_source_file:
         raise ValueError("include_source_file requires the batch parquet read")

@@ -51,7 +51,7 @@ def streaming_psi(
     # aggregate before folding: a baseline accidentally built as a UNION of
     # histograms carries duplicate bucket rows, and a dict comprehension
     # would keep only the last row's count, silently deflating that
-    # bucket's q (ADVICE r03)
+    # bucket's q
     qrows = {
         r["bucket"]: r["cnt"]
         for r in baseline.groupBy("bucket").agg(F.sum("cnt").alias("cnt")).collect()
@@ -59,7 +59,7 @@ def streaming_psi(
     if not set(qrows) <= set(range(nbins)):
         # a baseline built with DIFFERENT binning would silently deflate
         # every q (its extra buckets inflate qtot but never enter a term),
-        # diverging from batch psi() with no signal (review r03)
+        # diverging from batch psi() with no signal
         raise ValueError(
             f"baseline has buckets {sorted(set(qrows) - set(range(nbins)))} "
             f"outside range({nbins}) — rebuild it with the same lo/hi/nbins"
@@ -110,17 +110,15 @@ def streaming_psi_from_log(
 ) -> DataFrame:
     """streaming_psi with its baseline + bucket bounds pulled from a
     plans/stats_history.HistogramLog — the live-ingest arm of the
-    run-over-run drift loop (round-4, VERDICT r03 item 5): batch runs
-    append snapshots, the stream drifts against WHAT THE LAST RUN SAW,
-    with the bounds guaranteed identical on both sides because both read
-    ``log.bounds``. Raises when the log has no snapshot for ``col`` yet —
-    a first run has no honest baseline (same contract as
-    latest_baselines' empty dict).
+    run-over-run drift loop: batch runs append snapshots, the stream
+    drifts against WHAT THE LAST RUN SAW, with the bounds guaranteed
+    identical on both sides because both read ``log.bounds``. Raises when
+    the log has no snapshot for ``col`` yet — a first run has no honest
+    baseline (same contract as latest_baselines' empty dict).
 
     ``exclude_run`` passes through to latest_baselines — a RETRIED run_id
     whose earlier attempt already appended its snapshot must not baseline
-    against itself (the batch loop's invariant; review r05 caught the
-    streaming arm silently lacking it)."""
+    against itself (the batch loop's invariant holds for the stream too)."""
     if col not in log.bounds:
         raise ValueError(f"column {col!r} is not watched by this HistogramLog")
     lo, hi, nbins = log.bounds[col]

@@ -1,11 +1,28 @@
 #!/usr/bin/env python
 """spark-submit job entry: full validation plan over the interleaved
-documents table → violations parquet + per-partition lineage append.
+documents table → violations parquet + per-partition lineage append,
+cross-row checks, distribution drift and its streaming arm.
 
     spark-submit --py-files json_schema_py_spark.zip \
         scripts/run_validation_job.py <sf_dir> <out_dir> [run_id]
 
 Resumable: re-running with the same run_id skips checkpointed partitions.
+
+Read-once shape. The batch source is scanned at most twice per job:
+
+* the REMAINING rows (not yet checkpointed for this run_id) feed one rules
+  frame ``(doc_id, partition_key, violations)``: both rulesets evaluated
+  once per row. The violations write fills it, the verdict rollup for the
+  lineage log reads it back.
+* the FULL table feeds one key projection ``(src_id, doc_id, media refs by
+  position, n_spans)`` — NULL keys kept, uniqueness drops them itself. The
+  uniqueness and FK checks read it, and so does one histogram aggregate
+  per watched column (at most nbins rows, all-row and sentinel-free
+  counts) that feeds the PSI violation, the streaming arm's batch
+  comparison and the histogram-log snapshot.
+
+The streaming arm reads its own input stream. Everything the job persists
+(MEMORY_AND_DISK) it unpersists before returning, in a ``finally``.
 """
 
 from __future__ import annotations
@@ -18,6 +35,9 @@ from pyspark.sql import SparkSession
 def main(sf_dir: str, out_dir: str, run_id: str = "run-0") -> int:
     spark = SparkSession.builder.appName("jsps-validate").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+
+    from pyspark import StorageLevel
+    from pyspark.sql import functions as F
 
     from json_schema_py_spark.plans.checkpoint import LineageLog
     from json_schema_py_spark.plans.validation import run_validation
@@ -44,115 +64,146 @@ def main(sf_dir: str, out_dir: str, run_id: str = "run-0") -> int:
         run_id=run_id,
         partition_key="_source_file",
     )
-    run.violations.write.mode("append").parquet(f"{out_dir}/violations")
-    log.append(run.verdicts)
-
-    # cross-row checks (uniqueness, FK): only meaningful over the FULL table
-    # — a resumed remainder can't see duplicates spanning completed data, so
-    # these re-run table-wide every attempt and overwrite their own output
-    from json_schema_py_spark.operators.referential import spans_fk_violations
-    from json_schema_py_spark.operators.uniqueness import uniqueness_violations
-
-    cross = uniqueness_violations(full, "doc_id").unionByName(
-        spans_fk_violations(full, media_dim(spark))
+    # the full table's key columns: everything the cross-row checks and
+    # the drift loop read, without the span texts
+    keys = full.select(
+        "src_id",
+        "doc_id",
+        F.transform(
+            "spans", lambda s: F.struct(s["media_ref"].alias("media_ref"))
+        ).alias("spans"),
+        F.size("spans").alias("n_spans"),
     )
-    cross.write.mode("overwrite").parquet(f"{out_dir}/violations_cross")
+    persisted = [
+        run.rules.persist(StorageLevel.MEMORY_AND_DISK),
+        keys.persist(StorageLevel.MEMORY_AND_DISK),
+    ]
+    try:
+        run.violations.write.mode("append").parquet(f"{out_dir}/violations")
+        log.append(run.verdicts)
 
-    # distribution drift vs the LAST run's snapshot (plans/stats_history):
-    # full-table like the other cross-row checks; a retried run_id never
-    # baselines against its own appends
-    from pyspark.sql import functions as F
+        # cross-row checks (uniqueness, FK): only meaningful over the FULL
+        # table — a resumed remainder can't see duplicates spanning
+        # completed data, so these re-run table-wide every attempt and
+        # overwrite their own output
+        from json_schema_py_spark.operators.referential import spans_fk_violations
+        from json_schema_py_spark.operators.uniqueness import uniqueness_violations
 
-    from json_schema_py_spark.operators.drift import psi_drift_violation
-    from json_schema_py_spark.plans.stats_history import HistogramLog
+        cross = uniqueness_violations(keys, "doc_id").unionByName(
+            spans_fk_violations(keys, media_dim(spark))
+        )
+        cross.write.mode("overwrite").parquet(f"{out_dir}/violations_cross")
 
-    bounds = {"n_spans": (0.0, 10.0, 10)}
-    hlog = HistogramLog(spark, f"{out_dir}/stats_history", bounds)
-    watched = full.withColumn("n_spans", F.size("spans"))
-    drift_rows = 0
-    baselines = hlog.latest_baselines(exclude_run=run_id)
-    if baselines:
-        from json_schema_py_spark.operators.drift import histogram
+        # distribution drift vs the LAST run's snapshot (plans/stats_history):
+        # full-table like the other cross-row checks; a retried run_id never
+        # baselines against its own appends
+        from json_schema_py_spark.operators.drift import bucket_expr, psi_drift_violation
+        from json_schema_py_spark.plans.stats_history import HistogramLog
 
-        drifts = [
-            psi_drift_violation(
-                histogram(watched, col, *bounds[col]), base, column=col
+        bounds = {"n_spans": (0.0, 10.0, 10)}
+        hlog = HistogramLog(spark, f"{out_dir}/stats_history", bounds)
+        # the streaming arm's watermark rows (see below)
+        sentinel = F.col("src_id") % 997 == 0
+        # one aggregate per watched column: ``cnt`` over every row (drift
+        # and the log snapshot), ``cnt_live`` over the non-sentinel rows
+        # (the streaming arm's batch comparison)
+        hists = {
+            col: keys.where(F.col(col).isNotNull())
+            .groupBy(bucket_expr(col, lo, hi, nb).alias("bucket"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.count_if(~sentinel).alias("cnt_live"),
             )
-            for col, base in baselines.items()
-        ]
-        d = drifts[0]
-        for x in drifts[1:]:
-            d = d.unionByName(x)
-        d.write.mode("overwrite").parquet(f"{out_dir}/violations_drift")
-        drift_rows = spark.read.parquet(f"{out_dir}/violations_drift").count()
+            .persist(StorageLevel.MEMORY_AND_DISK)
+            for col, (lo, hi, nb) in bounds.items()
+        }
+        persisted += hists.values()
+        watched = {col: h.select("bucket", "cnt") for col, h in hists.items()}
+        drift_rows = 0
+        baselines = hlog.latest_baselines(exclude_run=run_id)
+        if baselines:
+            drifts = [
+                psi_drift_violation(watched[col], base, column=col)
+                for col, base in baselines.items()
+            ]
+            d = drifts[0]
+            for x in drifts[1:]:
+                d = d.unionByName(x)
+            d.write.mode("overwrite").parquet(f"{out_dir}/violations_drift")
+            drift_rows = spark.read.parquet(f"{out_dir}/violations_drift").count()
 
-        # round-5 (VERDICT r04 item 6): the LIVE-INGEST arm of the same
-        # drift loop — an AvailableNow streaming pass over the identical
-        # input against the identical HistogramLog baseline must reach the
-        # identical verdict. Synthetic event time puts every doc in ONE
-        # 10-minute window except a deterministic sentinel residue
-        # (src_id % 997 == 0) placed 20 minutes later purely to advance
-        # the watermark and close the main window (append-mode streams
-        # only emit finalized windows; a finite AvailableNow replay gets
-        # no extra flush batch). The batch PSI for the comparison is
-        # recomputed over the same sentinel-free row subset.
-        from json_schema_py_spark.operators.drift import histogram as _hist
-        from json_schema_py_spark.operators.drift import psi as _psi
-        from json_schema_py_spark.streaming.drift_stream import streaming_psi_from_log
+            # The LIVE-INGEST arm of the same drift loop: an AvailableNow
+            # streaming pass over the identical input against the identical
+            # HistogramLog baseline must reach the identical verdict.
+            # Synthetic event time puts every doc in ONE 10-minute window
+            # except the sentinel rows, placed 20 minutes later purely to
+            # advance the watermark and close the main window (append-mode
+            # streams only emit finalized windows; a finite AvailableNow
+            # replay gets no extra flush batch). The batch side of the
+            # comparison is the shared aggregate's ``cnt_live``, so this arm
+            # adds no batch scan. perfbench/layertrace.py starts this arm's
+            # layer at the line holding
+            # "from json_schema_py_spark.operators.drift import histogram as _hist".
+            from json_schema_py_spark.operators.drift import psi as _psi
+            from json_schema_py_spark.streaming.drift_stream import streaming_psi_from_log
 
-        base_epoch = 1_767_261_600  # 2026-01-01 10:00:00 UTC
-        raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        # the file stream source requires a DIRECTORY; documents.parquet is
-        # a single file inside sf_dir, so stream the dir with a glob filter
-        raw_stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
-        sw = (
-            spans_documents(spark, sf_dir, docs=raw_stream)
-            .withColumn("n_spans", F.size("spans"))
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(base_epoch)
-                    + F.when(F.col("src_id") % 997 == 0, 1200).otherwise(0)
-                ),
+            base_epoch = 1_767_261_600  # 2026-01-01 10:00:00 UTC
+            raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+            # the file stream source requires a DIRECTORY; documents.parquet
+            # is a single file inside sf_dir, so stream the dir with a glob
+            # filter
+            raw_stream = (
+                spark.readStream.schema(raw_schema)
+                .option("pathGlobFilter", "documents.parquet")
+                .parquet(sf_dir)
             )
-        )
-        pw = streaming_psi_from_log(
-            sw, "n_spans", hlog,
-            window_duration="10 minutes", watermark="1 second",
-            exclude_run=run_id,
-        )
-        (
-            pw.writeStream.format("parquet")
-            .option("path", f"{out_dir}/drift_stream_windows")
-            .option("checkpointLocation", f"{out_dir}/drift_stream_ck/{run_id}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination(600)
-        )
-        wins = spark.read.parquet(f"{out_dir}/drift_stream_windows")
-        main = wins.where(
-            F.col("window_start") == F.timestamp_seconds(F.lit(base_epoch))
-        ).collect()
-        subset = watched.where(F.col("src_id") % 997 != 0)
-        lo, hi, nb = bounds["n_spans"]
-        batch_psi = _psi(
-            _hist(subset, "n_spans", lo, hi, nb), baselines["n_spans"]
-        ).collect()[0]["psi"]
-        s_psi = main[0]["psi"] if main else None
-        print(
-            f"streaming drift arm: window psi={s_psi} "
-            f"batch psi on same rows={batch_psi} identical={s_psi == batch_psi}"
-        )
-    hlog.append(watched, run_id)
+            sw = (
+                spans_documents(spark, sf_dir, docs=raw_stream)
+                .withColumn("n_spans", F.size("spans"))
+                .withColumn(
+                    "ts",
+                    F.timestamp_seconds(F.lit(base_epoch) + F.when(sentinel, 1200).otherwise(0)),
+                )
+            )
+            pw = streaming_psi_from_log(
+                sw, "n_spans", hlog,
+                window_duration="10 minutes", watermark="1 second",
+                exclude_run=run_id,
+            )
+            # one windows path per run, beside its own checkpoint: a file
+            # sink records committed batch ids at its path, and every new
+            # query numbers its batches from 0, so a path shared across
+            # runs would skip each later run's windows as already written
+            windows = f"{out_dir}/drift_stream_windows/{run_id}"
+            (
+                pw.writeStream.format("parquet")
+                .option("path", windows)
+                .option("checkpointLocation", f"{out_dir}/drift_stream_ck/{run_id}")
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination(600)
+            )
+            main = (
+                spark.read.parquet(windows)
+                .where(F.col("window_start") == F.timestamp_seconds(F.lit(base_epoch)))
+                .collect()
+            )
+            live = hists["n_spans"].select("bucket", F.col("cnt_live").alias("cnt"))
+            batch_psi = _psi(live, baselines["n_spans"]).collect()[0]["psi"]
+            s_psi = main[0]["psi"] if main else None
+            print(
+                f"streaming drift arm: window psi={s_psi} "
+                f"batch psi on same rows={batch_psi} identical={s_psi == batch_psi}"
+            )
+        hlog.append(watched, run_id)
 
-    n = spark.read.parquet(f"{out_dir}/violations").count()
-    nc = spark.read.parquet(f"{out_dir}/violations_cross").count()
-    print(f"violations so far: {n} per-row + {nc} cross-row + {drift_rows} drift")
+        n = spark.read.parquet(f"{out_dir}/violations").count()
+        nc = spark.read.parquet(f"{out_dir}/violations_cross").count()
+        print(f"violations so far: {n} per-row + {nc} cross-row + {drift_rows} drift")
+    finally:
+        for df in persisted:
+            df.unpersist()
     return 0
 
 
