@@ -33,7 +33,7 @@ salted-able groupBy of (fingerprint, id); near-dup discovery is the
 MinHash-LSH bucket groupBy (ids-only shuffle, operators/dedup.py); the final
 reason join re-attaches the drop lists by doc_id WITHOUT a broadcast hint —
 a heavily duplicated web corpus can drop a large fraction of its docs, so
-the drop lists are corpus-sized in the worst case (round-5 VERDICT item 2);
+the drop lists are corpus-sized in the worst case;
 AQE / the size threshold still auto-broadcasts genuinely small ones. Everything
 is DuckDB-oracle-able — the driver gate checks the full verdict column
 (q_curation).
@@ -83,15 +83,15 @@ def curate_documents(
     within length bands, with bands hotter than ``ngram_max_bucket_rows``
     automatically swept by LSH (ngram_jaccard_pairs_with_lsh_sweep) — a
     capped band's near-dups are still caught, never silently lost
-    (round-2 VERDICT item 7; pinned in tests/test_curation.py).
+    (pinned in tests/test_curation.py).
 
-    ``max_pii_total`` (round-3): docs whose PII occurrence count
+    ``max_pii_total``: docs whose PII occurrence count
     (operators/contamination.pii_scan classes) exceeds the cap drop with
     reason ``"pii"`` — slotted after ``low_quality`` in the priority chain,
     before dedup (PII docs never enter the dedup corpus: they must not
     survive as the smaller-id keeper of a duplicate family).
 
-    ``lm`` + ``max_perplexity`` (round-5): the CCNet-style perplexity
+    ``lm`` + ``max_perplexity``: the CCNet-style perplexity
     gate — ``lm`` is a (vocab, unigrams, bigrams) triple from
     operators/lm.train_bigram_lm (train it on a REFERENCE corpus, not
     necessarily this one); docs whose add-1 bigram perplexity exceeds
@@ -100,7 +100,7 @@ def curate_documents(
     (< 2 tokens) are NOT dropped by this gate — the token-count bounds
     own that regime.
 
-    ``near_dup_policy`` (round-5): ``"pairs"`` (default) drops the larger
+    ``near_dup_policy``: ``"pairs"`` (default) drops the larger
     id of every verified pair — one pass, no iteration, but a TRANSITIVE
     family member that never directly pairs with the family minimum can
     survive (star family {1,5},{2,5}: 5 drops, 1 AND 2 both stay).
@@ -110,7 +110,7 @@ def curate_documents(
     standard LSH-dedup semantics when one representative per family is
     the contract. Both deterministic.
 
-    NOTE (ADVICE r05): ``"components"`` makes this plan-builder EAGER —
+    ``"components"`` makes this plan-builder EAGER —
     dedup_clusters runs a driver loop of bounded Spark actions (one
     count per propagation round) at call time and leaves its final
     labels frame persisted (released by Spark's LRU / clearCache).
@@ -165,7 +165,7 @@ def curate_documents(
         .when(F.col("_swr") < min_stopword_ratio, F.lit("low_quality"))
     )
     if rep_gate:
-        # round-4 (Gopher-rule family): within-document repetition caps —
+        # Gopher-rule family: within-document repetition caps —
         # slotted after low_quality, before pii, so the drop-reason priority
         # stays a strict chain. Opt-in: thresholds are corpus policy.
         if max_dup_line_fraction is not None:
@@ -196,8 +196,8 @@ def curate_documents(
         # over the FULL corpus) is referenced by five plan subtrees (exact
         # min-fp, its re-join, the dedup corpus, LSH's two corpus reads, the
         # final reason join) — without a persist each reference re-evaluates
-        # it, which measured 2701 s vs ~175 s of actual LSH on a 2M-doc run
-        # (round-5). MEMORY_AND_DISK: verdict-plan intermediates must never
+        # it (measured 2701 s against ~175 s of actual LSH on a 2M-doc run).
+        # MEMORY_AND_DISK: verdict-plan intermediates must never
         # recompute-on-evict mid-join. Released by Spark's LRU / clearCache;
         # pass persist_intermediates=False inside an outer plan that manages
         # its own caching.

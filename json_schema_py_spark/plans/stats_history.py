@@ -115,19 +115,32 @@ class HistogramLog:
         self, exclude_run: str | None = None
     ) -> dict[str, DataFrame]:
         """{column: (bucket, cnt) histogram} from the NEWEST snapshot per
-        column (optionally excluding the current run's own appends — an
-        idempotent re-run must not use itself as its baseline). Empty dict
+        watched column (optionally excluding the current run's own appends —
+        an idempotent re-run must not use itself as its baseline). Empty dict
         when no history exists yet: the caller's first run simply has no
-        drift check, which is the only honest answer."""
-        h = self.read()
+        drift check, which is the only honest answer.
+
+        The history is read once: the newest snapshots (at most columns ×
+        nbins rows) are collected and each baseline is a local frame, so
+        using a baseline never reads the log again and later appends do not
+        change it."""
+        if not os.path.exists(self.path):
+            return {}
+        h = self.read().where(F.col("column").isin(list(self.bounds)))
         if exclude_run is not None:
             h = h.where(F.col("run_id") != exclude_run)
-        latest = _rank_snapshots(h).where(F.col("_ts_rank") == 1).drop("_ts_rank")
-        cols = [r["column"] for r in latest.select("column").distinct().collect()]
+        rows = (
+            _rank_snapshots(h)
+            .where(F.col("_ts_rank") == 1)
+            .select("column", "bucket", "cnt")
+            .collect()
+        )
+        per_col: dict[str, list[tuple[int, int]]] = {}
+        for r in rows:
+            per_col.setdefault(r["column"], []).append((r["bucket"], r["cnt"]))
         return {
-            c: latest.where(F.col("column") == c).select("bucket", "cnt")
-            for c in cols
-            if c in self.bounds
+            c: self.spark.createDataFrame(hist, "bucket int, cnt long")
+            for c, hist in per_col.items()
         }
 
     def prune(self, older_than_ts: float, keep_newest: int = 2) -> int:

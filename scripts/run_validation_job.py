@@ -21,6 +21,10 @@ Read-once shape. The batch source is scanned at most twice per job:
   counts) that feeds the PSI violation, the streaming arm's batch
   comparison and the histogram-log snapshot.
 
+The stats history is read once per run: ``latest_baselines`` collects the
+newest snapshot, and the PSI violation, the streaming arm and its batch
+comparison use those rows.
+
 The streaming arm reads its own input stream. Everything the job persists
 (MEMORY_AND_DISK) it unpersists before returning, in a ``finally``.
 """
@@ -29,11 +33,11 @@ from __future__ import annotations
 
 import sys
 
-from pyspark.sql import SparkSession
+from json_schema_py_spark.session import job_session
 
 
 def main(sf_dir: str, out_dir: str, run_id: str = "run-0") -> int:
-    spark = SparkSession.builder.appName("jsps-validate").getOrCreate()
+    spark = job_session("jsps-validate")
     spark.sparkContext.setLogLevel("WARN")
 
     from pyspark import StorageLevel
@@ -145,7 +149,7 @@ def main(sf_dir: str, out_dir: str, run_id: str = "run-0") -> int:
             # layer at the line holding
             # "from json_schema_py_spark.operators.drift import histogram as _hist".
             from json_schema_py_spark.operators.drift import psi as _psi
-            from json_schema_py_spark.streaming.drift_stream import streaming_psi_from_log
+            from json_schema_py_spark.streaming.drift_stream import streaming_psi
 
             base_epoch = 1_767_261_600  # 2026-01-01 10:00:00 UTC
             raw_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
@@ -165,10 +169,9 @@ def main(sf_dir: str, out_dir: str, run_id: str = "run-0") -> int:
                     F.timestamp_seconds(F.lit(base_epoch) + F.when(sentinel, 1200).otherwise(0)),
                 )
             )
-            pw = streaming_psi_from_log(
-                sw, "n_spans", hlog,
+            pw = streaming_psi(
+                sw, "n_spans", *hlog.bounds["n_spans"], baselines["n_spans"],
                 window_duration="10 minutes", watermark="1 second",
-                exclude_run=run_id,
             )
             # one windows path per run, beside its own checkpoint: a file
             # sink records committed batch ids at its path, and every new

@@ -365,6 +365,85 @@ print("V:", sorted((r["doc_id"], r["rule_id"], r["path"]) for r in v2))
     assert list(tmp_path.iterdir()) == [], list(tmp_path.rglob("*"))
 
 
+def _compiles(spark) -> int:
+    """Generated classes this JVM has compiled so far."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_repeated_plan_compiles_no_new_code(spark, tmp_path):
+    """A plan run again in this process compiles no new generated class:
+    Spark's codegen cache holds the engine's working set, so the second
+    write of the same curation plan (perplexity gate, as the benchmark runs
+    it) and of the same validation rules frame reuses every class the
+    first write compiled."""
+    from json_schema_py_spark.operators.lm import train_bigram_lm
+    from json_schema_py_spark.plans.curation import curate_documents
+    from json_schema_py_spark.plans.validation import run_validation
+    from json_schema_py_spark.sources.synth import (
+        DOCUMENTS_RULESET,
+        MEDIA_DEPENDENCY_RULESET,
+        spans_documents,
+    )
+
+    docs_path = f"{SF}/documents.parquet"
+    lm = []
+    for name, df in zip(("vocab", "unigrams", "bigrams"),
+                        train_bigram_lm(spark.read.parquet(docs_path), vocab_size=500)):
+        df.write.parquet(str(tmp_path / name))
+        lm.append(spark.read.parquet(str(tmp_path / name)))
+
+    def curate():
+        curate_documents(
+            spark.read.parquet(docs_path), min_tokens=15, max_tokens=200,
+            lm=tuple(lm), max_perplexity=250.0,
+        ).write.mode("overwrite").parquet(str(tmp_path / "verdicts"))
+        spark.catalog.clearCache()  # release the staged persist
+
+    def validate():
+        run_validation(
+            spans_documents(spark, SF, include_source_file=True),
+            {"structural": DOCUMENTS_RULESET, "media_dep": MEDIA_DEPENDENCY_RULESET},
+            unique_key=None, partition_key="_source_file",
+        ).rules.write.format("noop").mode("overwrite").save()
+
+    for name, write in (("curation", curate), ("validation", validate)):
+        write()
+        before = _compiles(spark)
+        write()
+        assert _compiles(spark) - before == 0, name
+
+
+def test_job_session_applies_only_the_codegen_cache_size():
+    """With no session running, the deployed job's session carries the
+    engine's codegen cache size and leaves master, memory and partition
+    settings to spark-submit; asked again inside that running session it
+    returns it unchanged and logs nothing."""
+    import os
+    import subprocess
+    import sys
+
+    code = """
+from json_schema_py_spark.session import CODEGEN_CACHE_CONF, CODEGEN_CACHE_ENTRIES, job_session
+s = job_session("job")
+s.sparkContext.setLogLevel("WARN")
+print("CACHE:", s.conf.get(CODEGEN_CACHE_CONF), CODEGEN_CACHE_ENTRIES)
+print("SHUFFLE:", s.conf.get("spark.sql.shuffle.partitions"))
+again = job_session("other")
+assert again is s and s.sparkContext.appName == "job"
+print("OK")
+"""
+    env = dict(os.environ, PYSPARK_SUBMIT_ARGS="--master local[1] pyspark-shell")
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, timeout=300, env=env,
+    )
+    assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-3000:]
+    cache = next(x for x in out.stdout.splitlines() if x.startswith("CACHE:")).split()
+    assert cache[1] == cache[2], cache
+    assert "SHUFFLE: 200" in out.stdout, out.stdout  # Spark's default, not get_spark's
+    assert "Using an existing Spark session" not in out.stderr, out.stderr[-3000:]
+
+
 def _with_auto_broadcast_off(spark):
     """Context manager: disable the size-threshold auto-broadcast so the
     only BroadcastHashJoins left in a plan are explicitly hinted ones."""

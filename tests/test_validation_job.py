@@ -194,3 +194,29 @@ def test_streaming_arm_compares_each_runs_own_windows(spark, tmp_path):
         stdout = _run(spark, str(sub), out, run_id)
         line = next(x for x in stdout.splitlines() if x.startswith("streaming drift arm"))
         assert line.endswith("identical=True"), (run_id, line)
+
+
+def test_job_reads_stats_history_once_per_run(spark, tmp_path):
+    """A run with a baseline reads the stats history in one SQL execution:
+    ``latest_baselines`` collects the newest snapshot once, and the PSI
+    violation, the streaming arm and its batch comparison all use those
+    collected rows (reading it lazily per baseline took five executions at
+    sf0.001)."""
+    store = _Store(spark)
+    out = str(tmp_path / "out")
+    _measured_run(spark, store, out, "seed")
+    stdout, _, execs, _ = _measured_run(spark, store, out, "r1")
+    assert "identical=True" in stdout
+
+    def scans_history(exec_id: int) -> bool:
+        # the history is the only table with a ``column`` field; its path
+        # may be cut from a scan's description
+        nodes = store.sql.planGraph(exec_id).allNodes()
+        return any(
+            nodes.apply(i).name().startswith("Scan parquet")
+            and "column:string" in nodes.apply(i).desc()
+            for i in range(nodes.size())
+        )
+
+    reading = [k for k in execs if scans_history(k)]
+    assert len(reading) <= 1, [execs[k].description() for k in reading]
