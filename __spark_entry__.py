@@ -286,7 +286,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
       copies +100000, 5 near-copies +200000 with 2 appended tokens, 2
       novel docs +300000) against the corpus snapshot's persisted
       indexes. The oracle recomputes the ENTIRE pipeline from scratch:
-      normalized fingerprints, all 16 seeded-md5 minhashes, the 4 banded
+      normalized fingerprints, all 16 md5-affine minhashes, the 4 banded
       bucket keys (sentinel for shingle-less docs), the bucket cap, the
       band-collision candidate set, exact-Jaccard verification, and the
       (max jaccard, min id) best-match tie-break — so this single row
@@ -1486,6 +1486,19 @@ def _kmeans_ctes(k: int, iters: int, dim: int) -> str:
     return ",\n".join(parts)
 
 
+def _minhash_sql(shl: str, i: int) -> str:
+    """DuckDB mirror of slot i of operators/dedup's md5 MinHash family,
+    derived from its definition: h = md5-prefix('mh|' || s) mod p per
+    shingle, slot i = min over shingles of (a_i * h + b_i) mod p, with
+    p = 2^31 - 1, a_i = 1 + md5-prefix('mha|i') mod (p - 1) and
+    b_i = md5-prefix('mhb|i') mod p. NULL for an empty shingle list."""
+    p = (1 << 31) - 1
+    a = f"(1 + {_hash64_sql(repr(str(i)), 'mha')} % {p - 1})"
+    b = f"({_hash64_sql(repr(str(i)), 'mhb')} % {p})"
+    hs = f"list_transform({shl}, s -> {_hash64_sql('s', 'mh')} % {p})"
+    return f"list_min(list_transform({hs}, h -> ({a} * h + {b}) % {p}))"
+
+
 def _bandkeys_sql(shl: str, num_hashes: int = 16, bands: int = 4) -> str:
     """DuckDB mirror of operators/dedup._band_keys: the list of per-band
     bucket keys ('-'-joined minhash strings), sentinel-filled for
@@ -1493,7 +1506,7 @@ def _bandkeys_sql(shl: str, num_hashes: int = 16, bands: int = 4) -> str:
     init sentinels)."""
     rows = num_hashes // bands
     sigs = [
-        f"COALESCE(list_min(list_transform({shl}, s -> {_hash64_sql('s', f'mh{i}')})), 4611686018427387904)"
+        f"COALESCE({_minhash_sql(shl, i)}, 4611686018427387904)"
         for i in range(num_hashes)
     ]
     keys = [
@@ -1850,7 +1863,7 @@ FROM d WHERE source NOT IN ('src0', 'src1', 'src2') OR source IS NULL
         # two arms. 'groups': the sf corpus has no natural byte-duplicate
         # groups, so the planted +100000 copies are the exact answer.
         # 'incremental': the FULL cross-snapshot pipeline recomputed from
-        # scratch — fingerprints, 16 seeded-md5 minhashes, 4 band keys,
+        # scratch — fingerprints, 16 md5-affine minhashes, 4 band keys,
         # the bucket cap, band collisions, exact-Jaccard verification and
         # the (max jaccard, min id) best-match tie-break.
         "q_exact_dedup": f"""
@@ -2278,11 +2291,7 @@ FROM d
         "q_combined_signatures": _simhash_cte(50) + f""", mbase AS (
   SELECT doc_id AS id, {_shingles_sql(_TOKS)} AS shl FROM documents WHERE doc_id < 50
 ), mh AS (
-  SELECT id,
-    list_min(list_transform(shl, s -> {_hash64_sql('s', 'mh0')})) AS mh0,
-    list_min(list_transform(shl, s -> {_hash64_sql('s', 'mh1')})) AS mh1,
-    list_min(list_transform(shl, s -> {_hash64_sql('s', 'mh2')})) AS mh2,
-    list_min(list_transform(shl, s -> {_hash64_sql('s', 'mh3')})) AS mh3
+  SELECT id, {", ".join(f"{_minhash_sql('shl', i)} AS mh{i}" for i in range(4))}
   FROM mbase
 )
 SELECT mh.id, mh0, mh1, mh2, mh3, sh.simhash

@@ -15,13 +15,15 @@ Four tiers, cheapest-first, all DataFrame-native:
 4. **SimHash** — 32-bit majority-bit fingerprint; identical fingerprints (or
    small Hamming distance) = near-dup candidates.
 
-Hashes are the md5-prefix bigints of functions/text.py, so every operator
+Hashes are the md5-prefix bigints of functions/text.py: SimHash hashes
+each token, and MinHash hashes each shingle once and derives its
+permutations as (a_i * h + b_i) mod 2^31 - 1 (_hasher), so every operator
 here has an exact DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from functools import reduce
+import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -58,76 +60,107 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, shingles, sig[num_hashes]) — MinHash over word-k-shingles.
 
-    sig_i = min over shingles of hash64(seed_i | shingle). One projection,
-    no shuffle; at 10^12 docs this is the map stage of the LSH pipeline."""
-    # round-4: a compacted small corpus arrives as 1-2 splits and this
-    # md5-heavy projection serialized onto one core (measured 5.2s vs 0.6s
-    # at sf0.1 local[32]); no-op at production split counts
+    sig_i = min over shingles of the i-th hash of the family (_minhash_fold);
+    NULL when the doc has no shingles. One projection, no shuffle; at
+    10^12 docs this is the map stage of the LSH pipeline."""
+    # a compacted small corpus arrives as 1-2 splits, and this hash-heavy
+    # projection would then run on one core; a no-op at production split
+    # counts
     df = ensure_parallelism(df)
     sh = word_shingles(F.col(text_col), shingle_k)
     sig = F.when(F.size(sh) > 0, _minhash_sig(sh, num_hashes, hash_impl=hash_impl))
     return df.select(F.col(id_col).alias("id"), sh.alias("shingles"), sig.alias("sig"))
 
 
-_SENTINEL = 1 << 62  # > any 60-bit md5-prefix hash; a plain EMPTY marker
-_SENTINEL_FULL = (1 << 63) - 1  # Long.MAX — xxhash64 spans the full signed
-# 64-bit range, so 1<<62 is NOT an upper bound for it: a slot whose true
-# min exceeded 2^62 was clamped to the sentinel (prob 1/4 per slot for
-# single-shingle docs), inflating false band collisions (ADVICE r06). No
-# verdict was ever wrong (verification is exact Jaccard), but the xxhash64
-# signature VALUES change with this fix — rebuild xxhash64 indexes; the
-# md5 oracle family keeps its exact 1<<62 sentinel.
+_P = (1 << 31) - 1  # Mersenne prime: the md5 family's hash field
+_SENTINEL = 1 << 62  # > every md5-family value (all < _P); an EMPTY marker
+# xxhash64 spans the full signed 64-bit range, so 1<<62 is not an upper
+# bound for it: its fold starts at Long.MAX, or a slot whose true min
+# exceeds 2^62 would clamp to the sentinel and collide falsely in a band
+_SENTINEL_FULL = (1 << 63) - 1
 
 
 def _sentinel(hash_impl: str) -> int:
     return _SENTINEL if hash_impl == "md5" else _SENTINEL_FULL
 
 
+def _affine(i: int) -> tuple[int, int]:
+    """(a_i, b_i) of the md5 family's i-th permutation, a_i in [1, p) and
+    b_i in [0, p): fixed constants derived from the same 60-bit md5 prefix
+    as stable_hash64, a_i = 1 + H("mha|i") mod (p - 1), b_i = H("mhb|i")
+    mod p, so any engine can re-derive them (the DuckDB oracles do)."""
+
+    def prefix(seed: str) -> int:
+        return int(hashlib.md5(f"{seed}|{i}".encode()).hexdigest()[:15], 16)
+
+    return 1 + prefix("mha") % (_P - 1), prefix("mhb") % _P
+
+
 def _hasher(hash_impl: str):
-    """Per-shingle hash family. 'md5' (default everywhere) is the
-    engine-portable form every DuckDB gate oracle recomputes exactly.
-    'xxhash64' is the production lever: the JVM-intrinsic full-range
-    hash measured 5.7x faster on the 2M-doc 16-hash signature pass
-    (104 s -> 18 s, BASELINE.md round-6) — same LSH semantics (exact
-    Jaccard verification is hash-free), different signatures, so the
-    build and every probe must agree on the impl."""
+    """(per-shingle values of a shingle array, slot i of one value) of a
+    MinHash family. The fold binds each value as a lambda variable, so a
+    value is computed once per shingle whatever num_hashes is.
+
+    'md5' (default everywhere) is the classic universal-hash MinHash:
+    h = stable_hash64(s, "mh") mod p with p = 2^31 - 1, slot i =
+    (a_i * h + b_i) mod p. Every product stays below 2^62, so the
+    arithmetic is exact in a bigint (ANSI mode, DuckDB BIGINT) and every
+    DuckDB gate oracle recomputes it exactly. 'xxhash64' hashes the
+    shingle once per slot with the JVM-intrinsic full-range hash (seed i).
+    Band-key fold alone (4 cores, 48k distinct docs of ~56 shingles, 16
+    hashes in 8 bands, noop sink, warm): md5 4.5-5.5 s, xxhash64
+    3.9-4.3 s, and one seeded md5 per slot instead of the affine slots
+    15-18 s. Both have the same LSH semantics (verification is exact
+    Jaccard, hash-free) but different signatures, so an index build and
+    every probe must agree on the impl."""
     if hash_impl == "md5":
-        return lambda s, i: stable_hash64(s, seed=f"mh{i}")
+
+        def slot(h: Column, i: int) -> Column:
+            a, b = _affine(i)
+            return (F.lit(a) * h + F.lit(b)) % _P
+
+        return (lambda sh: F.transform(sh, lambda s: stable_hash64(s, seed="mh") % _P)), slot
     if hash_impl == "xxhash64":
-        return lambda s, i: F.xxhash64(s, F.lit(i))
+        return (lambda sh: sh), (lambda s, i: F.xxhash64(s, F.lit(i)))
     raise ValueError(f"unknown hash_impl {hash_impl!r} (md5 | xxhash64)")
 
 
-def _minhash_sig(sh: Column, num_hashes: int, hash_impl: str = "md5") -> Column:
-    """All num_hashes minhashes in ONE pass over the shingle array.
+def _minhash_fold(sh: Column, num_hashes: int, hash_impl: str, finish=None) -> Column:
+    """All num_hashes minhashes in ONE pass over the shingle array — the one
+    definition of the signature, shared by _minhash_sig and _band_keys.
 
-    PERF: the naive ``array(array_min(transform(sh, h_i)) for i)`` embeds
-    num_hashes COPIES of the shingle expression — projection collapse plus
-    the lack of CSE across higher-order-function lambdas re-tokenizes the
-    document once per hash (measured 17x slowdown). Instead: one transform
-    computes all hashes per shingle, one aggregate folds element-wise mins
-    (lambda VARIABLES are bound once, so ``acc`` references are free)."""
-    h = _hasher(hash_impl)
-    hashed = F.transform(
-        sh, lambda s: F.array(*[h(s, i) for i in range(num_hashes)])
-    )
+    PERF: Spark does no common-subexpression elimination inside
+    higher-order-function lambdas, and projection collapse inlines the
+    shingle expression into each reference, so ``array(array_min(
+    transform(sh, h_i)) for i)`` would re-tokenize the document once per
+    hash (measured 17x slower). Instead one aggregate folds the
+    per-shingle values: its merge lambda sees the accumulator and the
+    shingle's value as bound variables, so every slot reads them for
+    free. ``finish`` (optional) maps the final signature, again a bound
+    variable."""
+    values, slot = _hasher(hash_impl)
     init = F.array(*[F.lit(_sentinel(hash_impl)).cast("long")] * num_hashes)
     return F.aggregate(
-        hashed, init, lambda acc, hs: F.zip_with(acc, hs, lambda a, b: F.least(a, b))
+        values(sh),
+        init,
+        lambda acc, v: F.array(
+            *[F.least(F.get(acc, i), slot(v, i)) for i in range(num_hashes)]
+        ),
+        finish,
     )
+
+
+def _minhash_sig(sh: Column, num_hashes: int, hash_impl: str = "md5") -> Column:
+    return _minhash_fold(sh, num_hashes, hash_impl)
 
 
 def _band_keys(
     sh: Column, num_hashes: int, bands: int, hash_impl: str = "md5"
 ) -> Column:
-    """Array of per-band bucket keys, still in the same single pass: the
-    aggregate's finish lambda sees the signature as a bound variable."""
+    """Array of per-band bucket keys ('-'-joined signature slots), from the
+    same single fold: its finish lambda sees the signature as a bound
+    variable."""
     rows_per_band = num_hashes // bands
-    h = _hasher(hash_impl)
-    hashed = F.transform(
-        sh, lambda s: F.array(*[h(s, i) for i in range(num_hashes)])
-    )
-    init = F.array(*[F.lit(_sentinel(hash_impl)).cast("long")] * num_hashes)
 
     def finish(acc: Column) -> Column:
         return F.transform(
@@ -141,12 +174,7 @@ def _band_keys(
             ),
         )
 
-    return F.aggregate(
-        hashed,
-        init,
-        lambda acc, hs: F.zip_with(acc, hs, lambda a, b: F.least(a, b)),
-        finish,
-    )
+    return _minhash_fold(sh, num_hashes, hash_impl, finish)
 
 
 def _jaccard(a: Column, b: Column) -> Column:
@@ -173,8 +201,9 @@ def minhash_lsh_pairs(
     candidate (classic S-curve: P[candidate] = 1-(1-s^r)^b). Invariants:
 
     - **One fold per document.** The band keys come out of ONE aggregate
-      pass (_band_keys) fanned out by posexplode, and the banded frame is
-      consumed once: candidates come from a groupBy on the bucket, not a
+      pass (_band_keys) over a shingle array built once, with one md5 per
+      shingle, fanned out by posexplode; the banded frame is consumed
+      once: candidates come from a groupBy on the bucket, not a
       self-join, so the md5 fold never depends on Spark reusing an
       exchange across join branches.
     - **Ids-only bucket exchange.** The (band, bkey) shuffle carries the
@@ -195,11 +224,19 @@ def minhash_lsh_pairs(
       than ``shingle_k`` tokens get no band keys (minhash_signatures gives
       them a NULL signature), so they are never candidates: with
       ``threshold <= 0`` their Jaccard-0 pairs are not emitted."""
-    sh = word_shingles(F.col(text_col), shingle_k)
-    keys = _band_keys(sh, num_hashes, bands, hash_impl=hash_impl)
+    # the shingle array is bound once as a lambda variable: an unbound one
+    # is computed twice per doc, by the size check and by the fold
+    keys = F.get(
+        F.transform(
+            F.array(word_shingles(F.col(text_col), shingle_k)),
+            lambda sh: F.when(
+                F.size(sh) > 0, _band_keys(sh, num_hashes, bands, hash_impl=hash_impl)
+            ),
+        ),
+        0,
+    )
     banded = ensure_parallelism(df).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.when(F.size(sh) > 0, keys)).alias("band", "bkey"),
+        F.col(id_col).alias("id"), F.posexplode(keys).alias("band", "bkey")
     )
     cand = (
         banded.groupBy("band", "bkey")
@@ -245,8 +282,8 @@ def minhash_lsh_pairs(
 def _length_band(text_col: str) -> Column:
     """The token-count blocking band (16-token bins) — ONE definition shared
     by _ngram_blocked and the LSH-sweep's capped-doc selection so the two
-    can never diverge (review finding r03: a drifted copy would silently
-    select zero capped docs and lose hot-band near-dups)."""
+    can never diverge (a drifted copy would silently select zero capped
+    docs and lose hot-band near-dups)."""
     return (F.size(tokens(F.col(text_col))) / 16).cast("int")
 
 
@@ -277,7 +314,7 @@ def ngram_jaccard_pairs(
     (similar docs have similar lengths; all-pairs across the table is never
     run — each bucket is a self-join).
 
-    SCALE CONTRACT (round-2): the token-count bucket alone does NOT bound
+    SCALE CONTRACT: the token-count bucket alone does NOT bound
     bucket size — one dominant length band degenerates to an intra-bucket
     cross product. This operator is therefore the EXACT-VERIFICATION
     primitive; near-dup discovery at 10^12 docs routes through
@@ -333,10 +370,10 @@ def ngram_jaccard_pairs_with_lsh_sweep(
     both halves — the length-band blocking contract (similar docs have
     similar lengths) already accepts that."""
     # ONE bucket-counting aggregation serves BOTH the exact half's ok-list
-    # and the sweep's oversized list (review r03: calling the two public
-    # operators recomputed the identical full-corpus count twice); the
-    # blocked projection itself still re-derives per consumer — persisting
-    # 10^12 rows is not an option, materialize it to the lake instead
+    # and the sweep's oversized list (calling the two public operators
+    # would compute the identical full-corpus count twice); the blocked
+    # projection itself still re-derives per consumer — persisting 10^12
+    # rows is not an option, materialize it to the lake instead
     base = _ngram_blocked(df, text_col, id_col, shingle_k, True)
     counts = base.groupBy("lb").agg(F.count(F.lit(1)).alias("_bc"))
     ok = counts.where(F.col("_bc") <= max_bucket_rows).select("lb")
@@ -399,9 +436,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     ``bits`` ≤ 60 draws from one 60-bit stable_hash64; 61-64 draw the excess
     bits from a second independently-seeded hash (stable_hash64 is 15 hex
     chars of md5 — 60 bits — so a 64-bit fingerprint needs two). Default is
-    64 (round-2 VERDICT): with the Hamming-ball pair join's 4-block split,
-    32-bit fingerprints give only 4×2⁸ join keys — every bucket is
-    astronomically hot at 10⁹⁺ docs; 16-bit blocks give 4×65536."""
+    64: with the Hamming-ball pair join's 4-block split, 32-bit
+    fingerprints give only 4×2⁸ join keys — every bucket is astronomically
+    hot at 10⁹⁺ docs; 16-bit blocks give 4×65536."""
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
     df = ensure_parallelism(df)
@@ -454,8 +491,8 @@ def _simhash_of_tokens(toks: Column, bits: int) -> Column:
         # path would ANSI-overflow at bit 63), so bit 63's literal is
         # Long.MIN_VALUE and the fold is OR, never arithmetic. The n > 0
         # guard keeps zero-token docs at simhash 0 — without it the vacuous
-        # majority vote (0*2 >= 0) set EVERY bit, diverging from the DuckDB
-        # oracle's NULL-sum → 0 rendering (review finding r03)
+        # majority vote (0*2 >= 0) would set EVERY bit, diverging from the
+        # DuckDB oracle's NULL-sum → 0 rendering
         return F.aggregate(
             F.array(
                 *[
@@ -484,9 +521,9 @@ def combined_signatures(
     bits: int = 64,
 ) -> DataFrame:
     """(id, sig, simhash) — MinHash and SimHash signatures in ONE projection
-    over ONE tokenize pass (round-4, VERDICT r03 item 6: curation with
-    simhash tiering needs both, and running the standalone operators
-    re-splits and re-filters every document twice).
+    over ONE tokenize pass (curation with simhash tiering needs both, and
+    running the standalone operators would re-split and re-filter every
+    document twice).
 
     The token array is bound ONCE as a lambda variable (the module's
     no-CSE doctrine) and feeds both folds: shingles_of_tokens → the
@@ -495,12 +532,9 @@ def combined_signatures(
     same folds — pinned in tests), so LSH pair joins and Hamming-ball
     joins downstream are unchanged.
 
-    Measured (sf0.1, cached input, local[32], min-of-5): combined 1.67s vs
-    0.61 + 1.25 = 1.86s standalone — 0.89x the sum. The shared tokenize is
-    the ONLY shareable work under bit-identity: MinHash md5s shingles with
-    seeds mh0..n, SimHash md5s tokens with seeds sh/sh2 — disjoint hash
-    families by definition, so "cost ≈ max" would require redefining one
-    signature family (and breaking every persisted signature)."""
+    The shared tokenize is the ONLY shareable work under bit-identity:
+    MinHash md5s each shingle with seed mh, SimHash md5s each token with
+    seeds sh/sh2 — disjoint hash inputs by definition."""
     if not 1 <= bits <= 64:
         raise ValueError(f"bits must be in [1, 64], got {bits}")
     from json_schema_py_spark.functions.text import shingles_of_tokens
@@ -543,7 +577,6 @@ def _simhash_banded(
         if nbits >= 64:
             # full-width block (max_hamming=0 at bits=64): (1<<64)-1 is not
             # a long literal — the identity mask is all-ones = -1
-            # (review finding r03)
             return shifted
         return shifted.bitwiseAND(F.lit((1 << nbits) - 1))
 
@@ -568,16 +601,16 @@ def simhash_near_pairs(
     (block, value, id, simhash) — fingerprints only, ×(k+1); at 10^12 docs
     the block columns are what you'd bucketBy on the lake.
 
-    SCALE CONTRACT (round-2 VERDICT): the join-key space is
-    (k+1) × 2^(bits/(k+1)) — at the old 32-bit default that was 4×2⁸ = 1,024
-    keys, a de-facto cross product at 10⁹⁺ docs. Default is now 64-bit
-    fingerprints (4×65,536 keys at k=3), and ``max_bucket_rows`` enforces a
-    hard bound exactly like ngram_jaccard_pairs: (block, bval) buckets
-    larger than the cap are EXCLUDED from the join (pair work ≤ n_buckets ×
-    C(cap, 2)). A pair is still found if ANY of its agreeing blocks is
-    under the cap; audit the exclusions with simhash_oversized_buckets and
-    sweep capped regions with minhash_lsh_pairs. Uncapped, recall is exact
-    by pigeonhole (pinned vs brute-force Hamming truth in the gate)."""
+    SCALE CONTRACT: the join-key space is (k+1) × 2^(bits/(k+1)) — at
+    32-bit fingerprints that is 4×2⁸ = 1,024 keys, a de-facto cross product
+    at 10⁹⁺ docs. Default is 64-bit fingerprints (4×65,536 keys at k=3),
+    and ``max_bucket_rows`` enforces a hard bound exactly like
+    ngram_jaccard_pairs: (block, bval) buckets larger than the cap are
+    EXCLUDED from the join (pair work ≤ n_buckets × C(cap, 2)). A pair is
+    still found if ANY of its agreeing blocks is under the cap; audit the
+    exclusions with simhash_oversized_buckets and sweep capped regions
+    with minhash_lsh_pairs. Uncapped, recall is exact by pigeonhole
+    (pinned vs brute-force Hamming truth in the gate)."""
     banded = _simhash_banded(df, text_col, id_col, max_hamming, bits)
     if max_bucket_rows is not None:
         # distinct (block, bval) ≤ (k+1)·2^(bits/(k+1)) — bounded, broadcast
@@ -653,7 +686,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     nests every prior round (and the full upstream lineage of ``pairs``,
     e.g. the whole curation pipeline), so after a few rounds the plan
     tree alone OOMs the driver while Spark renders it for UI/listener
-    events (observed at 2M docs composed in curate_documents, round 6).
+    events (observed at 2M docs composed in curate_documents).
     Checkpointing truncates lineage to the materialized RDD, keeping
     every round's plan O(1) regardless of how deep the caller's plan is.
     ``localCheckpoint`` stores to executor memory/disk, not a reliable

@@ -41,14 +41,17 @@ Scale shape (100 TB doctrine):
     dedup.exact_duplicates / minhash_lsh_pairs on the batch itself);
     this operator answers "is it already in the lake".
 
-Deterministic seeded-md5 MinHash end to end (default) → the whole pipeline
-has an exact DuckDB oracle (gate query q_exact_dedup 'incremental' arm
-recomputes fingerprints, signatures, band keys, collisions, Jaccard, and
-best-match tie-breaks from scratch). ``hash_impl="xxhash64"`` swaps the
-signature family for the JVM-intrinsic hash — 5.7x faster index builds at
-2M docs with identical verdict SEMANTICS (verification is exact Jaccard);
-the build parameters are bound to the index as column metadata and probes
-with mismatched parameters raise instead of silently finding nothing.
+Deterministic md5 MinHash end to end (default; operators/dedup._hasher:
+one md5 per shingle, affine permutations mod 2^31 - 1) → the whole
+pipeline has an exact DuckDB oracle (gate query q_exact_dedup
+'incremental' arm recomputes fingerprints, signatures, band keys,
+collisions, Jaccard, and best-match tie-breaks from scratch).
+``hash_impl="xxhash64"`` swaps the signature family for the JVM-intrinsic
+hash, with identical verdict SEMANTICS (verification is exact Jaccard).
+The build parameters and the family's version are bound to the index as
+column metadata, and probes or merges with mismatched parameters, or
+against an index of an older version of the family, raise instead of
+silently finding nothing.
 
 Reference parity note: the reference validator (json-schema-py) has no
 cross-snapshot surface — training-data-pipeline extension per SURVEY.md §2.
@@ -62,6 +65,12 @@ from pyspark.sql import functions as F
 from json_schema_py_spark.functions.text import text_fingerprint, word_shingles
 from json_schema_py_spark.operators.dedup import _band_keys, _jaccard
 from json_schema_py_spark.util import collapse_mode, ensure_parallelism, text_units
+
+# Version of each MinHash family's signature definition, stamped into a
+# band index's metadata. md5 version 2 hashes each shingle once and derives
+# the permutations arithmetically (operators/dedup._hasher); version 1 ran
+# one seeded md5 per permutation.
+FAMILY_VERSION = {"md5": 2, "xxhash64": 1}
 
 
 def corpus_index(
@@ -79,12 +88,14 @@ def corpus_index(
     Both are id-only; write band_index bucketed by (band, bkey).
 
     ``hash_impl``: 'md5' (default, the DuckDB-oracle-parity form) or
-    'xxhash64' — the production build: 5.7x faster signatures at 2M docs
-    (BASELINE.md), identical verdict semantics (verification is
-    exact Jaccard, hash-free). The build parameters ride along as column
-    metadata on ``bkey`` and incremental_dedup REFUSES a probe whose
-    parameters disagree — a mismatched probe would silently find nothing
-    (as a mismatched CMS width/depth would in operators/contamination.py).
+    'xxhash64' — identical verdict semantics (verification is exact
+    Jaccard, hash-free); operators/dedup._hasher records their measured
+    speeds (the md5 family is within about 30% of xxhash64). The build
+    parameters and ``family_version`` (FAMILY_VERSION[hash_impl]) ride
+    along as column metadata on ``bkey``, and incremental_dedup and
+    merge_index REFUSE an index whose parameters or family version
+    disagree — a mismatched probe would silently find nothing (as a
+    mismatched CMS width/depth would in operators/contamination.py).
 
     ``collapse`` (util.collapse_mode): fingerprints and band keys are
     pure functions of the text, so both tiers are computed once per text
@@ -117,6 +128,7 @@ def corpus_index(
                 "num_hashes": num_hashes,
                 "bands": bands,
                 "shingle_k": shingle_k,
+                "family_version": FAMILY_VERSION[hash_impl],
             },
         )
         .repartition("band", "bkey")
@@ -130,9 +142,12 @@ def corpus_index(
 
 def _check_band_meta(band_index: DataFrame, asked: dict) -> None:
     """Refuse hash/banding parameters that disagree with what the index
-    was BUILT with (bound as bkey column metadata by corpus_index) — a
-    mismatch silently generates disjoint keys and verdicts every doc
-    'new'. Hand-built indexes without metadata skip the check."""
+    was BUILT with (bound as bkey column metadata by corpus_index), and an
+    index built with another version of its hash family — either
+    silently generates disjoint keys and verdicts every doc 'new'. An
+    index whose metadata names a ``hash_impl`` but no ``family_version``
+    predates versioning: version 1. Hand-built indexes without metadata
+    skip the check."""
     meta = band_index.schema["bkey"].metadata if "bkey" in band_index.columns else {}
     if not meta:
         return
@@ -142,6 +157,15 @@ def _check_band_meta(band_index: DataFrame, asked: dict) -> None:
             f"band-index probe/merge parameters {asked} do not match the "
             f"index build {built}: the mismatched keys would silently "
             f"match nothing — rebuild the index or fix the arguments"
+        )
+    impl = meta.get("hash_impl")
+    version = meta.get("family_version", 1)
+    if impl in FAMILY_VERSION and version != FAMILY_VERSION[impl]:
+        raise ValueError(
+            f"band index was built with version {version} of the {impl!r} "
+            f"MinHash family, this engine computes version "
+            f"{FAMILY_VERSION[impl]}: its keys would silently match "
+            f"nothing — rebuild the index"
         )
 
 

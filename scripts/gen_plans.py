@@ -84,7 +84,9 @@ def main() -> int:
         ),
         (
             "MinHash-LSH near-dup pairs",
-            "The md5 band-key fold runs once per document: ONE Generate "
+            "The md5 band-key fold runs once per document and hashes each "
+            "shingle once (ONE md5 call; the 16 permutations are affine "
+            "arithmetic on that value): ONE Generate "
             "posexplode feeds ONE (band, bkey) groupBy, whose exchange "
             "carries ids only — no text or shingles ride a table-sized "
             "shuffle, and no self-join branch re-evaluates the fold. Each "
@@ -94,8 +96,9 @@ def main() -> int:
             "shingles are built only for the matched rows, and one "
             "candidate-sized aggregate zips sh_a with sh_b before the exact "
             "Jaccard verify. Asserted in tests/test_plan_shapes.py::"
-            "test_lsh_band_exchange_carries_ids_only and "
-            "::test_lsh_band_fold_runs_once_and_shingles_only_candidates.",
+            "test_lsh_band_exchange_carries_ids_only, "
+            "::test_lsh_band_fold_runs_once_and_shingles_only_candidates and "
+            "::test_lsh_band_fold_hashes_each_shingle_once.",
             minhash_lsh_pairs(docs),
         ),
     ]

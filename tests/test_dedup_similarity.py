@@ -312,6 +312,49 @@ def test_lsh_bucket_groupby_matches_direct_self_join(spark):
         assert len(want) >= 24 * 23 // 2  # the variant family pairs up
 
 
+def test_minhash_md5_family_matches_python_recomputation(spark):
+    """Identity: minhash_signatures' md5 family ≡ its definition recomputed
+    in pure Python — one md5 per shingle (first 15 hex digits of
+    md5("mh|" + shingle), mod p = 2^31 - 1), then slot i = min over
+    shingles of (a_i * h + b_i) mod p with a_i = 1 + md5-prefix("mha|i")
+    mod (p - 1), b_i = md5-prefix("mhb|i") mod p. Covers NULL text, "",
+    a doc under 3 tokens and repeated shingles; every value is below p."""
+    import hashlib
+
+    from json_schema_py_spark.operators.dedup import minhash_signatures
+
+    p = (1 << 31) - 1
+
+    def prefix(s: str) -> int:
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+    coeffs = [(1 + prefix(f"mha|{i}") % (p - 1), prefix(f"mhb|{i}") % p) for i in range(16)]
+    assert all(1 <= a < p and 0 <= b < p for a, b in coeffs)
+    texts = {
+        0: None,
+        1: "",
+        2: "two words",
+        3: "x y z x y z x y z x y z",  # every shingle repeats
+        4: "alpha beta gamma delta epsilon zeta eta theta",
+        5: "  spaced   out  tokens here  ",
+        6: "the quick brown fox jumps over the lazy dog " * 5,
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r["id"]: r["sig"] for r in minhash_signatures(docs).collect()}
+    assert got.keys() == texts.keys()
+    for i, text in texts.items():
+        toks = [t for t in (text or "").split(" ") if t]
+        shingles = [" ".join(toks[j : j + 3]) for j in range(len(toks) - 2)]
+        if not shingles:
+            assert got[i] is None, i
+            continue
+        hs = [prefix(f"mh|{s}") % p for s in shingles]
+        want = [min((a * h + b) % p for h in hs) for a, b in coeffs]
+        assert got[i] == want, i
+        assert all(0 <= v < p for v in got[i]), i
+    assert got[0] is None and got[1] is None and got[2] is None
+
+
 def test_simhash_near_pairs_exact_vs_bruteforce(spark):
     """Block-partitioned Hamming-ball join: the pigeonhole blocking is
     EXACT (distance ≤ k ⇒ one block agrees), so pairs equal brute force."""

@@ -136,6 +136,49 @@ def test_incremental_xxhash_impl_same_verdicts_and_mismatch_guard(spark):
         merge_index(exact, band, batch)
 
 
+def test_band_index_of_an_older_md5_family_is_refused(spark):
+    """An md5 band index stamped before the family was versioned (its
+    metadata names hash_impl="md5" but no family_version) holds keys of the
+    old per-permutation md5 family: probing or merging it with today's
+    signatures would silently find nothing, so both raise. An index
+    without metadata still skips the check, and an xxhash64 index without
+    a version is its current family."""
+    import pytest
+
+    from json_schema_py_spark.operators.incremental import (
+        FAMILY_VERSION,
+        corpus_index,
+        incremental_dedup,
+        merge_index,
+    )
+
+    corpus = _corpus(spark)
+    batch = spark.createDataFrame(
+        [(102, LONG + " trailing extras appended")], "doc_id long, text string"
+    )
+    exact, band = corpus_index(corpus)
+    meta = band.schema["bkey"].metadata
+    assert meta["family_version"] == FAMILY_VERSION["md5"] == 2
+    old = {k: v for k, v in meta.items() if k != "family_version"}
+    old_band = band.withMetadata("bkey", old)
+    with pytest.raises(ValueError, match="version 1 of the 'md5' MinHash family"):
+        incremental_dedup(batch, corpus, exact, old_band)
+    with pytest.raises(ValueError, match="version 1 of the 'md5' MinHash family"):
+        merge_index(exact, old_band, batch)
+    # no metadata: hand-built, unchecked; the current index probes fine
+    for b in (band.withMetadata("bkey", {}), band):
+        got = incremental_dedup(batch, corpus, exact, b).collect()
+        assert [(r["verdict"], r["matched_id"]) for r in got] == [("near_dup", 0)]
+    _, xx = corpus_index(corpus, hash_impl="xxhash64")
+    xx_meta = xx.schema["bkey"].metadata
+    assert xx_meta["family_version"] == FAMILY_VERSION["xxhash64"] == 1
+    xx_unversioned = xx.withMetadata(
+        "bkey", {k: v for k, v in xx_meta.items() if k != "family_version"}
+    )
+    got = incremental_dedup(batch, corpus, exact, xx_unversioned, hash_impl="xxhash64")
+    assert [r["verdict"] for r in got.collect()] == ["near_dup"]
+
+
 def test_merge_index_equals_rebuild_and_closes_the_loop(spark):
     """merge_index(snapshot indexes, accepted batch) == full rebuild over
     snapshot ∪ batch, row for row; after the merge, re-probing the same

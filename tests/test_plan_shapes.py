@@ -205,6 +205,25 @@ def test_lsh_band_fold_runs_once_and_shingles_only_candidates(spark, tmp_path):
         assert shingling and all("id_a" in d and "id_b" in d for d in shingling), shingling
 
 
+def test_lsh_band_fold_hashes_each_shingle_once(spark, tmp_path):
+    """The md5 MinHash family hashes each shingle ONCE: the executed band
+    fold (the one posexplode Generate) holds a single md5 call, both
+    standalone and inside the curation write — the 16 permutations are
+    arithmetic on that one bound value, never 16 md5 chains."""
+    from json_schema_py_spark.operators.dedup import minhash_lsh_pairs
+    from json_schema_py_spark.plans.curation import curate_documents
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for action in (
+        lambda: minhash_lsh_pairs(docs).collect(),
+        lambda: curate_documents(docs).write.parquet(str(tmp_path / "verdicts")),
+    ):
+        nodes = _executed_nodes(spark, action)
+        folds = [d for n, d in nodes if n == "Generate" and "posexplode(" in d and "md5(" in d]
+        assert len(folds) == 1, folds
+        assert folds[0].count("md5(") == 1, folds[0]
+
+
 def test_bucketed_join_eliminates_shuffle(spark):
     """The 100 TB co-location doctrine made concrete: two tables bucketed on
     doc_id join WITHOUT any Exchange — the shuffle happened once at write
