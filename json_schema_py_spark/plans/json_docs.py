@@ -64,15 +64,16 @@ def validate_json_typed(
     """(doc_id, rule_id, path, observed) via from_json + the Column engine.
 
     MALFORMED raw text (fails try_parse_json) emits SCHEMA_INVALID at the
-    root, matching validate_json_exact (review r03: it previously nulled
-    out and silently passed — the typed path's documented null==absent
-    caveat is for WELL-FORMED JSON whose type doesn't fit the frozen
-    schema, not for parse failures)."""
+    root, matching validate_json_exact, instead of nulling out and silently
+    passing — the typed path's documented null==absent caveat is for
+    WELL-FORMED JSON whose type doesn't fit the frozen schema, not for
+    parse failures."""
     from json_schema_py_spark.schema.compiler import (
-        VIOLATION_TYPE,
         RuleBinder,
-        _empty,
+        Typed,
         _viol,
+        explode_violations,
+        gated_document,
     )
 
     rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
@@ -105,9 +106,9 @@ def validate_json_typed(
         # directly; root path stays "" so pointers match the exact path.
         # from_json only accepts struct/array/map roots, so a SCALAR root is
         # parsed by wrapping the raw text as {"v": <raw>} into struct<v:T>
-        # and binding at the field (ADVICE r01: bare {'type':'integer'} roots
-        # previously failed analysis with INVALID_JSON_SCHEMA).
-        bound = RuleBinder().bind(rule, spark_t)
+        # and binding at the field (a bare {'type':'integer'} root handed to
+        # from_json fails analysis with INVALID_JSON_SCHEMA).
+        bound = RuleBinder().bind(rule, Typed(spark_t))
         if isinstance(spark_t, (T.ArrayType, T.MapType)):
             parsed_col = F.from_json(F.col(json_col), spark_t)
         else:
@@ -115,7 +116,7 @@ def validate_json_typed(
             wrapped = F.concat(F.lit('{"v":'), F.col(json_col), F.lit("}"))
             # guard: raw text that is NOT valid standalone JSON can become
             # valid after wrapping ('1,"x":2' -> {"v":1,"x":2}), silently
-            # validating malformed input (ADVICE r02). Only accept the
+            # validating malformed input. Only accept the
             # wrapped parse when the raw text parses on its own.
             parsed_col = F.when(
                 F.try_parse_json(F.col(json_col)).isNotNull(),
@@ -128,24 +129,11 @@ def validate_json_typed(
             F.when(malformed, bad_viols).alias("__sg_bad_viols"),
         )
         doc = F.col("d")
-        v = F.get(
-            F.transform(
-                F.array(doc),
-                lambda row: F.when(bound.fires(row), bound.viol(row, F.lit(""))).otherwise(
-                    _empty()
-                ),
-            ),
-            0,
-        )
+        v = F.get(F.transform(F.array(doc), lambda row: gated_document(bound, row)), 0)
         exploded = parsed.withColumn(
             "violations", F.when(F.col("__sg_bad"), F.col("__sg_bad_viols")).otherwise(v)
         )
-    return exploded.select("doc_id", F.explode("violations").alias("v")).select(
-        "doc_id",
-        F.col("v.rule_id").alias("rule_id"),
-        F.col("v.path").alias("path"),
-        F.col("v.observed").alias("observed"),
-    )
+    return explode_violations(exploded, "doc_id", "violations")
 
 
 def _iter_patterns(rule: Rule):
@@ -245,7 +233,7 @@ def validate_json_exact(
 
     # small/compacted parquet = 1-2 splits → 1-2 PYTHON WORKERS; the
     # round-robin repartition is a no-op at production partition counts
-    # (round-3; streaming frames pass through untouched)
+    # (streaming frames pass through untouched)
     return ensure_parallelism(df.select(key_col, json_col)).mapInPandas(
         batches, out_schema
     )

@@ -9,38 +9,29 @@ wrong-typed values produce real TYPE_ERRORs — the exact path's dynamic-type
 semantics entirely JVM-side. (reference analogue: the per-document dynamic
 interpreter, json_schema/validator.py:31-108 — re-realized as expressions.)
 
-When to choose it (measured sf0.1 events, 100k small docs, local[32],
-interleaved A/B min-of-6 — this host is noisy, see BASELINE.md): on a
-CLEAN corpus (the 10^12-scale regime) the variant path now matches the
-exact pandas path — 0.51s vs 0.52s (0.97x) after the round-4 lifts:
-string-key fast path for propertyNames (direct RLIKE/length on the key
-instead of to_json→parse_json→variant_get per key), open-object
-extra-entries without the constant-true filter wrap, a compiled-Column
-cache (the binder build is ~0.9s of serial driver py4j; one build per
-process serves every call via the compiler's cache), and
-ensure_parallelism (see the note at validate_json_variant). At a hostile
-50% violation rate the exact path is still ~2.4x faster (0.61s vs 1.44s)
-even after element-level viol gating (clean entries inside flagged docs
-skip violation construction — ~4% here since flagged docs are small;
-grows with doc width): the HOF expression tree runs codegen-fallback
-(interpreted) while CPython's per-doc walk is cheap for small
-documents. The variant path wins operationally, not per-row: no
-Python workers (no executor memory split, no Arrow hop), it composes
-into the same whole-stage plan as adjacent Column work, states
-Iceberg/Delta variant-column inputs natively (validate WITHOUT
-re-serializing to JSON strings), and its allocation-free boolean gate
-skips violation construction for clean documents. For
+The rule tree is walked by the same binder as the typed path
+(schema/compiler.RuleBinder); this module supplies its value model,
+``Variant``: a runtime ``schema_of_variant`` token bound once per node,
+values read with ``try_variant_get``.
+
+When to choose it: on a clean corpus the variant path runs at about the
+speed of the exact pandas path; on violation-heavy corpora the exact path
+is faster, because the HOF expression tree runs codegen-fallback
+(interpreted) while CPython's per-doc walk of a small document is cheap.
+The variant path wins operationally, not per-row: no Python workers (no
+executor memory split, no Arrow hop), it composes into the same
+whole-stage plan as adjacent Column work, reads Iceberg/Delta variant
+columns natively (validate_variant: no re-serialization to JSON strings),
+and its allocation-free boolean gate skips violation construction for
+clean documents and for clean elements/entries inside flagged ones. For
 CPython-regex/str()-corner parity the exact path remains the arbiter
 (validate_json_auto routes).
 
-Shredded variant parquet (round-3 experiment, pinned in
-test_variant_binder_on_shredded_parquet): this Spark reads shredded
-variants (spark.sql.variant.allowReadingShredded=true); the binder
-validates shredded tables identically and ~6% faster than the plain
-encoding at sf0.1, and BOTH beat re-parsing JSON strings per pass.
-Shredding pays most for direct '$.key' accesses (pushed into the
-shredded columns) — an additionalProperties full-object walk cannot
-exploit it, a properties-keyed schema can.
+Shredded variant parquet (pinned in test_variant_binder_on_shredded_parquet):
+Spark reads shredded variants (spark.sql.variant.allowReadingShredded=true)
+and the binder validates them identically to the plain encoding. Shredding
+pays most for direct '$.key' accesses (pushed into the shredded columns) —
+an additionalProperties full-object walk cannot exploit it.
 
 Type mapping (CPython json.loads parity): variant BIGINT ⇔ int, DECIMAL/
 DOUBLE ⇔ float (so ``1.0`` is a JSON number, never an integer — matching
@@ -74,21 +65,26 @@ from pyspark.sql import types as T
 from json_schema_py_spark.errors import ErrorCode
 from json_schema_py_spark.schema.compiler import (
     VIOLATION_TYPE,
+    Bound,
+    RuleBinder,
+    _assemble_fires,
+    _assemble_viols,
+    _cached_compile,
+    _child,
+    _compile_cache_key,
     _empty,
-    _escape_pointer_token,
-    _key_path,
-    _maybe,
     _viol,
+    explode_violations,
+    gated_document,
 )
 from json_schema_py_spark.schema.model import Rule, normalize_schema
 
+
 def _sch(v: Column) -> Column:
     """The variant's runtime schema string — the ONE type-dispatch token
-    bound per node. The predicates below read it DIRECTLY; round 2 first
-    rendered a JSON-type-name token from it (an 8-branch when-chain of
-    string compares) and then compared THAT token per keyword — two
-    dispatch layers where one suffices (round-3 perf lift; the rlike
-    DECIMAL classifier is now an isin over 20 literals, too).
+    bound per node. The predicates below read it directly (one dispatch
+    layer, no intermediate JSON-type-name token); the big-integer DECIMAL
+    classifier is an isin over 20 literals.
 
     Numeric mapping (empirical, Spark 4.1 parse_json): integer literals
     ≤ int64 → BIGINT; integer literals ABOVE int64 → DECIMAL(p≥19, 0);
@@ -143,7 +139,7 @@ def _is_number(sch: Column) -> Column:
 
 def _is_string(sch: Column) -> Column:
     """STRING plus the catch-all: unknown runtime schemas classify as
-    string, matching the old token chain's otherwise branch."""
+    string."""
     return ~(
         _is_object(sch)
         | _is_array(sch)
@@ -212,673 +208,95 @@ def _eq_value(v: Column, jt: Column, target: Any) -> Column:
     )
 
 
-_FLOAT_TOL = 1e-10
+class Variant:
+    """Value model of a VARIANT value (schema/compiler.Typed is the other).
 
+    The node's type token ``t`` is ``schema_of_variant``, bound ONCE per
+    node as a lambda variable (expressions have no CSE); every family gate
+    is a runtime predicate over it and values are read with
+    ``try_variant_get``. A variant is never SQL-NULL inside the tree: a
+    JSON null is a VOID value the child binding validates itself."""
 
-def _assemble_viols(seq, invoke) -> Column:
-    """ONE assembly algorithm for every entry list: runs of consecutive
-    checks collapse into a single filtered array, child arrays concat in
-    place (emission order preserved). ``invoke`` binds the entry's viol
-    side to its arguments — (v, jt, path) at a node, (m, path) inside an
-    object — so node and object assembly share this code."""
-    arrs: list[Column] = []
-    pending: list = []
+    jt = None  # no static JSON type
+    unroll_limit = 0  # each F.get would re-read the array from the variant
+    gate_items = True  # a clean element skips violation construction
 
-    def flush() -> None:
-        if pending:
-            arrs.append(
-                F.filter(
-                    F.array(*[invoke(e) for e in pending]).cast(VIOLATION_TYPE),
-                    lambda x: x.isNotNull(),
-                )
-            )
-            pending.clear()
-
-    for kind, viol_side, _fires_side in seq:
-        if kind == "check":
-            pending.append(viol_side)
-        else:
-            flush()
-            arrs.append(invoke(viol_side))
-    flush()
-    return arrs[0] if len(arrs) == 1 else (F.concat(*arrs) if arrs else _empty())
-
-
-def _assemble_fires(seq, invoke) -> Column:
-    conds = [invoke(fires_side) for _k, _v, fires_side in seq]
-    return reduce(lambda a, b: a | b, conds) if conds else F.lit(False)
-
-
-class VariantBinder:
-    """pyeval.evaluate re-realized as Column expressions over variant values.
-
-    bind(rule) → (viol(v, path) -> array<violation>, fires(v) -> boolean);
-    ``v`` is a PRESENT variant value (possibly JSON null). Emission order
-    mirrors pyeval (type gate → enum/const → type-specific → object keywords
-    → logical ops); open-object key iteration follows the variant's sorted
-    key order (documented deviation).
-
-    Structure (static-binder doctrine, compiler.py): ONE ordered entry
-    sequence per node — ("check", emit(v,jt,path), cond(v,jt)) for leaves,
-    ("child", viol(v,jt,path), fires(v,jt)) for subtrees — from which BOTH
-    the allocation-free boolean fast path and the violation constructor
-    assemble, so their parity is structural, not by-convention. ``jt`` is
-    the node's runtime-type token, bound ONCE per node as a lambda variable
-    (schema_of_variant when-chain; expressions have no CSE)."""
-
-    def bind(self, rule: Rule):
-        seq = self._node_seq(rule)
-        gate = rule.types
+    def frame(self, types, entries: Callable[[], list]) -> Bound:
+        seq = entries()
 
         def viol(v: Column, path: Column) -> Column:
-            def with_jt(jt: Column) -> Column:
-                body = _assemble_viols(seq, lambda fn: fn(v, jt, path))
-                if gate is not None:
-                    terr = F.array(
-                        _viol(ErrorCode.TYPE_ERROR.value, path, _obs(v, jt))
-                    ).cast(VIOLATION_TYPE)
-                    body = F.when(_type_ok(jt, gate), body).otherwise(terr)
-                return body
+            def at(t: Column) -> Column:
+                body = _assemble_viols(seq, v, t, path)
+                if types is None:
+                    return body
+                terr = F.array(_viol(ErrorCode.TYPE_ERROR.value, path, _obs(v, t)))
+                return F.when(_type_ok(t, types), body).otherwise(terr.cast(VIOLATION_TYPE))
 
-            return F.get(F.transform(F.array(_sch(v)), with_jt), 0)
+            return F.get(F.transform(F.array(_sch(v)), at), 0)
 
         def fires(v: Column) -> Column:
-            def with_jt(jt: Column) -> Column:
-                body = _assemble_fires(seq, lambda fn: fn(v, jt))
-                if gate is not None:
-                    return F.when(_type_ok(jt, gate), body).otherwise(F.lit(True))
-                return body
+            def at(t: Column) -> Column:
+                body = _assemble_fires(seq, v, t)
+                return body if types is None else F.when(_type_ok(t, types), body).otherwise(F.lit(True))
 
-            return F.get(F.transform(F.array(_sch(v)), with_jt), 0)
+            return F.get(F.transform(F.array(_sch(v)), at), 0)
 
-        return viol, fires
+        return Bound(viol, fires)
 
-    # -------------- node entries (pyeval emission order) --------------
+    def family(self, name: str) -> Callable[[Column], Column]:
+        return _TYPE_PREDS[name]  # "number" admits integers; never booleans
 
-    def _node_seq(self, rule: Rule) -> list:
-        seq: list = []
+    def string(self, v: Column) -> Column:
+        return F.try_variant_get(v, "$", "string")
 
-        def check(cond, code: str, obs=None) -> None:
-            o = obs or _obs
-            seq.append(
-                (
-                    "check",
-                    lambda v, jt, path, c=cond, o=o, cd=code: _maybe(
-                        c(v, jt), cd, path, o(v, jt)
-                    ),
-                    cond,
-                )
-            )
+    def number(self, v: Column) -> Column:
+        return F.try_variant_get(v, "$", "double")
 
-        s_of = lambda v: F.try_variant_get(v, "$", "string")  # noqa: E731
-        d_of = lambda v: F.try_variant_get(v, "$", "double")  # noqa: E731
-        arr_of = lambda v: F.try_variant_get(v, "$", "array<variant>")  # noqa: E731
-        s_obs = lambda v, jt: s_of(v)  # noqa: E731
+    def array(self, v: Column) -> Column:
+        return F.try_variant_get(v, "$", "array<variant>")
 
-        # enum / const
-        if rule.enum is not None:
-            vals = list(rule.enum)
+    def obs(self, v: Column, t: Any = None) -> Column:
+        if t is None:  # a child value: bind its own token first
+            return F.get(F.transform(F.array(_sch(v)), lambda jt: _obs(v, jt)), 0)
+        return _obs(v, t)
 
-            def enum_cond(v, jt, vals=tuple(vals)):
-                if not vals:
-                    return F.lit(True)
-                return ~reduce(lambda a, b: a | b, [_eq_value(v, jt, e) for e in vals])
+    def miss(self, v: Column, t: Column, values: list) -> Column:
+        if not values:
+            return F.lit(True)
+        return ~reduce(lambda a, b: a | b, [_eq_value(v, t, e) for e in values])
 
-            check(enum_cond, ErrorCode.ENUM_MISMATCH.value)
-        if rule.const_set:
-            check(
-                lambda v, jt, t=rule.const: ~_eq_value(v, jt, t),
-                ErrorCode.CONST_MISMATCH.value,
-            )
+    def items(self) -> "Variant":
+        return self
 
-        # strings
-        if rule.min_length is not None:
-            check(
-                lambda v, jt, n=rule.min_length: _is_string(jt) & (F.length(s_of(v)) < n),
-                ErrorCode.STRING_TOO_SHORT.value, obs=s_obs,
-            )
-        if rule.max_length is not None:
-            check(
-                lambda v, jt, n=rule.max_length: _is_string(jt) & (F.length(s_of(v)) > n),
-                ErrorCode.STRING_TOO_LONG.value, obs=s_obs,
-            )
-        if rule.pattern is not None:
-            from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
+    values = items
 
-            jp = checked_java_pattern(rule.pattern)
-            if jp is None:  # Python-invalid: lazy SCHEMA_INVALID (reference)
-                check(lambda v, jt: _is_string(jt), ErrorCode.SCHEMA_INVALID.value, obs=s_obs)
-            else:
-                check(
-                    lambda v, jt, p=jp: _is_string(jt) & ~s_of(v).rlike(p),
-                    ErrorCode.PATTERN_MISMATCH.value, obs=s_obs,
-                )
+    def fields(self) -> None:
+        return None
 
-        # numbers (bool is never a number: jt dispatch already excludes it)
-        is_n = _is_numeric
-        if rule.minimum is not None:
-            lo, ex = float(rule.minimum), rule.exclusive_minimum
-            check(
-                lambda v, jt, lo=lo, ex=ex: is_n(jt)
-                & ((d_of(v) <= lo) if ex else (d_of(v) < lo)),
-                ErrorCode.NUMBER_TOO_SMALL.value,
-            )
-        if rule.maximum is not None:
-            hi, ex = float(rule.maximum), rule.exclusive_maximum
-            check(
-                lambda v, jt, hi=hi, ex=ex: is_n(jt)
-                & ((d_of(v) >= hi) if ex else (d_of(v) > hi)),
-                ErrorCode.NUMBER_TOO_LARGE.value,
-            )
-        if rule.multiple_of is not None:
-            k = float(rule.multiple_of)
+    def comparable(self, arr: Column) -> Column:
+        return F.transform(arr, lambda x: F.to_json(x))
 
-            def mult_cond(v, jt, k=k):
-                m = F.pmod(d_of(v), F.lit(k))
-                return is_n(jt) & ~((m < _FLOAT_TOL) | (F.abs(m - F.lit(k)) < _FLOAT_TOL))
+    def present(self, b: Bound, rule: Rule, verbose: bool):
+        return b.viol, b.fires
 
-            check(mult_cond, ErrorCode.NUMBER_NOT_MULTIPLE.value)
+    def object(self, oseq: list, gate) -> list:
+        """The object's entries run over ``map<string,variant>``, bound once
+        per side as a lambda variable (keys come back SORTED)."""
 
-        # arrays
-        sz_obs = lambda v, jt: F.size(arr_of(v)).cast("string")  # noqa: E731
-        if rule.min_items is not None:
-            check(
-                lambda v, jt, n=rule.min_items: _is_array(jt) & (F.size(arr_of(v)) < n),
-                ErrorCode.ARRAY_TOO_SHORT.value, obs=sz_obs,
-            )
-        if rule.max_items is not None:
-            check(
-                lambda v, jt, n=rule.max_items: _is_array(jt) & (F.size(arr_of(v)) > n),
-                ErrorCode.ARRAY_TOO_LONG.value, obs=sz_obs,
-            )
-        if rule.unique_items:
-            # cheap distinct-size predicate on the fires side; precise
-            # first-duplicate locate on the emit side (flagged rows only) —
-            # the same deliberate asymmetry as the static binder
-            def uq_cond(v, jt):
-                js = F.transform(arr_of(v), lambda x: F.to_json(x))
-                return _is_array(jt) & (F.size(F.array_distinct(js)) < F.size(js))
+        def with_map(v: Column, fn: Callable[[Column], Column]) -> Column:
+            m = F.try_variant_get(v, "$", "map<string,variant>")
+            return F.get(F.transform(F.array(m), fn), 0)
 
-            def uq_emit(v, jt, path):
-                def dup_idx(rs: Column) -> Column:
-                    js = F.transform(rs, lambda x: F.to_json(x))
-                    idxs = F.filter(
-                        F.transform(js, lambda x, i: i),
-                        lambda i: F.exists(
-                            F.slice(js, F.lit(1), i), lambda y: y.eqNullSafe(F.get(js, i))
-                        ),
-                    )
-                    return F.get(idxs, 0)
+        return [_child(
+            lambda v, t, p: with_map(v, lambda o: _assemble_viols(oseq, o, None, p)),
+            lambda v, t: with_map(v, lambda o: _assemble_fires(oseq, o, None)),
+            gate,
+        )]
 
-                arr = arr_of(v)
-                di = F.get(F.transform(F.array(arr), dup_idx), 0)
-                return _maybe(
-                    _is_array(jt) & di.isNotNull(),
-                    ErrorCode.ARRAY_ITEMS_NOT_UNIQUE.value,
-                    F.concat(path, F.lit("/"), di.cast("string")),
-                    F.to_json(F.get(arr, di)),
-                )
 
-            seq.append(("check", uq_emit, uq_cond))
-        if rule.items is not None:
-            iv, ifires = self.bind(rule.items)
-
-            def items_viol(v, jt, path, iv=iv, f=ifires):
-                # element-level gate (round-4): a flagged doc's CLEAN array
-                # elements skip violation construction entirely — viol(x)
-                # is nonempty iff fires(x) (both assemble from one seq), so
-                # the cheap boolean decides per element. when-gated, not
-                # filtered: the path needs the ORIGINAL element index
-                return F.when(
-                    _is_array(jt),
-                    F.flatten(
-                        F.transform(
-                            arr_of(v),
-                            lambda x, i: F.when(
-                                f(x),
-                                iv(x, F.concat(path, F.lit("/"), i.cast("string"))),
-                            ).otherwise(_empty()),
-                        )
-                    ),
-                ).otherwise(_empty())
-
-            seq.append(
-                (
-                    "child",
-                    items_viol,
-                    lambda v, jt, f=ifires: _is_array(jt) & F.exists(arr_of(v), lambda x: f(x)),
-                )
-            )
-
-        # objects (open: via map<string,variant> cast; keys are SORTED; the
-        # map cast is bound ONCE as a lambda variable per side)
-        if self._has_object_keywords(rule):
-            oseq = self._object_seq(rule)
-
-            def obj_viol(v, jt, path, oseq=tuple(oseq)):
-                m_expr = F.try_variant_get(v, "$", "map<string,variant>")
-                body = F.get(
-                    F.transform(
-                        F.array(m_expr),
-                        lambda m: self._assemble_obj_viols(oseq, m, path),
-                    ),
-                    0,
-                )
-                return F.when(_is_object(jt), body).otherwise(_empty())
-
-            def obj_fires(v, jt, oseq=tuple(oseq)):
-                m_expr = F.try_variant_get(v, "$", "map<string,variant>")
-                return _is_object(jt) & F.get(
-                    F.transform(
-                        F.array(m_expr), lambda m: self._assemble_obj_fires(oseq, m)
-                    ),
-                    0,
-                )
-
-            seq.append(("child", obj_viol, obj_fires))
-
-        # logical combinators
-        for branch in rule.all_of:
-            bv, bf = self.bind(branch)
-            seq.append(
-                (
-                    "child",
-                    lambda v, jt, path, b=bv: b(v, path),
-                    lambda v, jt, b=bf: b(v),
-                )
-            )
-        if rule.any_of:
-            branch_fires = [self.bind(b)[1] for b in rule.any_of]
-
-            def any_cond(v, jt, bs=tuple(branch_fires)):
-                return reduce(lambda a, b: a & b, [f(v) for f in bs])
-
-            check(any_cond, ErrorCode.ANY_OF_NO_MATCH.value, obs=lambda v, jt: F.lit(""))
-        if rule.one_of:
-            branch_fires = [self.bind(b)[1] for b in rule.one_of]
-
-            def match_count(v, bs=tuple(branch_fires)):
-                return reduce(lambda a, b: a + b, [(~f(v)).cast("int") for f in bs])
-
-            def one_viol(v, jt, path, bs=tuple(branch_fires)):
-                n = match_count(v, bs)
-                idx_list = F.concat_ws(
-                    ",",
-                    F.filter(
-                        F.array(*[F.when(~f(v), F.lit(str(i))) for i, f in enumerate(bs)]),
-                        lambda x: x.isNotNull(),
-                    ),
-                )
-                return F.filter(
-                    F.array(
-                        _maybe(n == 0, ErrorCode.ONE_OF_NO_MATCH.value, path, F.lit("")),
-                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, path, F.lit("")),
-                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, path, idx_list),
-                    ).cast(VIOLATION_TYPE),
-                    lambda x: x.isNotNull(),
-                )
-
-            seq.append(("child", one_viol, lambda v, jt: match_count(v) != 1))
-        if rule.not_ is not None:
-            _nv, nf = self.bind(rule.not_)
-            check(
-                lambda v, jt, f=nf: ~f(v),
-                ErrorCode.NOT_SCHEMA_MATCHED.value, obs=lambda v, jt: F.lit(""),
-            )
-
-        return seq
-
-    # ---------------- objects ----------------
-
-    def _bind_string_rule(self, rule: Rule):
-        """Specialized binder for a rule applied to a value that is
-        STATICALLY a string (propertyNames keys): returns
-        (viol(key, path) -> array<violation>, fires(key) -> boolean), or
-        None when the rule needs the generic variant wrap (logical ops).
-
-        Parity contract with the generic path (pinned in
-        test_json_variant): emission ORDER is _node_seq's (type gate →
-        enum → const → string checks); observed is the key itself (what
-        _obs renders for a string variant); keywords gated on other
-        runtime types (numbers/arrays/objects) can NEVER fire on a string
-        and are omitted — same no-emission outcome, zero expressions."""
-        if rule.all_of or rule.any_of or rule.one_of or rule.not_ is not None:
-            return None
-        from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
-
-        seq: list = []
-
-        def check(cond, code: str) -> None:
-            seq.append(
-                (
-                    "check",
-                    lambda k, path, c=cond, cd=code: _maybe(c(k), cd, path, k),
-                    cond,
-                )
-            )
-
-        if rule.enum is not None:
-            svals = [e for e in rule.enum if isinstance(e, str)]
-
-            def enum_cond(k, svals=tuple(svals)):
-                # a string key can only match the enum's STRING members;
-                # an enum with none is a constant mismatch (generic parity)
-                if not svals:
-                    return F.lit(True)
-                return ~k.isin(list(svals))
-
-            check(enum_cond, ErrorCode.ENUM_MISMATCH.value)
-        if rule.const_set:
-            if isinstance(rule.const, str):
-                check(
-                    lambda k, t=rule.const: k != F.lit(t),
-                    ErrorCode.CONST_MISMATCH.value,
-                )
-            else:
-                check(lambda k: F.lit(True), ErrorCode.CONST_MISMATCH.value)
-        if rule.min_length is not None:
-            check(
-                lambda k, n=rule.min_length: F.length(k) < n,
-                ErrorCode.STRING_TOO_SHORT.value,
-            )
-        if rule.max_length is not None:
-            check(
-                lambda k, n=rule.max_length: F.length(k) > n,
-                ErrorCode.STRING_TOO_LONG.value,
-            )
-        if rule.pattern is not None:
-            jp = checked_java_pattern(rule.pattern)
-            if jp is None:  # Python-invalid: lazy SCHEMA_INVALID (reference)
-                check(lambda k: F.lit(True), ErrorCode.SCHEMA_INVALID.value)
-            else:
-                check(
-                    lambda k, p=jp: ~k.rlike(p),
-                    ErrorCode.PATTERN_MISMATCH.value,
-                )
-
-        type_fail = rule.types is not None and "string" not in rule.types
-
-        def viol(k: Column, path: Column) -> Column:
-            if type_fail:
-                return F.array(_viol(ErrorCode.TYPE_ERROR.value, path, k)).cast(
-                    VIOLATION_TYPE
-                )
-            return _assemble_viols(seq, lambda fn: fn(k, path))
-
-        def fires(k: Column) -> Column:
-            if type_fail:
-                return F.lit(True)
-            return _assemble_fires(seq, lambda fn: fn(k))
-
-        return viol, fires
-
-    @staticmethod
-    def _has_object_keywords(rule: Rule) -> bool:
-        return bool(
-            rule.required
-            or rule.properties
-            or rule.pattern_properties
-            or rule.dependencies
-            or rule.property_names is not None
-            or rule.min_properties is not None
-            or rule.max_properties is not None
-            or rule.additional_properties is not None
-        )
-
-    def _object_seq(self, rule: Rule) -> list:
-        """Entries over a BOUND map value: ("check", emit(m, path), cond(m))
-        or ("child", viol(m, path), fires(m)) — one list serves both sides."""
-        oseq: list = []
-
-        def check(cond, code: str, path_fn, obs) -> None:
-            oseq.append(
-                (
-                    "check",
-                    lambda m, path, c=cond, cd=code, pf=path_fn, o=obs: _maybe(
-                        c(m), cd, pf(m, path), o(m)
-                    ),
-                    cond,
-                )
-            )
-
-        self_path = lambda m, path: path  # noqa: E731
-        none_obs = lambda m: F.lit("None")  # noqa: E731
-        n_of = lambda m: F.size(F.map_keys(m))  # noqa: E731
-
-        if rule.min_properties is not None:
-            check(
-                lambda m, n=rule.min_properties: n_of(m) < n,
-                ErrorCode.OBJECT_TOO_FEW_PROPERTIES.value,
-                self_path, lambda m: n_of(m).cast("string"),
-            )
-        if rule.max_properties is not None:
-            check(
-                lambda m, n=rule.max_properties: n_of(m) > n,
-                ErrorCode.OBJECT_TOO_MANY_PROPERTIES.value,
-                self_path, lambda m: n_of(m).cast("string"),
-            )
-        for req in rule.required:
-            check(
-                lambda m, k=req: ~F.map_contains_key(m, F.lit(k)),
-                ErrorCode.REQUIRED_PROPERTY_MISSING.value,
-                lambda m, path, k=req: _child(path, k), none_obs,
-            )
-        for dep_key, needed in rule.dependencies.items():
-            for b in needed:
-                check(
-                    lambda m, a=dep_key, k=b: F.map_contains_key(m, F.lit(a))
-                    & ~F.map_contains_key(m, F.lit(k)),
-                    ErrorCode.DEPENDENCY_MISSING.value,
-                    lambda m, path, k=b: _child(path, k), none_obs,
-                )
-        if rule.property_names is not None:
-            fast = self._bind_string_rule(rule.property_names)
-            if fast is not None:
-                # keys are statically STRINGS: for string-expressible rules
-                # the per-key to_json→parse_json→variant_get wrap (plus a
-                # schema_of_variant dispatch) collapses to direct Column
-                # checks on the key — measured 2.3x on the propertyNames-
-                # heavy open-object gate (round-4 perf lift)
-                kviol, kfires = fast
-                oseq.append(
-                    (
-                        "child",
-                        # element-level gate (round-4): only FIRING keys
-                        # build violation structs; filter preserves key
-                        # order so emission order is unchanged
-                        lambda m, path, b=kviol, f=kfires: F.flatten(
-                            F.transform(
-                                F.filter(F.map_keys(m), lambda k: f(k)),
-                                lambda k: b(k, _key_path(path, k)),
-                            )
-                        ),
-                        lambda m, f=kfires: F.exists(
-                            F.map_keys(m), lambda k: f(k)
-                        ),
-                    )
-                )
-            else:
-                nv, nf = self.bind(rule.property_names)
-                oseq.append(
-                    (
-                        "child",
-                        lambda m, path, b=nv, f=nf: F.flatten(
-                            F.transform(
-                                F.filter(
-                                    F.map_keys(m),
-                                    lambda k: _string_key_fires(f, k),
-                                ),
-                                lambda k: _as_string_variant_viols(b, k, path),
-                            )
-                        ),
-                        lambda m, f=nf: F.exists(
-                            F.map_keys(m), lambda k: _string_key_fires(f, k)
-                        ),
-                    )
-                )
-        matched_static = list(rule.properties.keys())
-        for k, sub in rule.properties.items():
-            sv, sf = self.bind(sub)
-            oseq.append(
-                (
-                    "child",
-                    # gate on the child's fires too (round-4): a present
-                    # but CLEAN property skips violation construction
-                    lambda m, path, k=k, b=sv, f=sf: F.when(
-                        F.map_contains_key(m, F.lit(k))
-                        & f(F.try_element_at(m, F.lit(k))),
-                        b(F.try_element_at(m, F.lit(k)), _child(path, k)),
-                    ).otherwise(_empty()),
-                    lambda m, k=k, f=sf: F.map_contains_key(m, F.lit(k))
-                    & f(F.try_element_at(m, F.lit(k))),
-                )
-            )
-        pattern_list: list[str] = []
-        for pat, sub in rule.pattern_properties.items():
-            from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
-
-            jpat = checked_java_pattern(pat, "patternProperties")
-            if jpat is None:
-                # Python-invalid: the reference emits SCHEMA_INVALID at the
-                # object's path, once per invalid pattern per validated
-                # object (objects.py:147-152) — round-3 parity fix, in
-                # lockstep with pyeval and the static binder
-                check(
-                    lambda m: F.lit(True),
-                    ErrorCode.SCHEMA_INVALID.value,
-                    self_path,
-                    lambda m, p=pat: F.lit(p),
-                )
-                continue
-            pattern_list.append(jpat)
-            sv, sf = self.bind(sub)
-
-            # iterate map ENTRIES once — the round-2 shape filtered keys
-            # then re-looked each key up via try_element_at, an O(K) scan
-            # per key (O(K^2) per object; round-3 perf lift)
-            def pentries(m, p=jpat, s=tuple(matched_static)):
-                def match(e: Column) -> Column:
-                    cond = e["key"].rlike(p)
-                    if s:
-                        cond = cond & ~e["key"].isin(list(s))
-                    return cond
-
-                return F.filter(F.map_entries(m), match)
-
-            oseq.append(
-                (
-                    "child",
-                    lambda m, path, b=sv, f=sf, pe=pentries: F.flatten(
-                        F.transform(
-                            F.filter(pe(m), lambda e: f(e["value"])),
-                            lambda e: b(e["value"], _key_path(path, e["key"])),
-                        )
-                    ),
-                    lambda m, f=sf, pe=pentries: F.exists(
-                        pe(m), lambda e: f(e["value"])
-                    ),
-                )
-            )
-        ap = rule.additional_properties
-        if ap is not None:
-            skip = list(set(matched_static) | set(rule.exempt_properties))
-
-            def _make_extra_pred(s, ps):
-                # closure FACTORY, no default args: a defaulted lambda given
-                # to F.filter/F.exists receives the element INDEX as its
-                # second argument (module-doc pitfall)
-                def pred(kcol: Column) -> Column:
-                    cond = ~kcol.isin(list(s)) if s else F.lit(True)
-                    for p in ps:
-                        cond = cond & ~kcol.rlike(p)
-                    return cond
-
-                return pred
-
-            extra_pred = _make_extra_pred(tuple(skip), tuple(pattern_list))
-
-            if skip or pattern_list:
-
-                def extra_entries(m):
-                    # entries, not keys + per-key lookup (see pentries note)
-                    return F.filter(F.map_entries(m), lambda e: extra_pred(e["key"]))
-
-            else:
-
-                def extra_entries(m):
-                    # fully-open object (no declared/pattern properties):
-                    # EVERY entry is "extra" — a filter(..., true) wrapper
-                    # costs a per-entry lambda eval in the interpreted HOF
-                    # regime for nothing (round-4 perf lift)
-                    return F.map_entries(m)
-
-            if ap is False:
-                oseq.append(
-                    (
-                        "child",
-                        lambda m, path, ee=extra_entries: F.transform(
-                            ee(m),
-                            lambda e: _viol(
-                                ErrorCode.ADDITIONAL_PROPERTY_NOT_ALLOWED.value,
-                                _key_path(path, e["key"]),
-                                # _obs with the type token BOUND (no-CSE rule):
-                                # Python-ish scalar rendering, pyeval parity
-                                F.get(
-                                    F.transform(
-                                        F.array(_sch(e["value"])),
-                                        lambda jt: _obs(e["value"], jt),
-                                    ),
-                                    0,
-                                ),
-                            ),
-                        ).cast(VIOLATION_TYPE),
-                        # exists short-circuits on the first extra key —
-                        # this is the hot boolean gate, not the viol side
-                        lambda m: F.exists(F.map_keys(m), extra_pred),
-                    )
-                )
-            elif isinstance(ap, Rule):
-                av, af = self.bind(ap)
-                oseq.append(
-                    (
-                        "child",
-                        lambda m, path, b=av, f=af, ee=extra_entries: F.flatten(
-                            F.transform(
-                                F.filter(ee(m), lambda e: f(e["value"])),
-                                lambda e: b(e["value"], _key_path(path, e["key"])),
-                            )
-                        ),
-                        lambda m, f=af, ee=extra_entries: F.exists(
-                            ee(m), lambda e: f(e["value"])
-                        ),
-                    )
-                )
-        return oseq
-
-    @staticmethod
-    def _assemble_obj_viols(oseq, m: Column, path: Column) -> Column:
-        return _assemble_viols(oseq, lambda fn: fn(m, path))
-
-    @staticmethod
-    def _assemble_obj_fires(oseq, m: Column) -> Column:
-        return _assemble_fires(oseq, lambda fn: fn(m))
-
-
-def _child(path: Column, key: str) -> Column:
-    return F.concat(path, F.lit("/" + _escape_pointer_token(key)))
-
-
-def _as_string_variant_viols(nv: Callable, key: Column, path: Column) -> Column:
-    """propertyNames: validate each KEY as a string value — wrap the key into
-    a variant so the same binder applies (parse_json of the JSON-quoted key)."""
-    kv = F.parse_json(F.to_json(F.struct(key.alias("k"))))
-    kvar = F.variant_get(kv, "$.k", "variant")
-    return nv(kvar, _key_path(path, key))
-
-
-def _string_key_fires(nf: Callable, key: Column) -> Column:
-    kv = F.parse_json(F.to_json(F.struct(key.alias("k"))))
-    return nf(F.variant_get(kv, "$.k", "variant"))
+def bind_variant(rule: Rule) -> Bound:
+    """(viol(v, path), fires(v)) for a PRESENT variant value ``v``."""
+    return RuleBinder().bind(rule, Variant())
 
 
 def _obs(v: Column, jt: Column) -> Column:
@@ -906,6 +324,21 @@ def _obs(v: Column, jt: Column) -> Column:
     )
 
 
+
+def _cached_violations(
+    schema: Any, struct: T.StructType, mode: str, document: Callable[[Bound], Column]
+) -> Column:
+    """The violations Column binds only the input column by NAME, so one
+    build (driver-side py4j) serves every DataFrame in the process via the
+    compiler's compiled-Column cache."""
+
+    def build() -> Column:
+        rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
+        return document(bind_variant(rule))
+
+    return _cached_compile(_compile_cache_key(schema, struct, mode), build)
+
+
 def validate_json_variant(
     df: DataFrame, json_col: str, schema: Any, key_col: str = "doc_id"
 ) -> DataFrame:
@@ -915,82 +348,40 @@ def validate_json_variant(
     nulls out produce real TYPE_ERRORs here, presence ≠ JSON null, and the
     whole thing stays JVM-side. Malformed JSON → SCHEMA_INVALID (exact-path
     convention)."""
-    # the violations Column binds only F.col(json_col) by NAME, so one build
-    # (~0.9 s of driver-side py4j) serves every DataFrame in the process via
-    # the compiler's compiled-Column cache
-    from json_schema_py_spark.schema import compiler as _C
 
-    vstruct = T.StructType([T.StructField(json_col, T.StringType())])
-    ckey = _C._compile_cache_key(schema, vstruct, "variant")
-
-    def build() -> Column:
-        rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
-        binder = VariantBinder()
-        viol, fires = binder.bind(rule)
-
+    def document(b: Bound) -> Column:
         # a NULL payload is evaluated as a JSON null document (exact-path
-        # convention: json.loads(raw) if raw is not None else None). The parse
-        # is bound ONCE as a lambda variable for the WHOLE when-chain —
-        # round 2 wrote the parse expression three times (bad gate / isNotNull
-        # / body), tripling the parse cost (expressions have no CSE; measured
-        # ~10% of the pipeline, round-3 perf lift).
-        parsed = F.try_parse_json(F.coalesce(F.col(json_col), F.lit("null")))
+        # convention: json.loads(raw) if raw is not None else None). The
+        # parse is bound ONCE as a lambda variable for the whole when-chain
+        # (expressions have no CSE).
+        raw = F.col(json_col)
+        parsed = F.try_parse_json(F.coalesce(raw, F.lit("null")))
+        bad = F.array(
+            _viol(ErrorCode.SCHEMA_INVALID.value, F.lit(""), F.substring(raw, 1, 256))
+        ).cast(VIOLATION_TYPE)
         return F.get(
             F.transform(
                 F.array(parsed),
-                lambda v: F.when(
-                    F.col(json_col).isNotNull() & v.isNull(),
-                    F.array(
-                        _viol(
-                            ErrorCode.SCHEMA_INVALID.value,
-                            F.lit(""),
-                            F.substring(F.col(json_col), 1, 256),
-                        )
-                    ).cast(VIOLATION_TYPE),
-                )
-                .when(
-                    v.isNotNull(),
-                    # static-binder doctrine: the allocation-free boolean gate
-                    # runs first; only flagged documents build violation objects
-                    F.when(fires(v), viol(v, F.lit(""))).otherwise(_empty()),
-                )
+                lambda v: F.when(raw.isNotNull() & v.isNull(), bad)
+                .when(v.isNotNull(), gated_document(b, v))
                 .otherwise(_empty()),
             ),
             0,
         )
 
-    violations = _C._cached_compile(ckey, build)
-    # ensure_parallelism REINSTATED (round-4): the round-3 "AQE re-coalesces
-    # anyway" claim was re-measured and does NOT hold for this path — the
-    # heavy projection fuses into the SCAN stage (2 splits on a compacted
-    # small-corpus parquet) because the HOF-heavy expression is codegen-
-    # fallback and CPU-bound per byte, exactly the case AQE's size-based
-    # coalescing misjudges. One explicit-N repartition: 2.08s → 1.48s on
-    # the 50%-violation corpus. At production scale (splits >> cores) it's
-    # a no-op.
-    from json_schema_py_spark.util import ensure_parallelism
-
-    df = ensure_parallelism(df)
-    return (
-        df.select(F.col(key_col).alias("doc_id"), violations.alias("violations"))
-        .select("doc_id", F.explode("violations").alias("x"))
-        .select(
-            "doc_id",
-            F.col("x.rule_id").alias("rule_id"),
-            F.col("x.path").alias("path"),
-            F.col("x.observed").alias("observed"),
-        )
-    )
+    vstruct = T.StructType([T.StructField(json_col, T.StringType())])
+    violations = _cached_violations(schema, vstruct, "variant", document)
+    return _explode(df, key_col, violations)
 
 
 def validate_variant(
     df: DataFrame, variant_col: str, schema: Any, key_col: str = "doc_id"
 ) -> DataFrame:
     """validate_json_variant for a column that already IS VariantType —
-    the lake-native form (round-5): tables increasingly store VARIANT
-    columns directly, SHREDDED on disk (typed per-key sub-columns; Spark
-    4.1 writes them under spark.sql.variant.writeShredding.enabled and
-    rewrites literal-path variant_get into the scan under
+    the lake-native form: tables store VARIANT columns directly, often
+    SHREDDED on disk (typed per-key sub-columns; Spark 4.1 writes them
+    under spark.sql.variant.writeShredding.enabled and rewrites
+    literal-path variant_get into the scan under
     spark.sql.variant.pushVariantIntoScan). Routing such a column through
     the string entry costs a to_json → try_parse_json round trip of every
     payload; this entry binds the binder to the variant value directly.
@@ -999,43 +390,26 @@ def validate_variant(
     (the string entry's convention for NULL payloads); there is no
     malformed-JSON arm — parsing happened upstream at write time.
 
-    Scale note (probed on this build): the binder's per-value
-    schema_of_variant dispatch reads the WHOLE value, so the shredded
-    reader must reassemble full variants — the typed-sub-column scan win
-    (3.5× on a variant_get-only query) does not reach this plan yet.
-    Binding schema-stable keys to shredded columns without the dispatch
-    needs per-key presence/type metadata the Column API doesn't expose;
-    re-evaluate as Spark's shredding matures (SURVEY §9)."""
-    from json_schema_py_spark.schema import compiler as _C
+    Scale note: the binder's per-value schema_of_variant dispatch reads the
+    WHOLE value, so the shredded reader must reassemble full variants — the
+    typed-sub-column scan win does not reach this plan. Binding
+    schema-stable keys to shredded columns without the dispatch needs
+    per-key presence/type metadata the Column API doesn't expose (SURVEY §9)."""
+
+    def document(b: Bound) -> Column:
+        parsed = F.coalesce(F.col(variant_col), F.parse_json(F.lit("null")))
+        return F.get(F.transform(F.array(parsed), lambda v: gated_document(b, v)), 0)
 
     vstruct = T.StructType([T.StructField(variant_col, T.VariantType())])
-    ckey = _C._compile_cache_key(schema, vstruct, "variant:native")
+    violations = _cached_violations(schema, vstruct, "variant:native", document)
+    return _explode(df, key_col, violations)
 
-    def build() -> Column:
-        rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
-        binder = VariantBinder()
-        viol, fires = binder.bind(rule)
-        # NULL cell → JSON null document, exactly like the string entry
-        parsed = F.coalesce(F.col(variant_col), F.parse_json(F.lit("null")))
-        return F.get(
-            F.transform(
-                F.array(parsed),
-                lambda v: F.when(fires(v), viol(v, F.lit(""))).otherwise(_empty()),
-            ),
-            0,
-        )
 
-    violations = _C._cached_compile(ckey, build)
+def _explode(df: DataFrame, key_col: str, violations: Column) -> DataFrame:
+    # The heavy projection fuses into the SCAN stage and is codegen-fallback,
+    # CPU-bound per byte — a case AQE's size-based coalescing misjudges, so
+    # a small/compacted input (1-2 splits) is spread over the cores first.
+    # A no-op at production scale (splits >> cores).
     from json_schema_py_spark.util import ensure_parallelism
 
-    df = ensure_parallelism(df)
-    return (
-        df.select(F.col(key_col).alias("doc_id"), violations.alias("violations"))
-        .select("doc_id", F.explode("violations").alias("x"))
-        .select(
-            "doc_id",
-            F.col("x.rule_id").alias("rule_id"),
-            F.col("x.path").alias("path"),
-            F.col("x.observed").alias("observed"),
-        )
-    )
+    return explode_violations(ensure_parallelism(df), key_col, violations)

@@ -15,10 +15,16 @@ this binder emits per ruleset:
 
 ``compile_ruleset`` stitches them: ``when(fires, build_array).otherwise([])``.
 
-Presence convention: a NULL value is an ABSENT property (Parquet/Iceberg
-structs always carry every field). ``required`` = IS NOT NULL; all other
-checks skip null values — mirroring the reference, which only validates keys
-that are present (reference: json_schema/constraints/objects.py:132-140).
+One walker (``RuleBinder``) owns the keyword order, the entry list and its
+assembly, the combinators and the open-object (map) keywords. It reads
+values through a value model: ``Typed`` (a Spark column of static type —
+gates fold at compile time) here, ``plans.json_variant.Variant`` (a
+VARIANT value with a runtime type token) for dynamic JSON.
+
+Presence convention (Typed): a NULL value is an ABSENT property (Parquet/
+Iceberg structs always carry every field). ``required`` = IS NOT NULL; all
+other checks skip null values — mirroring the reference, which only
+validates keys that are present (reference: objects.py:132-140).
 
 PERF invariants this file maintains (each was measured, see git history):
 * never reference an outer EXPRESSION inside a higher-order-function lambda
@@ -34,9 +40,10 @@ PERF invariants this file maintains (each was measured, see git history):
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass
-from typing import Any, Callable, Optional
+from functools import reduce
+from typing import Any, Callable, NamedTuple, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -75,23 +82,13 @@ def _viol(code: str, path: Column, observed: Column) -> Column:
     )
 
 
-def _null_value_viols(rule: Rule, verbose: bool = False) -> list:
-    """Violations a NULL JSON value produces under ``rule`` — a pure
-    compile-time constant (no data dependency), folded via the Python
-    evaluator. Used where null means a PRESENT null VALUE (array elements,
-    map values) rather than an absent struct field."""
-    from json_schema_py_spark.schema.pyeval import evaluate
-
-    return evaluate(rule, None, "", verbose)
-
-
 def _java_double_str(v: float) -> str:
     """Render a double the way Java's Double.toString (Jackson) does:
     plain decimal in [1e-3, 1e7), otherwise shortest-round-trip mantissa E
     exponent ('1.23456789E7'). The mantissa digits come from Python's repr
-    (also shortest-round-trip) renormalized to scientific form — the old
-    f'{v:E}' path TRUNCATED to 7 significant digits, so any enum/const
-    double with more digits could never match to_json (review r03).
+    (also shortest-round-trip) renormalized to scientific form, so an
+    enum/const double of any precision matches to_json (a fixed-width
+    format such as f'{v:E}' would truncate to 7 significant digits).
     Documented corner: Java 17's legacy algorithm is not always shortest
     at subnormal extremes (probed: 5e-324 → Java '4.9E-324', Python
     '5E-324'); values beyond ±1e±308 are out of practical schema range."""
@@ -129,7 +126,7 @@ def _canonical_json_col(col: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, T.MapType):
         # sort entries by KEY with an explicit comparator: the default
         # array_sort needs a fully ORDERABLE element, which a map-valued
-        # entry struct is not (review finding r02c)
+        # entry struct is not
         entries = F.array_sort(
             F.map_entries(col),
             lambda a, b: F.when(a["key"] < b["key"], F.lit(-1))
@@ -231,32 +228,6 @@ def _key_path(path: Column, k: Column) -> Column:
     return F.concat(path, F.lit("/"), esc)
 
 
-def _py_regex_search(pattern: str, s: str) -> bool:
-    try:
-        return re.search(pattern, s) is not None
-    except re.error:
-        return False
-
-
-def _py_string_rule_ok(rule: Rule, s: str) -> bool:
-    """Driver-side evaluation of a string-only rule against a static key name
-    (propertyNames over StructType: keys are compile-time constants).
-    reference: json_schema/constraints/objects.py:118-123."""
-    if rule.types is not None and "string" not in rule.types:
-        return False
-    if rule.min_length is not None and len(s) < rule.min_length:
-        return False
-    if rule.max_length is not None and len(s) > rule.max_length:
-        return False
-    if rule.pattern is not None and not _py_regex_search(rule.pattern, s):
-        return False
-    if rule.enum is not None and s not in rule.enum:
-        return False
-    if rule.const_set and s != rule.const:
-        return False
-    return True
-
-
 def _enum_compatible(dtype: T.DataType, values: list[Any]) -> list[Any]:
     """Enum values comparable with the column's static type under Python ==
     semantics (1 == True, 1 == 1.0 — reference: json_schema/constraints/enums.py:36-39)."""
@@ -305,7 +276,7 @@ def _to_json_literal(v: Any, dtype: T.DataType) -> str:
     if isinstance(dtype, T.MapType) and isinstance(v, dict):
         # map columns render via _canonical_json_col (entries sorted by key),
         # so the literal sorts too — map DATA order is document order and
-        # cannot be assumed (probe-confirmed review finding r02)
+        # cannot be assumed
         parts = [
             _json.dumps(k, ensure_ascii=False) + ":" + _to_json_literal(v[k], dtype.valueType)
             for k in sorted(v, key=str)
@@ -320,7 +291,7 @@ def _to_json_literal(v: Any, dtype: T.DataType) -> str:
     if isinstance(dtype, (T.FloatType, T.DoubleType)) and isinstance(v, (int, float)):
         # to_json renders doubles Jackson/Java-style (0.0001 -> "1.0E-4",
         # 1e30 -> "1.0E30"); Python repr would never match outside
-        # [1e-3, 1e7), yielding false ENUM/CONST mismatches (ADVICE r02).
+        # [1e-3, 1e7), yielding false ENUM/CONST mismatches.
         return _java_double_str(float(v))
     if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)) and isinstance(
         v, (int, float)
@@ -340,762 +311,647 @@ def _to_json_literal(v: Any, dtype: T.DataType) -> str:
     return _json.dumps(v, ensure_ascii=False, separators=(",", ":"), sort_keys=True)
 
 
-@dataclass
-class Check:
-    """One leaf constraint: a pure predicate + a violation constructor."""
+class Bound(NamedTuple):
+    """A compiled rule node over one value ``v`` at pointer ``path``."""
 
-    cond: Callable[[Column], Column]  # value non-null is assumed
-    emit: Callable[[Column, Column], Column]  # (col, path) -> nullable struct
-
-
-@dataclass
-class Bound:
-    """A compiled rule node."""
-
-    viol: Callable[[Column, Column], Column]  # (col, path) -> array<violation>
-    fires: Callable[[Column], Column]  # (col) -> boolean
+    viol: Callable[[Column, Column], Column]  # (v, path) -> array<violation>
+    fires: Callable[[Column], Column]  # (v) -> boolean
 
 
-def _never(col: Column) -> Column:
-    return F.lit(False)
+class Entry(NamedTuple):
+    """One step of a node's ordered entry list. ``t`` is the node's type
+    token (None for a typed value, whose type is static)."""
+
+    leaf: bool  # leaf checks of one run share a single array+filter
+    viol: Callable  # (v, t, path) -> nullable struct (leaf) | array<violation>
+    fires: Callable  # (v, t) -> boolean
+
+
+def _here(v: Column, t: Any, path: Column) -> Column:
+    return path
+
+
+def _none_obs(v: Column, t: Any) -> Column:
+    return F.lit("None")
+
+
+def _blank_obs(v: Column, t: Any) -> Column:
+    return F.lit("")
+
+
+def _nonnull(x: Column) -> Column:
+    return x.isNotNull()
+
+
+def _gated(gate, cond: Callable) -> Callable:
+    """``cond`` behind a family gate: a folded True leaves it as is, a
+    runtime gate (a predicate over the type token) ANDs in front."""
+    if gate is True:
+        return cond
+    return lambda v, t: gate(t) & cond(v, t)
+
+
+def _check(cond: Callable, code: str, obs: Callable, path=_here, gate=True) -> Entry:
+    c = _gated(gate, cond)
+    return Entry(True, lambda v, t, p: _maybe(c(v, t), code, path(v, t, p), obs(v, t)), c)
+
+
+def _child(viol: Callable, fires: Callable, gate=True) -> Entry:
+    if gate is not True:
+        inner = viol
+        viol = lambda v, t, p: F.when(gate(t), inner(v, t, p)).otherwise(_empty())  # noqa: E731
+    return Entry(False, viol, _gated(gate, fires))
+
+
+def _each_entry(select: Callable, part: str, cv: Callable, cf: Callable) -> Entry:
+    """Validate ``part`` ("key" or "value") of every map entry ``select``
+    keeps, at the entry key's pointer. Only firing entries build violation
+    structs; filter keeps entry order, so emission order is unchanged."""
+    return Entry(
+        False,
+        lambda o, t, p: F.flatten(
+            F.transform(
+                F.filter(select(o), lambda e: cf(e[part])),
+                lambda e: cv(e[part], _key_path(p, e["key"])),
+            )
+        ),
+        lambda o, t: F.exists(select(o), lambda e: cf(e[part])),
+    )
+
+
+def _assemble_viols(seq: list, v: Column, t: Any, path: Column) -> Column:
+    """Emission order == entry order: runs of consecutive leaf checks
+    collapse into ONE array+filter, child arrays concat in place."""
+    arrs: list[Column] = []
+    pending: list[Column] = []
+
+    def flush() -> None:
+        if pending:
+            arrs.append(F.filter(F.array(*pending).cast(VIOLATION_TYPE), _nonnull))
+            pending.clear()
+
+    for e in seq:
+        if e.leaf:
+            pending.append(e.viol(v, t, path))
+        else:
+            flush()
+            arrs.append(e.viol(v, t, path))
+    flush()
+    return arrs[0] if len(arrs) == 1 else (F.concat(*arrs) if arrs else _empty())
+
+
+def _assemble_fires(seq: list, v: Column, t: Any) -> Column:
+    conds = [e.fires(v, t) for e in seq]
+    return reduce(operator.or_, conds) if conds else F.lit(False)
+
+
+def _contains_map(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.MapType):
+        return True
+    if isinstance(dtype, T.ArrayType):
+        return _contains_map(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_contains_map(f.dataType) for f in dtype.fields)
+    return False
+
+
+class Typed:
+    """Value model of a Spark column with static type ``dtype``.
+
+    The JSON type is known at compile time, so the type gate and every
+    per-family gate fold to Python bools. A NULL is an ABSENT value
+    (struct fields), except where ``present`` says it is a present JSON
+    null (array elements, map values). A value model answers the walker's
+    questions: ``frame`` (NULL handling + type gate), ``family`` (per-family
+    gate), the ``string``/``number``/``array`` accessors, ``miss``
+    (enum/const), ``obs`` (observed rendering), the child models
+    (``items``, ``values``, ``fields``), ``comparable`` (uniqueItems keys),
+    ``present`` and ``object`` (how object entries attach)."""
+
+    unroll_limit = ARRAY_UNROLL_LIMIT
+    gate_items = False  # element viols need no fires gate: a NULL is cheap
+
+    def __init__(self, dtype: T.DataType):
+        self.dtype = dtype
+        self.jt: Optional[str] = json_type_of(dtype)
+
+    def frame(self, types: Optional[list[str]], entries: Callable[[], list]) -> Bound:
+        # static mismatch short-circuits everything, as the reference's type
+        # gate skips type-specific checks (reference: constraints/base.py:284-289)
+        if types is not None and not _type_matches(self.jt, types):
+            if self.jt == "null":  # NullType column: every value is absent
+                return Bound(lambda v, path: _empty(), lambda v: F.lit(False))
+            return Bound(
+                lambda v, path: F.filter(
+                    F.array(
+                        _maybe(v.isNotNull(), ErrorCode.TYPE_ERROR.value, path, self.obs(v))
+                    ).cast(VIOLATION_TYPE),
+                    _nonnull,
+                ),
+                lambda v: v.isNotNull(),
+            )
+        seq = entries()
+        return Bound(
+            lambda v, path: F.when(v.isNull(), _empty()).otherwise(
+                _assemble_viols(seq, v, None, path)
+            ),
+            lambda v: (v.isNotNull() & _assemble_fires(seq, v, None)) if seq else F.lit(False),
+        )
+
+    def family(self, name: str) -> bool:
+        return self.jt in ("integer", "number") if name == "number" else self.jt == name
+
+    def string(self, v: Column) -> Column:
+        return v
+
+    def number(self, v: Column) -> Column:
+        return v.cast("double")
+
+    def array(self, v: Column) -> Column:
+        return v
+
+    def obs(self, v: Column, t: Any = None) -> Column:
+        return py_str(v, self.dtype)
+
+    def miss(self, v: Column, t: Any, values: list) -> Column:
+        """True when ``v`` equals none of ``values`` (Python == semantics)."""
+        vals = _enum_compatible(self.dtype, values)
+        if not vals:
+            return F.lit(True)
+        if isinstance(self.dtype, (T.ArrayType, T.StructType, T.MapType)):
+            # composite: F.lit can't take dict/list — compare the to_json
+            # rendering against each value rendered the same way
+            canon = _canonical_json_col(v, self.dtype)
+            return ~canon.isin([_to_json_literal(x, self.dtype) for x in vals])
+        return ~v.isin(vals)
+
+    def items(self) -> "Typed":
+        return Typed(self.dtype.elementType)
+
+    def values(self) -> "Typed":
+        return Typed(self.dtype.valueType)
+
+    def fields(self) -> Optional[dict]:
+        if isinstance(self.dtype, T.StructType):
+            return {f.name: f.dataType for f in self.dtype.fields}
+        return None
+
+    def comparable(self, arr: Column) -> Column:
+        """Elements rendered so array_distinct and <=> can compare them:
+        themselves, or their to_json text when they hold a map (maps are
+        not orderable)."""
+        if _contains_map(self.dtype):
+            return F.transform(arr, lambda x: F.to_json(x))
+        return arr
+
+    def present(self, b: Bound, rule: Rule, verbose: bool):
+        """(viol, fires) for a value that is present: a NULL there is a JSON
+        null, whose violations are compile-time constants (folded by the
+        Python evaluator)."""
+        from json_schema_py_spark.schema.pyeval import evaluate
+
+        nv = evaluate(rule, None, "", verbose)
+
+        def viol(x: Column, path: Column) -> Column:
+            return F.when(x.isNull(), _const_viols(nv, path)).otherwise(b.viol(x, path))
+
+        def fires(x: Column) -> Column:
+            return F.when(x.isNull(), F.lit(bool(nv))).otherwise(b.fires(x))
+
+        return viol, fires
+
+    def object(self, oseq: list, gate) -> list:
+        return oseq  # the struct/map column is the node value itself
 
 
 class RuleBinder:
-    """Compiles a Rule tree against a Spark DataType into Bound closures.
+    """The one rule-tree walker: owns the reference's keyword order
+    (type gate → enum/const → string → number → array → object →
+    allOf/anyOf/oneOf/not; pyeval.evaluate is the executable spec) and
+    binds every keyword through a value model (``Typed`` here,
+    ``json_variant.Variant`` for VARIANT values). One ordered entry list
+    per node feeds BOTH the boolean fast path and the violation
+    constructor, so their parity is structural.
 
     ``verbose=True`` reproduces the reference's branch-detail reporting
-    (allOf[i]:/anyOf[i]: rule_id prefixes — see pyeval.evaluate docstring;
-    both engine paths emit identical verbose sequences)."""
+    (allOf[i]:/anyOf[i]: rule_id prefixes — see pyeval.evaluate)."""
 
     def __init__(self, verbose: bool = False):
         self.verbose = verbose
 
-    def bind(self, rule: Rule, dtype: T.DataType) -> Bound:
-        jt = json_type_of(dtype)
+    def bind(self, rule: Rule, m) -> Bound:
+        return m.frame(rule.types, lambda: self._entries(rule, m))
 
-        # --- type gate: static mismatch short-circuits everything, exactly as
-        # the reference's type gate skips type-specific checks
-        # (reference: json_schema/constraints/base.py:284-289) ---
-        if rule.types is not None and not _type_matches(jt, rule.types):
-            if jt == "null":
-                # NullType column: every value is null == absent
-                return Bound(lambda col, path: _empty(), _never)
-            return Bound(
-                lambda col, path, dt=dtype: F.filter(
-                    F.array(
-                        _maybe(
-                            col.isNotNull(),
-                            ErrorCode.TYPE_ERROR.value,
-                            path,
-                            py_str(col, dt),
-                        )
-                    ).cast(VIOLATION_TYPE),
-                    lambda x: x.isNotNull(),
-                ),
-                lambda col: col.isNotNull(),
-            )
+    def _entries(self, rule: Rule, m) -> list:
+        from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
 
-        # ordered emitter sequence — Check (leaf) and Bound (child) entries
-        # interleave in the REFERENCE's emission order (pyeval.evaluate is
-        # the executable spec), so the violations array is order-exact, not
-        # just set-equal (reference: objects.py:74-187 fixed sequence)
-        seq: list[Any] = []
+        seq: list[Entry] = []
 
-        def add(cond_fn, code: str, path_fn, obs_fn) -> None:
-            seq.append(
-                Check(
-                    cond=cond_fn,
-                    emit=lambda col, path, c=cond_fn, pf=path_fn, of=obs_fn, cd=code: _maybe(
-                        c(col), cd, pf(col, path), of(col)
-                    ),
-                )
-            )
-
-        def self_path(col: Column, path: Column) -> Column:
-            return path
+        def check(cond, code: str, obs=m.obs, gate=True) -> None:
+            seq.append(_check(cond, code, obs, gate=gate))
 
         # --- enum / const (reference: enums.py:11-56, consts.py:11-55) ---
         if rule.enum is not None:
-            vals = _enum_compatible(dtype, rule.enum)
-            if isinstance(dtype, (T.ArrayType, T.StructType, T.MapType)):
-                jvals = [_to_json_literal(v, dtype) for v in vals]
-                add(
-                    (lambda col, j=jvals, dt=dtype: ~_canonical_json_col(col, dt).isin(j)
-                     if j else F.lit(True)),
-                    ErrorCode.ENUM_MISMATCH.value,
-                    self_path,
-                    lambda col, dt=dtype: py_str(col, dt),
-                )
-            else:
-                add(
-                    (lambda col, v=vals: ~col.isin(v) if v else F.lit(True)),
-                    ErrorCode.ENUM_MISMATCH.value,
-                    self_path,
-                    lambda col, dt=dtype: py_str(col, dt),
-                )
+            check(lambda v, t, e=rule.enum: m.miss(v, t, e), ErrorCode.ENUM_MISMATCH.value)
         if rule.const_set:
-            cvals = _enum_compatible(dtype, [rule.const])
-            if isinstance(dtype, (T.ArrayType, T.StructType, T.MapType)):
-                # composite const: F.lit can't take dict/list — compare the
-                # to_json rendering against the value rendered the same way
-                cjs = [_to_json_literal(v, dtype) for v in cvals]
-                add(
-                    (lambda col, j=cjs, dt=dtype: (_canonical_json_col(col, dt) != F.lit(j[0]))
-                     if j else F.lit(True)),
-                    ErrorCode.CONST_MISMATCH.value,
-                    self_path,
-                    lambda col, dt=dtype: py_str(col, dt),
-                )
-            else:
-                add(
-                    (lambda col, v=cvals: (col != F.lit(v[0])) if v else F.lit(True)),
-                    ErrorCode.CONST_MISMATCH.value,
-                    self_path,
-                    lambda col, dt=dtype: py_str(col, dt),
-                )
+            check(lambda v, t, c=rule.const: m.miss(v, t, [c]), ErrorCode.CONST_MISMATCH.value)
 
         # --- string (reference: json_schema/constraints/strings.py:12-118) ---
-        if jt == "string":
-            sstr = lambda col: col.cast("string")  # noqa: E731
-            if rule.min_length is not None:
-                add(
-                    lambda col, n=rule.min_length: F.length(col) < n,
-                    ErrorCode.STRING_TOO_SHORT.value,
-                    self_path,
-                    sstr,
-                )
-            if rule.max_length is not None:
-                add(
-                    lambda col, n=rule.max_length: F.length(col) > n,
-                    ErrorCode.STRING_TOO_LONG.value,
-                    self_path,
-                    sstr,
-                )
-            if rule.pattern is not None:
-                from json_schema_py_spark.schema.regex_dialect import (
-                    checked_java_pattern,
-                )
+        g = m.family("string")
+        if g is not False:
+            s = m.string
 
+            def s_obs(v, t):
+                return s(v).cast("string")
+
+            if rule.min_length is not None:
+                check(lambda v, t, n=rule.min_length: F.length(s(v)) < n,
+                      ErrorCode.STRING_TOO_SHORT.value, s_obs, g)
+            if rule.max_length is not None:
+                check(lambda v, t, n=rule.max_length: F.length(s(v)) > n,
+                      ErrorCode.STRING_TOO_LONG.value, s_obs, g)
+            if rule.pattern is not None:
                 # one shared gate for every rlike site: translate or fail
                 # fast at compile time, never a per-row PatternSyntaxException
-                java_pattern = checked_java_pattern(rule.pattern)
-                if java_pattern is not None:
-                    # rlike is search-anchored like re.search
-                    # (reference: json_schema/constraints/strings.py:93)
-                    add(
-                        lambda col, p=java_pattern: ~col.rlike(p),
-                        ErrorCode.PATTERN_MISMATCH.value,
-                        self_path,
-                        sstr,
-                    )
-                else:
-                    # invalid regex: lazily detected per value
-                    # (reference: json_schema/constraints/strings.py:81-91)
-                    add(
-                        lambda col: F.lit(True),
-                        ErrorCode.SCHEMA_INVALID.value,
-                        self_path,
-                        sstr,
-                    )
+                jp = checked_java_pattern(rule.pattern)
+                if jp is not None:  # rlike is search-anchored like re.search
+                    check(lambda v, t, p=jp: ~s(v).rlike(p),
+                          ErrorCode.PATTERN_MISMATCH.value, s_obs, g)
+                else:  # Python-invalid regex: lazy SCHEMA_INVALID per value
+                    check(lambda v, t: F.lit(True), ErrorCode.SCHEMA_INVALID.value, s_obs, g)
 
         # --- number (reference: json_schema/constraints/numbers.py:11-137) ---
-        if jt in ("integer", "number"):
-            pstr = lambda col, dt=dtype: py_str(col, dt)  # noqa: E731
-            if rule.minimum is not None:
-                lo = float(rule.minimum)
-                if rule.exclusive_minimum:  # draft-04 boolean exclusives
-                    add(lambda col, v=lo: col.cast("double") <= v,
-                        ErrorCode.NUMBER_TOO_SMALL.value, self_path, pstr)
-                else:
-                    add(lambda col, v=lo: col.cast("double") < v,
-                        ErrorCode.NUMBER_TOO_SMALL.value, self_path, pstr)
+        g = m.family("number")
+        if g is not False:
+            d = m.number
+            if rule.minimum is not None:  # draft-04 boolean exclusives
+                check(lambda v, t, lo=float(rule.minimum), ex=rule.exclusive_minimum:
+                      (d(v) <= lo) if ex else (d(v) < lo),
+                      ErrorCode.NUMBER_TOO_SMALL.value, gate=g)
             if rule.maximum is not None:
-                hi = float(rule.maximum)
-                if rule.exclusive_maximum:
-                    add(lambda col, v=hi: col.cast("double") >= v,
-                        ErrorCode.NUMBER_TOO_LARGE.value, self_path, pstr)
-                else:
-                    add(lambda col, v=hi: col.cast("double") > v,
-                        ErrorCode.NUMBER_TOO_LARGE.value, self_path, pstr)
-            if rule.multiple_of is not None:
-                k = rule.multiple_of
-                if jt == "integer" and isinstance(k, int):
-                    add(lambda col, v=k: F.pmod(col, F.lit(v)) != 0,
-                        ErrorCode.NUMBER_NOT_MULTIPLE.value, self_path, pstr)
-                else:
-                    # exact float-tolerance branch
-                    # (reference: json_schema/constraints/numbers.py:97-113);
-                    # pmod matches Python %'s sign-of-divisor convention
-                    def mult_cond(col: Column, v=float(k)) -> Column:
-                        m = F.pmod(col.cast("double"), F.lit(v))
-                        return ~((m < FLOAT_TOLERANCE) | (F.abs(m - F.lit(v)) < FLOAT_TOLERANCE))
+                check(lambda v, t, hi=float(rule.maximum), ex=rule.exclusive_maximum:
+                      (d(v) >= hi) if ex else (d(v) > hi),
+                      ErrorCode.NUMBER_TOO_LARGE.value, gate=g)
+            k = rule.multiple_of
+            if k is not None and m.jt == "integer" and isinstance(k, int):
+                check(lambda v, t, k=k: F.pmod(v, F.lit(k)) != 0,
+                      ErrorCode.NUMBER_NOT_MULTIPLE.value, gate=g)
+            elif k is not None:
+                # float-tolerance branch (reference: numbers.py:97-113);
+                # pmod matches Python %'s sign-of-divisor convention
+                def mult_miss(v, t, k=float(k)):
+                    r = F.pmod(d(v), F.lit(k))
+                    return ~((r < FLOAT_TOLERANCE) | (F.abs(r - F.lit(k)) < FLOAT_TOLERANCE))
 
-                    add(mult_cond, ErrorCode.NUMBER_NOT_MULTIPLE.value, self_path, pstr)
+                check(mult_miss, ErrorCode.NUMBER_NOT_MULTIPLE.value, gate=g)
 
         # --- array (reference: json_schema/constraints/arrays.py:52-105) ---
-        if jt == "array" and isinstance(dtype, T.ArrayType):
-            el_dtype = dtype.elementType
-            sz = lambda col: F.size(col).cast("string")  # noqa: E731
-            if rule.min_items is not None:
-                add(lambda col, n=rule.min_items: F.size(col) < n,
-                    ErrorCode.ARRAY_TOO_SHORT.value, self_path, sz)
-            if rule.max_items is not None:
-                add(lambda col, n=rule.max_items: F.size(col) > n,
-                    ErrorCode.ARRAY_TOO_LONG.value, self_path, sz)
-            if rule.unique_items:
-                # fast path: native distinct-size comparison (equality ==
-                # str()-repr equality for typed data; the 1 vs "1" collision
-                # cannot occur — reference: arrays.py:72-98)
-                def unique_cond(col: Column) -> Column:
-                    return F.size(F.array_distinct(col)) < F.size(col)
+        g = m.family("array")
+        if g is not False:
+            self._array(rule, m, g, seq)
 
-                def unique_emit(col: Column, path: Column, el=el_dtype) -> Column:
-                    # slow path (only for flagged rows): locate the first
-                    # duplicate index. The array is bound as a lambda variable
-                    # (single-element transform) so the quadratic probe never
-                    # re-evaluates it — HOF lambdas have no CSE.
-                    def find_dup(rs: Column) -> Column:
-                        idxs = F.filter(
-                            F.transform(rs, lambda x, i: i),
-                            lambda i: F.exists(
-                                F.slice(rs, F.lit(1), i),
-                                lambda y: y.eqNullSafe(F.get(rs, i)),
-                            ),
-                        )
-                        return F.get(idxs, 0)  # null-safe under ANSI mode
-
-                    dup_i = F.get(F.transform(F.array(col), find_dup), 0)
-                    return _maybe(
-                        dup_i.isNotNull(),
-                        ErrorCode.ARRAY_ITEMS_NOT_UNIQUE.value,
-                        _index_path(path, dup_i),
-                        py_str(F.get(col, dup_i), el),
-                    )
-
-                seq.append(Check(cond=unique_cond, emit=unique_emit))
-            if rule.items is not None:
-                item = self.bind(rule.items, el_dtype)
-                # a NULL array element is a present null VALUE (arrays are
-                # positional — no absence), validated per JSON semantics;
-                # its violations are compile-time constants
-                nv = _null_value_viols(rule.items, self.verbose)
-
-                # PERF: when maxItems bounds the array, the boolean fast
-                # path UNROLLS per-index element checks instead of an
-                # interpreted HOF `exists` — F.get + struct-field predicates
-                # stay inside whole-stage codegen (measured 2.0x on the
-                # headline fires gate at 2M docs). The violation constructor
-                # keeps the HOF transform: it runs only on flagged rows and
-                # must preserve emission order/paths.
-                unroll = (
-                    rule.max_items
-                    if rule.max_items is not None and 0 < rule.max_items <= ARRAY_UNROLL_LIMIT
-                    else None
-                )
-
-                def items_fires(col: Column, b=item, nv=nv, unroll=unroll) -> Column:
-                    if unroll:
-                        sz = F.size(col)
-                        any_c: Optional[Column] = None
-                        for i in range(unroll):
-                            e = F.get(col, i)
-                            c = (F.lit(i) < sz) & F.when(
-                                e.isNull(), F.lit(bool(nv))
-                            ).otherwise(b.fires(e))
-                            any_c = c if any_c is None else (any_c | c)
-                        # elements past maxItems need no check: the size
-                        # bound itself already fires for such rows
-                        return any_c
-                    return F.exists(
-                        col,
-                        lambda x: F.when(x.isNull(), F.lit(bool(nv))).otherwise(
-                            b.fires(x)
-                        ),
-                    )
-
-                seq.append(
-                    Bound(
-                        viol=lambda col, path, b=item, nv=nv: F.flatten(
-                            F.transform(
-                                col,
-                                lambda x, i: F.when(
-                                    x.isNull(), _const_viols(nv, _index_path(path, i))
-                                ).otherwise(b.viol(x, _index_path(path, i))),
-                            )
-                        ),
-                        fires=items_fires,
-                    )
-                )
-
-        # --- object on StructType (fixed keys) ---
-        if jt == "object" and isinstance(dtype, T.StructType):
-            self._bind_object_struct(rule, dtype, seq, add)
-
-        # --- object on MapType (open keys) ---
-        if jt == "object" and isinstance(dtype, T.MapType):
-            self._bind_object_map(rule, dtype, seq, add)
+        # --- object (reference: json_schema/constraints/objects.py:74-187) ---
+        g = m.family("object")
+        if g is not False:
+            fields = m.fields()
+            if fields is not None:
+                oseq = self._struct_entries(rule, fields)
+            else:
+                oseq = self._map_entries(rule, m.values())
+            if oseq:
+                seq.extend(m.object(oseq, g))
 
         # --- logical combinators (reference: json_schema/constraints/logical.py) ---
-        if rule.all_of:
-            branches = [self.bind(b, dtype) for b in rule.all_of]
-            for i, br in enumerate(branches):  # all branches accumulate (logical.py:13-113)
-                if self.verbose:
-                    # reference prefixes each branch error (logical.py:98-103)
-                    seq.append(
-                        Bound(
-                            viol=lambda col, path, b=br, p=f"allOf[{i}]:": _prefix_viols(
-                                b.viol(col, path), p
-                            ),
-                            fires=br.fires,
-                        )
-                    )
-                else:
-                    seq.append(br)
+        for i, b in enumerate([self.bind(x, m) for x in rule.all_of]):
+            # all branches accumulate (logical.py:13-113); verbose prefixes
+            # each branch error (logical.py:98-103)
+            pre = f"allOf[{i}]:" if self.verbose else None
+            seq.append(_child(
+                lambda v, t, p, b=b, pre=pre: (
+                    _prefix_viols(b.viol(v, p), pre) if pre else b.viol(v, p)
+                ),
+                lambda v, t, b=b: b.fires(v),
+            ))
 
         if rule.any_of:
-            branches = [self.bind(b, dtype) for b in rule.any_of]
+            bs = [self.bind(x, m) for x in rule.any_of]
 
-            def any_of_cond(col: Column, bs=branches) -> Column:
-                all_fail = None
-                for b in bs:
-                    f = b.fires(col)
-                    all_fail = f if all_fail is None else (all_fail & f)
-                return all_fail
+            def none_match(v, t, bs=bs):
+                return reduce(operator.and_, [b.fires(v) for b in bs])
 
             # success is silent; total failure emits one ANY_OF_NO_MATCH
             # (reference short-circuit: logical.py:187-192)
-            add(any_of_cond, ErrorCode.ANY_OF_NO_MATCH.value, self_path, lambda col: F.lit(""))
-
+            check(none_match, ErrorCode.ANY_OF_NO_MATCH.value, _blank_obs)
             if self.verbose:
                 # per-branch failure detail AFTER the no-match error
                 # (reference: logical.py:206-222)
-                def any_detail_viol(col: Column, path: Column, bs=branches) -> Column:
-                    parts = [
-                        _prefix_viols(b.viol(col, path), f"anyOf[{i}]:")
-                        for i, b in enumerate(bs)
-                    ]
+                def any_detail(v, t, p, bs=bs):
+                    parts = [_prefix_viols(b.viol(v, p), f"anyOf[{i}]:") for i, b in enumerate(bs)]
                     body = parts[0] if len(parts) == 1 else F.concat(*parts)
-                    return F.when(any_of_cond(col), body).otherwise(_empty())
+                    return F.when(none_match(v, t), body).otherwise(_empty())
 
-                seq.append(Bound(viol=any_detail_viol, fires=_never))
+                seq.append(_child(any_detail, lambda v, t: F.lit(False)))
 
         if rule.one_of:
-            branches = [self.bind(b, dtype) for b in rule.one_of]
+            bs = [self.bind(x, m) for x in rule.one_of]
 
-            def match_count(col: Column, bs=branches) -> Column:
-                n = None
-                for b in bs:
-                    m = (~b.fires(col)).cast("int")
-                    n = m if n is None else (n + m)
-                return n
+            def match_count(v, bs=bs):
+                return reduce(operator.add, [(~b.fires(v)).cast("int") for b in bs])
 
-            def one_of_viol(col: Column, path: Column, bs=branches) -> Column:
+            def one_of_viol(v, t, p, bs=bs):
                 # exactly-1 match; >1 emits TWO errors, the second listing the
                 # matching branch indices (reference: logical.py:319-363)
-                n = match_count(col)
+                n = match_count(v)
                 idx_list = F.concat_ws(
                     ",",
                     F.filter(
-                        F.array(
-                            *[F.when(~b.fires(col), F.lit(str(i))) for i, b in enumerate(bs)]
-                        ),
-                        lambda x: x.isNotNull(),
+                        F.array(*[F.when(~b.fires(v), F.lit(str(i))) for i, b in enumerate(bs)]),
+                        _nonnull,
                     ),
                 )
                 return F.filter(
                     F.array(
-                        _maybe(n == 0, ErrorCode.ONE_OF_NO_MATCH.value, path, F.lit("")),
-                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, path, F.lit("")),
-                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, path, idx_list),
+                        _maybe(n == 0, ErrorCode.ONE_OF_NO_MATCH.value, p, F.lit("")),
+                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, p, F.lit("")),
+                        _maybe(n > 1, ErrorCode.ONE_OF_MULTIPLE_MATCHES.value, p, idx_list),
                     ).cast(VIOLATION_TYPE),
-                    lambda x: x.isNotNull(),
+                    _nonnull,
                 )
 
-            seq.append(
-                Bound(viol=one_of_viol, fires=lambda col: match_count(col) != 1)
-            )
+            seq.append(_child(one_of_viol, lambda v, t: match_count(v) != 1))
 
         if rule.not_ is not None:
-            inner = self.bind(rule.not_, dtype)
             # inner errors swallowed; inner success = violation
             # (reference: logical.py:377-462)
-            add(
-                lambda col, b=inner: ~b.fires(col),
-                ErrorCode.NOT_SCHEMA_MATCHED.value,
-                self_path,
-                lambda col: F.lit(""),
-            )
+            check(lambda v, t, b=self.bind(rule.not_, m): ~b.fires(v),
+                  ErrorCode.NOT_SCHEMA_MATCHED.value, _blank_obs)
 
-        # ---- assemble this node (emission order == pyeval order): runs of
-        # consecutive leaf checks collapse into ONE array+filter, child
-        # arrays concat in place ----
-        def viol(col: Column, path: Column) -> Column:
-            arrs: list[Column] = []
-            pending: list[Check] = []
-
-            def flush() -> None:
-                if pending:
-                    arrs.append(
-                        F.filter(
-                            F.array(*[c.emit(col, path) for c in pending]).cast(
-                                VIOLATION_TYPE
-                            ),
-                            lambda x: x.isNotNull(),
-                        )
-                    )
-                    pending.clear()
-
-            for item in seq:
-                if isinstance(item, Check):
-                    pending.append(item)
-                else:
-                    flush()
-                    arrs.append(item.viol(col, path))
-            flush()
-            body = arrs[0] if len(arrs) == 1 else (F.concat(*arrs) if arrs else _empty())
-            return F.when(col.isNull(), _empty()).otherwise(body)
-
-        def fires(col: Column) -> Column:
-            any_c: Optional[Column] = None
-            for item in seq:
-                f = item.cond(col) if isinstance(item, Check) else item.fires(col)
-                any_c = f if any_c is None else (any_c | f)
-            if any_c is None:
-                return F.lit(False)
-            return col.isNotNull() & any_c
-
-        return Bound(viol=viol, fires=fires)
+        return seq
 
     # ------------------------------------------------------------------ #
 
-    def _bind_object_struct(
-        self,
-        rule: Rule,
-        dtype: T.StructType,
-        seq: list[Any],
-        add,
-    ) -> None:
-        """Object keywords over a fixed StructType. Keys are compile-time
-        constants, so patternProperties / additionalProperties / propertyNames
-        partially constant-fold (the reference evaluates all per row,
-        json_schema/constraints/objects.py:74-187). Validation order mirrors
-        the reference: min/max properties → required → dependencies →
-        propertyNames → properties → patternProperties → additionalProperties."""
-        fields = {f.name: f.dataType for f in dtype.fields}
+    def _array(self, rule: Rule, m, g, seq: list) -> None:
+        a, em = m.array, m.items()
 
-        def present_count(col: Column) -> Column:
+        def size_obs(v, t):
+            return F.size(a(v)).cast("string")
+
+        if rule.min_items is not None:
+            seq.append(_check(lambda v, t, n=rule.min_items: F.size(a(v)) < n,
+                              ErrorCode.ARRAY_TOO_SHORT.value, size_obs, gate=g))
+        if rule.max_items is not None:
+            seq.append(_check(lambda v, t, n=rule.max_items: F.size(a(v)) > n,
+                              ErrorCode.ARRAY_TOO_LONG.value, size_obs, gate=g))
+        if rule.unique_items:
+            # fires: a distinct-size comparison; viol (flagged rows only):
+            # locate the first duplicate. The array is bound as a lambda
+            # variable so the quadratic probe never re-evaluates it.
+            # Comparable elements keep reference str()-repr equality classes
+            # (reference: arrays.py:72-98).
+            keys = em.comparable
+
+            def unique_miss(v, t):
+                ks = keys(a(v))
+                return F.size(F.array_distinct(ks)) < F.size(ks)
+
+            def first_dup(rs: Column) -> Column:
+                ks = keys(rs)
+                idxs = F.filter(
+                    F.transform(ks, lambda x, i: i),
+                    lambda i: F.exists(F.slice(ks, F.lit(1), i), lambda y: y.eqNullSafe(F.get(ks, i))),
+                )
+                return F.get(idxs, 0)  # null-safe under ANSI mode
+
+            def unique_viol(v, t, p):
+                arr = a(v)
+                dup = F.get(F.transform(F.array(arr), first_dup), 0)
+                found = dup.isNotNull() if g is True else g(t) & dup.isNotNull()
+                return _maybe(found, ErrorCode.ARRAY_ITEMS_NOT_UNIQUE.value,
+                              _index_path(p, dup), em.obs(F.get(arr, dup)))
+
+            seq.append(Entry(True, unique_viol, _gated(g, unique_miss)))
+        if rule.items is not None:
+            # a NULL array element is a present null VALUE (arrays are
+            # positional — no absence), validated per JSON semantics
+            cv, cf = em.present(self.bind(rule.items, em), rule.items, self.verbose)
+            # PERF: a maxItems-bounded typed array UNROLLS the boolean fast
+            # path into per-index element checks instead of an interpreted
+            # HOF `exists` — F.get + struct-field predicates stay inside
+            # whole-stage codegen. Elements past maxItems need no check: the
+            # size bound itself already fires for such rows.
+            unroll = rule.max_items if rule.max_items is not None and 0 < rule.max_items <= m.unroll_limit else 0
+
+            def items_viol(v, t, p):
+                def elem(x, i):
+                    ip = _index_path(p, i)
+                    if m.gate_items:  # a clean element builds no violation
+                        return F.when(cf(x), cv(x, ip)).otherwise(_empty())
+                    return cv(x, ip)
+
+                return F.flatten(F.transform(a(v), elem))
+
+            def items_fires(v, t):
+                arr = a(v)
+                if unroll:
+                    sz = F.size(arr)
+                    return reduce(operator.or_, [(F.lit(i) < sz) & cf(F.get(arr, i)) for i in range(unroll)])
+                return F.exists(arr, cf)
+
+            seq.append(_child(items_viol, items_fires, g))
+
+    def _struct_entries(self, rule: Rule, fields: dict) -> list:
+        """Object keywords over a closed-key StructType (typed only): keys are
+        compile-time constants, so patternProperties / additionalProperties /
+        propertyNames partially constant-fold (the reference evaluates all
+        per row). Order: min/max properties → required → dependencies →
+        propertyNames → properties → patternProperties → additionalProperties."""
+        seq: list[Entry] = []
+
+        def check(cond, code, obs, path=_here):
+            seq.append(_check(cond, code, obs, path))
+
+        def at_key(k):
+            return lambda v, t, p: _child_path(p, k)
+
+        def present_count(v):
             cnt = F.lit(0)
             for k in fields:
-                cnt = cnt + col.getField(k).isNotNull().cast("int")
+                cnt = cnt + v.getField(k).isNotNull().cast("int")
             return cnt
 
-        cstr = lambda col: present_count(col).cast("string")  # noqa: E731
+        def count_obs(v, t):
+            return present_count(v).cast("string")
+
         if rule.min_properties is not None:
-            add(lambda col, n=rule.min_properties: present_count(col) < n,
-                ErrorCode.OBJECT_TOO_FEW_PROPERTIES.value,
-                lambda col, path: path, cstr)
+            check(lambda v, t, n=rule.min_properties: present_count(v) < n,
+                  ErrorCode.OBJECT_TOO_FEW_PROPERTIES.value, count_obs)
         if rule.max_properties is not None:
-            add(lambda col, n=rule.max_properties: present_count(col) > n,
-                ErrorCode.OBJECT_TOO_MANY_PROPERTIES.value,
-                lambda col, path: path, cstr)
-
+            check(lambda v, t, n=rule.max_properties: present_count(v) > n,
+                  ErrorCode.OBJECT_TOO_MANY_PROPERTIES.value, count_obs)
         for req in rule.required:
-            cond = (
-                (lambda col, k=req: col.getField(k).isNull())
-                if req in fields
-                else (lambda col: F.lit(True))
-            )
-            add(cond, ErrorCode.REQUIRED_PROPERTY_MISSING.value,
-                lambda col, path, k=req: _child_path(path, k),
-                lambda col: F.lit("None"))
-
+            check((lambda v, t, k=req: v.getField(k).isNull()) if req in fields
+                  else (lambda v, t: F.lit(True)),
+                  ErrorCode.REQUIRED_PROPERTY_MISSING.value, _none_obs, at_key(req))
         for dep_key, dep_reqs in rule.dependencies.items():
             if dep_key not in fields:
                 continue  # trigger key can never be present
             for needed in dep_reqs:
-                cond = (
-                    (lambda col, a=dep_key, b=needed: col.getField(a).isNotNull()
-                     & col.getField(b).isNull())
-                    if needed in fields
-                    else (lambda col, a=dep_key: col.getField(a).isNotNull())
-                )
-                add(cond, ErrorCode.DEPENDENCY_MISSING.value,
-                    lambda col, path, k=needed: _child_path(path, k),
-                    lambda col: F.lit("None"))
-
+                check((lambda v, t, a=dep_key, b=needed: v.getField(a).isNotNull() & v.getField(b).isNull())
+                      if needed in fields else (lambda v, t, a=dep_key: v.getField(a).isNotNull()),
+                      ErrorCode.DEPENDENCY_MISSING.value, _none_obs, at_key(needed))
         if rule.property_names is not None:
-            # static keys → fold driver-side via pyeval; the reference emits
-            # the UNDERLYING code (e.g. PATTERN_MISMATCH) at the key's path,
-            # not a dedicated propertyNames code
+            # static keys fold driver-side via pyeval; the reference emits the
+            # UNDERLYING code (e.g. PATTERN_MISMATCH) at the key's path
             from json_schema_py_spark.schema.pyeval import string_rule_violations
 
             for k in fields:
                 for code, _vp, obs in string_rule_violations(rule.property_names, k):
-                    add(lambda col, k=k: col.getField(k).isNotNull(),
-                        code,
-                        lambda col, path, k=k: _child_path(path, k),
-                        lambda col, o=obs: F.lit(o))
+                    check(lambda v, t, k=k: v.getField(k).isNotNull(), code,
+                          lambda v, t, o=obs: F.lit(o), at_key(k))
 
-        matched_keys: set[str] = set()
-        # entries: ("sub", key, rule) to bind a child, or ("bad_pat", pattern,
-        # error) for a Python-invalid patternProperties regex — kept in
-        # EMISSION order (properties first, then per-pattern in pattern
-        # order) so the sequence stays pyeval/reference-exact
-        entries: list[tuple] = []
+        matched: set[str] = set()
+        # ("sub", key, rule) binds a child; ("bad_pat", pattern) is a
+        # Python-invalid patternProperties regex — in EMISSION order
+        # (properties first, then per-pattern in pattern order)
+        todo: list[tuple] = []
         for k, sub in rule.properties.items():
-            matched_keys.add(k)
+            matched.add(k)
             if k in fields:
-                entries.append(("sub", k, sub))
+                todo.append(("sub", k, sub))
         for pat, sub in rule.pattern_properties.items():
             try:
                 cre = re.compile(pat)
-            except re.error as e:
-                # reference emits SCHEMA_INVALID at the object's path, once
-                # per invalid pattern per validated object (objects.py:147-152)
-                entries.append(("bad_pat", pat, str(e)))
+            except re.error:
+                todo.append(("bad_pat", pat, None))
                 continue
             for k in fields:
                 if cre.search(k):
-                    if k not in matched_keys:
-                        entries.append(("sub", k, sub))
-                    matched_keys.add(k)
-
-        for kind, a, b_ in entries:
-            if kind == "bad_pat":
-                add(lambda col: F.lit(True),
-                    ErrorCode.SCHEMA_INVALID.value,
-                    lambda col, path: path,
-                    lambda col, p=a: F.lit(p))
-                continue
-            k, sub = a, b_
-            b = self.bind(sub, fields[k])
-            seq.append(
-                Bound(
-                    viol=lambda col, path, k=k, b=b: b.viol(
-                        col.getField(k), _child_path(path, k)
-                    ),
-                    fires=lambda col, k=k, b=b: b.fires(col.getField(k)),
-                )
-            )
-
+                    if k not in matched:
+                        todo.append(("sub", k, sub))
+                    matched.add(k)
         ap = rule.additional_properties
         if ap is not None:
-            matched_keys |= set(rule.exempt_properties)  # sibling-branch escape hatch
-            extra_keys = [k for k in fields if k not in matched_keys]
-            if ap is False:
-                for k in extra_keys:
-                    add(lambda col, k=k: col.getField(k).isNotNull(),
-                        ErrorCode.ADDITIONAL_PROPERTY_NOT_ALLOWED.value,
-                        lambda col, path, k=k: _child_path(path, k),
-                        lambda col, k=k, dt=fields[k]: py_str(col.getField(k), dt))
-            elif isinstance(ap, Rule):
-                for k in extra_keys:
-                    b = self.bind(ap, fields[k])
-                    seq.append(
-                        Bound(
-                            viol=lambda col, path, k=k, b=b: b.viol(
-                                col.getField(k), _child_path(path, k)
-                            ),
-                            fires=lambda col, k=k, b=b: b.fires(col.getField(k)),
-                        )
-                    )
+            matched |= set(rule.exempt_properties)  # sibling-branch escape hatch
+            extra = [k for k in fields if k not in matched]
+            if isinstance(ap, Rule):
+                todo += [("sub", k, ap) for k in extra]
 
-    # ------------------------------------------------------------------ #
+        for kind, k, sub in todo:
+            if kind == "bad_pat":
+                # SCHEMA_INVALID at the object's path, once per invalid
+                # pattern per validated object (reference objects.py:147-152)
+                check(lambda v, t: F.lit(True), ErrorCode.SCHEMA_INVALID.value,
+                      lambda v, t, p_=k: F.lit(p_))
+                continue
+            b = self.bind(sub, Typed(fields[k]))
+            seq.append(_child(lambda v, t, p, k=k, b=b: b.viol(v.getField(k), _child_path(p, k)),
+                              lambda v, t, k=k, b=b: b.fires(v.getField(k))))
+        if ap is False:
+            for k in extra:
+                check(lambda v, t, k=k: v.getField(k).isNotNull(),
+                      ErrorCode.ADDITIONAL_PROPERTY_NOT_ALLOWED.value,
+                      lambda v, t, k=k: Typed(fields[k]).obs(v.getField(k)), at_key(k))
+        return seq
 
-    def _bind_object_map(
-        self,
-        rule: Rule,
-        dtype: T.MapType,
-        seq: list[Any],
-        add,
-    ) -> None:
-        """Object keywords over an open-keyed MapType — the dynamic-document
-        case (reference: json_schema/constraints/objects.py:74-187). All
-        checks are runtime expressions over map_keys/map entries."""
-        val_dtype = dtype.valueType
+    def _map_entries(self, rule: Rule, vm) -> list:
+        """Object keywords over an open-keyed map value ``o`` — a typed
+        MapType column or a VARIANT object read as map<string,variant>;
+        ``vm`` models the map's values. Keys are runtime strings, so
+        propertyNames binds them as Typed(StringType()); entries iterate
+        once (no per-key lookup scan)."""
+        from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
 
-        szstr = lambda col: F.size(col).cast("string")  # noqa: E731
+        seq: list[Entry] = []
+
+        def has(o, k):
+            return F.map_contains_key(o, F.lit(k))
+
+        def size_obs(o, t):
+            return F.size(o).cast("string")
+
         if rule.min_properties is not None:
-            add(lambda col, n=rule.min_properties: F.size(col) < n,
-                ErrorCode.OBJECT_TOO_FEW_PROPERTIES.value,
-                lambda col, path: path, szstr)
+            seq.append(_check(lambda o, t, n=rule.min_properties: F.size(o) < n,
+                              ErrorCode.OBJECT_TOO_FEW_PROPERTIES.value, size_obs))
         if rule.max_properties is not None:
-            add(lambda col, n=rule.max_properties: F.size(col) > n,
-                ErrorCode.OBJECT_TOO_MANY_PROPERTIES.value,
-                lambda col, path: path, szstr)
-
+            seq.append(_check(lambda o, t, n=rule.max_properties: F.size(o) > n,
+                              ErrorCode.OBJECT_TOO_MANY_PROPERTIES.value, size_obs))
         for req in rule.required:
-            add(lambda col, k=req: ~F.map_contains_key(col, F.lit(k)),
-                ErrorCode.REQUIRED_PROPERTY_MISSING.value,
-                lambda col, path, k=req: _child_path(path, k),
-                lambda col: F.lit("None"))
-
+            seq.append(_check(lambda o, t, k=req: ~has(o, k), ErrorCode.REQUIRED_PROPERTY_MISSING.value,
+                              _none_obs, lambda o, t, p, k=req: _child_path(p, k)))
         for dep_key, dep_reqs in rule.dependencies.items():
             for needed in dep_reqs:
-                add(lambda col, a=dep_key, b=needed: F.map_contains_key(col, F.lit(a))
-                    & ~F.map_contains_key(col, F.lit(b)),
-                    ErrorCode.DEPENDENCY_MISSING.value,
-                    lambda col, path, k=needed: _child_path(path, k),
-                    lambda col: F.lit("None"))
-
+                seq.append(_check(lambda o, t, a=dep_key, b=needed: has(o, a) & ~has(o, b),
+                                  ErrorCode.DEPENDENCY_MISSING.value, _none_obs,
+                                  lambda o, t, p, k=needed: _child_path(p, k)))
         if rule.property_names is not None:
-            # runtime keys: validate each key AS a string value; underlying
-            # codes surface at the key's path (reference behavior)
-            nb = self.bind(rule.property_names, T.StringType())
-            seq.append(
-                Bound(
-                    viol=lambda col, path, b=nb: F.flatten(
-                        F.transform(
-                            F.filter(F.map_keys(col), lambda k: b.fires(k)),
-                            lambda k: b.viol(k, _key_path(path, k)),
-                        )
-                    ),
-                    fires=lambda col, b=nb: F.exists(F.map_keys(col), lambda k: b.fires(k)),
-                )
-            )
-
-        matched_static = list(rule.properties.keys())
+            # keys are statically strings; underlying codes surface at the
+            # key's path (reference behavior)
+            kb = self.bind(rule.property_names, Typed(T.StringType()))
+            seq.append(_each_entry(F.map_entries, "key", kb.viol, kb.fires))
         for k, sub in rule.properties.items():
-            b = self.bind(sub, val_dtype)
-            # map values follow JSON semantics: a null VALUE under a present
-            # key is validated as null (compile-time folded), unlike absent
-            # struct fields
-            nv = _null_value_viols(sub, self.verbose)
-            seq.append(
-                Bound(
-                    viol=lambda col, path, k=k, b=b, nv=nv: F.when(
-                        F.map_contains_key(col, F.lit(k))
-                        & F.try_element_at(col, F.lit(k)).isNull(),
-                        _const_viols(nv, _child_path(path, k)),
-                    )
-                    .when(
-                        F.map_contains_key(col, F.lit(k)),
-                        b.viol(F.try_element_at(col, F.lit(k)), _child_path(path, k)),
-                    )
-                    .otherwise(_empty()),
-                    fires=lambda col, k=k, b=b, nv=nv: F.map_contains_key(col, F.lit(k))
-                    & F.when(
-                        F.try_element_at(col, F.lit(k)).isNull(), F.lit(bool(nv))
-                    ).otherwise(b.fires(F.try_element_at(col, F.lit(k)))),
-                )
-            )
-
-        # patternProperties keys: mirror the `pattern` keyword path —
+            # a present-but-CLEAN property builds no violation
+            cv, cf = vm.present(self.bind(sub, vm), sub, self.verbose)
+            seq.append(_child(
+                lambda o, t, p, k=k, cv=cv, cf=cf: F.when(
+                    has(o, k) & cf(F.try_element_at(o, F.lit(k))),
+                    cv(F.try_element_at(o, F.lit(k)), _child_path(p, k)),
+                ).otherwise(_empty()),
+                lambda o, t, k=k, cf=cf: has(o, k) & cf(F.try_element_at(o, F.lit(k))),
+            ))
         # Python-invalid patterns emit SCHEMA_INVALID at the object's path
-        # (reference objects.py:147-152), valid ones are mechanically
-        # translated to the Java dialect and fail fast if untranslatable;
-        # keys already matched by static `properties` are EXCLUDED
-        # (pyeval: `if k not in rule.properties`)
-        pattern_list: list[str] = []
+        # (reference objects.py:147-152); valid ones translate to the Java
+        # dialect or fail fast; keys matched by static `properties` are
+        # excluded (pyeval: `if k not in rule.properties`)
+        static = list(rule.properties)
+        patterns: list[str] = []
         for pat, sub in rule.pattern_properties.items():
-            from json_schema_py_spark.schema.regex_dialect import checked_java_pattern
-
             jpat = checked_java_pattern(pat, "patternProperties")
             if jpat is None:
-                # Python-invalid: the reference emits SCHEMA_INVALID at the
-                # object's path, once per invalid pattern per validated
-                # object (objects.py:147-152) — silently skipping was a
-                # round-3 parity find, fixed with pyeval in lockstep
-                add(lambda col: F.lit(True),
-                    ErrorCode.SCHEMA_INVALID.value,
-                    lambda col, path: path,
-                    lambda col, p=pat: F.lit(p))
+                seq.append(_check(lambda o, t: F.lit(True), ErrorCode.SCHEMA_INVALID.value,
+                                  lambda o, t, p_=pat: F.lit(p_)))
                 continue
-            pattern_list.append(jpat)
-            b = self.bind(sub, val_dtype)
-            nv = _null_value_viols(sub, self.verbose)
-            static_keys = tuple(rule.properties.keys())
+            patterns.append(jpat)
+            cv, cf = vm.present(self.bind(sub, vm), sub, self.verbose)
 
-            def pat_keys(col: Column, p=jpat, sk=static_keys) -> Column:
-                def match(k: Column) -> Column:
-                    cond = k.rlike(p)
-                    if sk:
-                        cond = cond & ~k.isin(list(sk))
-                    return cond
+            def matching(o, jp=jpat):
+                def match(e: Column) -> Column:
+                    c = e["key"].rlike(jp)
+                    return c & ~e["key"].isin(static) if static else c
 
-                return F.filter(F.map_keys(col), match)
+                return F.filter(F.map_entries(o), match)
 
-            seq.append(
-                Bound(
-                    viol=lambda col, path, b=b, pk=pat_keys, nv=nv: F.flatten(
-                        F.transform(
-                            pk(col),
-                            lambda k: F.when(
-                                F.try_element_at(col, k).isNull(),
-                                _const_viols(nv, _key_path(path, k)),
-                            ).otherwise(
-                                b.viol(
-                                    F.try_element_at(col, k), _key_path(path, k)
-                                )
-                            ),
-                        )
-                    ),
-                    fires=lambda col, b=b, pk=pat_keys, nv=nv: F.exists(
-                        pk(col),
-                        lambda k: F.when(
-                            F.try_element_at(col, k).isNull(), F.lit(bool(nv))
-                        ).otherwise(b.fires(F.try_element_at(col, k))),
-                    ),
-                )
-            )
+            seq.append(_each_entry(matching, "value", cv, cf))
 
         ap = rule.additional_properties
         if ap is not None:
+            skip = static + sorted(set(rule.exempt_properties) - set(static))
 
-            def extra_keys(col: Column) -> Column:
-                ks = F.map_keys(col)
-                skip = list(set(matched_static) | set(rule.exempt_properties))
-                if skip:
-                    ks = F.filter(ks, lambda k: ~k.isin(skip))
+            def is_extra(key: Column) -> Column:
+                c = ~key.isin(skip) if skip else F.lit(True)
+                for jp in patterns:
+                    c = c & ~key.rlike(jp)
+                return c
 
-                def _not_matching(p: str):  # closure factory (see module doc)
-                    return lambda k: ~k.rlike(p)
-
-                for p in pattern_list:
-                    ks = F.filter(ks, _not_matching(p))
-                return ks
+            def extras(o):
+                if skip or patterns:
+                    return F.filter(F.map_entries(o), lambda e: is_extra(e["key"]))
+                return F.map_entries(o)  # fully open: every entry is extra
 
             if ap is False:
-                seq.append(
-                    Bound(
-                        viol=lambda col, path: F.transform(
-                            extra_keys(col),
-                            lambda k: _viol(
-                                ErrorCode.ADDITIONAL_PROPERTY_NOT_ALLOWED.value,
-                                _key_path(path, k),
-                                py_str(F.try_element_at(col, k), val_dtype),
-                            ),
-                        ).cast(VIOLATION_TYPE),
-                        fires=lambda col: F.size(extra_keys(col)) > 0,
-                    )
-                )
+                seq.append(Entry(
+                    False,
+                    lambda o, t, p: F.transform(
+                        extras(o),
+                        lambda e: _viol(ErrorCode.ADDITIONAL_PROPERTY_NOT_ALLOWED.value,
+                                        _key_path(p, e["key"]), vm.obs(e["value"])),
+                    ).cast(VIOLATION_TYPE),
+                    # exists short-circuits on the first extra key
+                    lambda o, t: F.exists(F.map_keys(o), is_extra),
+                ))
             elif isinstance(ap, Rule):
-                b = self.bind(ap, val_dtype)
-                nv = _null_value_viols(ap, self.verbose)
-                seq.append(
-                    Bound(
-                        viol=lambda col, path, b=b, nv=nv: F.flatten(
-                            F.transform(
-                                extra_keys(col),
-                                lambda k: F.when(
-                                    F.try_element_at(col, k).isNull(),
-                                    _const_viols(nv, _key_path(path, k)),
-                                ).otherwise(
-                                    b.viol(
-                                        F.try_element_at(col, k),
-                                        _key_path(path, k),
-                                    )
-                                ),
-                            )
-                        ),
-                        fires=lambda col, b=b, nv=nv: F.exists(
-                            extra_keys(col),
-                            lambda k: F.when(
-                                F.try_element_at(col, k).isNull(), F.lit(bool(nv))
-                            ).otherwise(b.fires(F.try_element_at(col, k))),
-                        ),
-                    )
-                )
+                cv, cf = vm.present(self.bind(ap, vm), ap, self.verbose)
+                seq.append(_each_entry(extras, "value", cv, cf))
+        return seq
 
 
 # ---------------------------------------------------------------------- #
@@ -1139,11 +995,31 @@ def _compile_cache_key(schema: Any, struct_type: T.StructType, mode: str) -> Opt
     try:
         # key order is PRESERVED (no sort_keys): properties order drives the
         # engine's order-exact violation emission, so two schemas differing
-        # only in key order must compile separately (review finding r03)
+        # only in key order must compile separately
         skey = _json.dumps(schema, default=str)
     except (TypeError, ValueError):
         return None
     return (skey, struct_type.json(), mode)
+
+
+def _bind_root(schema: Any, struct_type: T.StructType, verbose: bool) -> Bound:
+    rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
+    return RuleBinder(verbose=verbose).bind(rule, Typed(struct_type))
+
+
+def gated_document(b: Bound, doc: Column) -> Column:
+    """The document's violations at the root pointer: the allocation-free
+    boolean gate runs first, so clean documents build nothing."""
+    return F.when(b.fires(doc), b.viol(doc, F.lit(""))).otherwise(_empty())
+
+
+def _on_row(struct_type: T.StructType, bind_row: bool, body: Callable[[Column], Column]) -> Column:
+    """``body`` over the row as one struct value; ``bind_row`` binds it
+    once as a transform() lambda variable (see compile_ruleset)."""
+    root = F.struct(*[F.col(f.name) for f in struct_type.fields])
+    if not bind_row:
+        return body(root)
+    return F.get(F.transform(F.array(root), lambda row: body(row)), 0)
 
 
 def compile_ruleset(
@@ -1165,7 +1041,7 @@ def compile_ruleset(
     violation-array construction, so clean rows (the overwhelming majority at
     10^12 scale) never allocate a struct, a path string, or an array.
 
-    ``bind_row`` (round-7): with True (default, the r6 form) the row is
+    ``bind_row``: with True (the default) the row is
     bound once as a transform() lambda variable — that binding makes the
     whole ruleset a higher-order function (CodegenFallback, interpreted)
     but guarantees DERIVED input columns are evaluated once even after a
@@ -1182,22 +1058,8 @@ def compile_ruleset(
     key = _compile_cache_key(schema, struct_type, f"viol:{verbose}:bind{bind_row}")
 
     def build() -> Column:
-        rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
-        bound = RuleBinder(verbose=verbose).bind(rule, struct_type)
-        root = F.struct(*[F.col(f.name) for f in struct_type.fields])
-        if not bind_row:
-            return F.when(
-                bound.fires(root), bound.viol(root, F.lit(""))
-            ).otherwise(_empty())
-        return F.get(
-            F.transform(
-                F.array(root),
-                lambda row: F.when(
-                    bound.fires(row), bound.viol(row, F.lit(""))
-                ).otherwise(_empty()),
-            ),
-            0,
-        )
+        bound = _bind_root(schema, struct_type, verbose)
+        return _on_row(struct_type, bind_row, lambda row: gated_document(bound, row))
 
     return _cached_compile(key, build)
 
@@ -1211,12 +1073,7 @@ def compile_fires(
     key = _compile_cache_key(schema, struct_type, f"fires:bind{bind_row}")
 
     def build() -> Column:
-        rule = schema if isinstance(schema, Rule) else normalize_schema(schema)
-        bound = RuleBinder().bind(rule, struct_type)
-        root = F.struct(*[F.col(f.name) for f in struct_type.fields])
-        if not bind_row:
-            return bound.fires(root)
-        return F.get(F.transform(F.array(root), lambda row: bound.fires(row)), 0)
+        return _on_row(struct_type, bind_row, _bind_root(schema, struct_type, False).fires)
 
     return _cached_compile(key, build)
 
@@ -1225,7 +1082,7 @@ def _is_plain_relation(df: DataFrame) -> bool:
     """True when the frame is a bare materialized relation (parquet scan,
     cached table): its columns are storage attributes, so the unbound
     (whole-stage-codegen) ruleset form is safe and ~2x faster. Anything
-    derived (Project/Filter/...) keeps the r6 lambda binding — see
+    derived (Project/Filter/...) keeps the row-bound lambda form — see
     compile_ruleset's bind_row note."""
     try:
         return df._jdf.queryExecution().analyzed().nodeName() in (  # noqa: SLF001
@@ -1258,12 +1115,12 @@ def validate(
     the engine's golden-output shape (FIXTURES.md §5). ``verbose`` adds the
     reference's allOf[i]:/anyOf[i]: branch detail (rule_id-prefixed)."""
     vdf = with_violations(df, schema, verbose=verbose)
-    return (
-        vdf.select(F.col(key_col).alias("doc_id"), F.explode("violations").alias("v"))
-        .select(
-            "doc_id",
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.path").alias("path"),
-            F.col("v.observed").alias("observed"),
-        )
-    )
+    return explode_violations(vdf, key_col, "violations")
+
+
+def explode_violations(df: DataFrame, key_col: str, violations: Any) -> DataFrame:
+    """One ``(doc_id, rule_id, path, observed)`` row per violation of the
+    ``violations`` array column (name or Column), keyed by ``key_col``."""
+    return df.select(
+        F.col(key_col).alias("doc_id"), F.explode(violations).alias("v")
+    ).select("doc_id", "v.rule_id", "v.path", "v.observed")

@@ -144,8 +144,7 @@ def evaluate(
     branch path (logical.py:78-84) requires a ``validation_order``
     attribute that the compiler attaches only to the ROOT constraint
     (schema_compiler.py:84-87), never to a logical branch — probed and
-    pinned in test_api_cli::test_verbose_multi_failure_branch_emits_all_errors
-    (ADVICE r02 resolution)."""
+    pinned in test_api_cli::test_verbose_multi_failure_branch_emits_all_errors."""
     out: list[Violation] = []
     t = py_type_of(value)
 
@@ -208,7 +207,7 @@ def evaluate(
                         for e in errs
                     )
         # non-verbose: short-circuit on the first matching branch — this is
-        # the exact-path per-row hot loop (review finding r02)
+        # the exact-path per-row hot loop
         elif all(evaluate(b, value, path) for b in rule.any_of):
             out.append(V(ErrorCode.ANY_OF_NO_MATCH.value, path, "", _NO_MATCH_MSG))
     if rule.one_of:
@@ -384,8 +383,8 @@ def _eval_object(
             cre = re.compile(pat)
         except re.error as e:
             # the reference emits SCHEMA_INVALID at the OBJECT's path, once
-            # per invalid pattern per validated object (objects.py:147-152)
-            # — silently skipping was a parity gap (found round 3)
+            # per invalid pattern per validated object (objects.py:147-152);
+            # skipping the pattern silently would drop that error
             out.append(
                 V(ErrorCode.SCHEMA_INVALID.value, path, pat,
                   f"Invalid regex pattern '{pat}': {e}")

@@ -83,6 +83,44 @@ def test_typed_path_matches_exact_on_well_typed_docs(spark):
     assert typed == exact
 
 
+def test_typed_unique_items_over_map_elements(spark):
+    """uniqueItems over array elements that hold a map: maps are not
+    orderable, so array_distinct and <=> cannot compare them. The typed
+    path compares the elements' JSON renderings instead and matches pyeval
+    (code, path, observed) — including key order, which str() also sees."""
+    import json
+
+    from json_schema_py_spark.plans.json_docs import validate_json_typed
+    from json_schema_py_spark.schema.model import normalize_schema
+    from json_schema_py_spark.schema.pyeval import evaluate
+
+    schema = {
+        "type": "object",
+        "properties": {
+            "a": {
+                "type": "array",
+                "uniqueItems": True,
+                "items": {"type": "object", "additionalProperties": {"type": "integer"}},
+            }
+        },
+    }
+    docs = [
+        {"a": [{"x": 1}, {"x": 1}]},
+        {"a": [{"x": 1}, {"x": 2}, {"y": 1}, {"x": 2}]},
+        {"a": [{"x": 1, "y": 2}, {"y": 2, "x": 1}]},
+        {"a": [{}, {}]},
+        {"a": [{"x": 1}]},
+    ]
+    df = spark.createDataFrame(
+        [(i, json.dumps(d)) for i, d in enumerate(docs)], "doc_id long, payload string"
+    )
+    got = sorted(tuple(r) for r in validate_json_typed(df, "payload", schema).collect())
+    rule = normalize_schema(schema)
+    expected = sorted((i, *v) for i, d in enumerate(docs) for v in evaluate(rule, d, ""))
+    assert got == expected
+    assert (0, "ARRAY_ITEMS_NOT_UNIQUE", "/a/1", '{"x":1}') in got
+
+
 def test_rule_to_spark_type():
     from pyspark.sql import types as T
 

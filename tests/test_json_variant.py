@@ -182,6 +182,24 @@ def test_variant_invalid_pattern_properties_schema_invalid(spark):
     }
 
 
+def test_variant_unique_items_observed_matches_pyeval(spark):
+    """ARRAY_ITEMS_NOT_UNIQUE renders the duplicate element like every
+    other observed value (Python-ish scalars, compact JSON composites), so
+    (code, path, observed) rows equal pyeval's."""
+    from json_schema_py_spark.plans.json_variant import validate_json_variant
+    from json_schema_py_spark.schema.model import normalize_schema
+    from json_schema_py_spark.schema.pyeval import evaluate
+
+    schema = {"type": "array", "uniqueItems": True}
+    docs = [["a", "a"], [1, 2, 1], [{"x": 1}, {"x": 1}], [True, True], [None, None], [1.5, 1.5]]
+    df = spark.createDataFrame(
+        [(i, json.dumps(d)) for i, d in enumerate(docs)], "doc_id long, payload string"
+    )
+    got = sorted(tuple(r) for r in validate_json_variant(df, "payload", schema).collect())
+    rule = normalize_schema(schema)
+    assert got == sorted((i, *v) for i, d in enumerate(docs) for v in evaluate(rule, d, ""))
+
+
 def test_variant_binder_on_shredded_parquet(spark, tmp_path):
     """Round-3 experiment pinned: the binder validates a SHREDDED variant
     parquet table (spark.sql.variant.forceShreddingSchemaForTest write
@@ -191,7 +209,7 @@ def test_variant_binder_on_shredded_parquet(spark, tmp_path):
     sf0.1: shredded ~6% faster than plain, both beat per-pass re-parsing;
     shredding pays most for direct '$.key' paths, which an
     additionalProperties full-object walk cannot exploit."""
-    from json_schema_py_spark.plans.json_variant import VariantBinder
+    from json_schema_py_spark.plans.json_variant import bind_variant
     from json_schema_py_spark.schema.model import normalize_schema
 
     ev = spark.createDataFrame(
@@ -209,7 +227,7 @@ def test_variant_binder_on_shredded_parquet(spark, tmp_path):
     rule = normalize_schema(
         {"type": "object", "additionalProperties": {"type": "integer", "minimum": 50}}
     )
-    viol, fires = VariantBinder().bind(rule)
+    viol, fires = bind_variant(rule)
 
     def out(path):
         df = spark.read.parquet(path)
@@ -228,15 +246,16 @@ def test_variant_binder_on_shredded_parquet(spark, tmp_path):
 
 
 def test_property_names_string_fast_path_parity(spark):
-    """Round-4: the string-key fast path for propertyNames must emit
-    byte-identical (rule_id, path, observed) rows to the GENERIC
-    variant-wrap path across every eligible keyword family — pattern,
+    """propertyNames keys are statically strings, so every propertyNames
+    rule binds them as a string-typed value: (rule_id, path, observed) rows
+    must equal pyeval's across every keyword family — pattern,
     min/maxLength, enum (incl. non-string members), const (string and
-    non-string), Python-invalid pattern, and a type gate that excludes
-    strings. Logical-op rules stay on the generic path (eligibility)."""
+    non-string), Python-invalid pattern, a type gate that excludes strings,
+    and the four logical ops — including keys that need pointer escaping
+    ('/' and '~')."""
     import json as _json
 
-    from json_schema_py_spark.plans.json_variant import VariantBinder, validate_json_variant
+    from json_schema_py_spark.plans.json_variant import validate_json_variant
     from json_schema_py_spark.schema.model import normalize_schema
     from json_schema_py_spark.schema.pyeval import evaluate
 
@@ -245,6 +264,7 @@ def test_property_names_string_fast_path_parity(spark):
         {"a": 1},
         {"": 5, "zz": 6},
         {"ok": None, "x9": [1, 2]},
+        {"a/b": 1, "t~x": 2, "ab": 3},
     ]
     pn_schemas = [
         {"pattern": "^[a-z]+$"},
@@ -257,26 +277,22 @@ def test_property_names_string_fast_path_parity(spark):
         {"type": "integer"},                   # type gate excludes string: TYPE_ERROR per key
         {"type": "string", "pattern": "^o"},
         {"minLength": 1, "pattern": "^[a-z]", "enum": ["ok", "a", "zz", "x9", ""]},
+        {"anyOf": [{"pattern": "^a"}]},
+        {"not": {"pattern": "^a"}},
+        {"allOf": [{"minLength": 1}]},
+        {"oneOf": [{"pattern": "^a"}]},
     ]
+    data = [(i, _json.dumps(d)) for i, d in enumerate(docs)]
+    df = spark.createDataFrame(data, "doc_id long, payload string")
     for pn in pn_schemas:
         schema = {"type": "object", "propertyNames": pn}
         rule = normalize_schema(schema)
-        # eligibility: these are all logical-op-free → fast path taken
-        assert VariantBinder()._bind_string_rule(rule.property_names) is not None, pn
-        data = [(i, _json.dumps(d)) for i, d in enumerate(docs)]
-        df = spark.createDataFrame(data, "doc_id long, payload string")
         got: dict[int, list] = {}
         for r in validate_json_variant(df, "payload", schema).collect():
             got.setdefault(r["doc_id"], []).append((r["rule_id"], r["path"], r["observed"]))
         for i, d in enumerate(docs):
             expected = sorted((c, p, o) for c, p, o in evaluate(rule, d, ""))
             assert sorted(got.get(i, [])) == expected, (pn, d, got.get(i, []), expected)
-
-    # ineligible: logical ops on propertyNames fall back to the generic wrap
-    for pn in ({"anyOf": [{"pattern": "^a"}]}, {"not": {"pattern": "^a"}},
-               {"allOf": [{"minLength": 1}]}, {"oneOf": [{"pattern": "^a"}]}):
-        rule = normalize_schema({"type": "object", "propertyNames": pn})
-        assert VariantBinder()._bind_string_rule(rule.property_names) is None, pn
 
 
 def test_validate_variant_native_entry_parity(spark):

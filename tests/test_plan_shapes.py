@@ -366,7 +366,7 @@ n = len(C._COMPILE_CACHE)
 v1 = validate_json_variant(jdf, "j", schema).collect()
 assert len(C._COMPILE_CACHE) == n + 1
 def boom(*a, **k): raise AssertionError("second variant compile rebuilt")
-JV.VariantBinder.bind = boom
+JV.bind_variant = boom
 v2 = validate_json_variant(jdf, "j", schema).collect()
 assert len(C._COMPILE_CACHE) == n + 1 and v1 == v2
 print("V:", sorted((r["doc_id"], r["rule_id"], r["path"]) for r in v2))
