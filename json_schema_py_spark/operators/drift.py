@@ -5,12 +5,25 @@ state. Buckets are fixed-width over [lo, hi) with under/overflow clamped to
 the edge buckets, so the bucket id is a pure projection: one groupBy(bucket)
 per side (map-side combinable, shuffle = nbins rows/partition at any scale),
 then PSI is an nbins-row join — driver-trivial.
+
+A histogram already collected (nbins rows) is compared with
+``psi_of_counts``: PSI over per-bucket count Columns against baseline
+proportions folded into literals. The streaming arm evaluates it over each
+window's counts and the deployed job over its collected counts
+(``histogram_psi``), so the two agree bit for bit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from operator import add
+from typing import Iterable, Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from json_schema_py_spark.util import local_frame
 
 
 def bucket_expr(col: str, lo: float, hi: float, nbins: int):
@@ -63,19 +76,78 @@ def psi(
     return j.agg(F.round(F.sum((p - q) * F.log(p / q)), round_to).alias("psi"))
 
 
-def psi_drift_violation(
-    current: DataFrame,
-    baseline: DataFrame,
-    threshold: float = 0.25,
-    column: str = "value",
+def psi_of_counts(
+    counts: Sequence[Column],
+    baseline: Iterable[tuple[int, int]],
+    eps: float = 1e-6,
+    round_to: int = 6,
+) -> Column:
+    """PSI of the histogram whose bucket ``i`` holds ``counts[i]`` rows
+    against ``baseline`` (bucket, cnt) pairs, as one Column: psi()'s math
+    (proportions clamped at ``eps``, terms summed in bucket order, rounded
+    to ``round_to``) with the baseline proportions folded into literals.
+
+    Duplicate baseline buckets are summed (a baseline built as a union of
+    histograms keeps its distribution). A baseline bucket outside
+    range(len(counts)) raises: it was built with different binning, and
+    would otherwise deflate every proportion without a signal."""
+    nbins = len(counts)
+    base: dict[int, int] = {}
+    for b, c in baseline:
+        base[b] = base.get(b, 0) + c
+    if not set(base) <= set(range(nbins)):
+        raise ValueError(
+            f"baseline has buckets {sorted(set(base) - set(range(nbins)))} "
+            f"outside range({nbins}) — rebuild it with the same lo/hi/nbins"
+        )
+    qtot = sum(base.values()) or 1
+    tot = reduce(add, counts).cast("double")
+    terms = []
+    for bi, c in enumerate(counts):
+        q = F.lit(max(base.get(bi, 0) / qtot, eps))
+        p = F.greatest(c.cast("double") / tot, F.lit(eps))
+        terms.append((p - q) * F.log(p / q))
+    return F.round(reduce(add, terms), round_to)
+
+
+def histogram_psi(
+    spark: SparkSession,
+    current: Iterable[tuple[int, int]],
+    baseline: Iterable[tuple[int, int]],
+    nbins: int,
+    eps: float = 1e-6,
+    round_to: int = 6,
 ) -> DataFrame:
-    """PSI thresholded into the violations vocabulary: emits one
+    """One-row (psi) frame: ``psi_of_counts`` of a collected (bucket, cnt)
+    histogram against ``baseline``. The counts are data in a local
+    relation, so reading the frame runs no Spark job."""
+    dense = [0] * nbins
+    for b, c in current:
+        dense[b] += c
+    names = [f"c{i}" for i in range(nbins)]
+    row = local_frame(
+        spark, [tuple(dense)], T.StructType([T.StructField(n, T.LongType()) for n in names])
+    )
+    return row.select(psi_of_counts([F.col(n) for n in names], baseline, eps, round_to).alias("psi"))
+
+
+def drift_violations(p: DataFrame, threshold: float = 0.25, column: str = "value") -> DataFrame:
+    """A (psi) frame thresholded into the violations vocabulary: one
     (doc_id=NULL, rule_id=DISTRIBUTION_DRIFT, path=/<column>, observed=psi)
     row when PSI exceeds the threshold — a table-level verdict row."""
-    p = psi(current, baseline)
     return p.where(F.col("psi") > threshold).select(
         F.lit(None).cast("string").alias("doc_id"),
         F.lit("DISTRIBUTION_DRIFT").alias("rule_id"),
         F.lit("/" + column).alias("path"),
         F.col("psi").cast("string").alias("observed"),
     )
+
+
+def psi_drift_violation(
+    current: DataFrame,
+    baseline: DataFrame,
+    threshold: float = 0.25,
+    column: str = "value",
+) -> DataFrame:
+    """``drift_violations`` of psi() between two histogram frames."""
+    return drift_violations(psi(current, baseline), threshold, column)

@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from json_schema_py_spark.util import local_frame
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType()),
@@ -81,17 +83,22 @@ def planning_fingerprint(spark: SparkSession) -> str:
 def stamp_verdicts(verdicts: DataFrame, spark: SparkSession) -> DataFrame:
     """Verdict rows → LINEAGE_SCHEMA shape (ts / attempt / layout stamped).
     Shared by every lineage backend (parquet here, Iceberg in
-    sinks/iceberg.py) so a schema change cannot silently diverge."""
+    sinks/iceberg.py) so a schema change cannot silently diverge. The
+    stamp is a one-row local relation joined on, not literals: Spark
+    inlines a double literal into generated code, so a per-run ``ts``
+    literal would compile new classes every run."""
+    stamp = local_frame(
+        spark,
+        [(time.time(), uuid.uuid4().hex, planning_fingerprint(spark))],
+        T.StructType(LINEAGE_SCHEMA.fields[-3:]),  # ts, attempt, layout
+    )
     return verdicts.select(
         "run_id",
         F.col("partition_key").cast("string"),
         "pass",
         F.col("docs").cast("long"),
         F.col("violations").cast("long"),
-        F.lit(time.time()).alias("ts"),
-        F.lit(uuid.uuid4().hex).alias("attempt"),
-        F.lit(planning_fingerprint(spark)).alias("layout"),
-    )
+    ).crossJoin(stamp)
 
 
 class LineageLog:

@@ -44,10 +44,14 @@ Documented deviations from the exact path (use validate_json_exact when
 they matter): regex runs under java.util.regex (route via
 json_docs.validate_json_auto semantics if needed); observed values render
 as compact JSON (variant to_json, object keys SORTED — variant objects
-store fields lexicographically); uniqueItems compares to_json renderings
-(the reference compares str() reprs — same equivalence classes for JSON
-data); open-object iteration order is the variant's sorted key order, not
-document order; numeric comparisons (bounds/enum/const/multipleOf) run in
+store fields lexicographically); uniqueItems compares those observed-value
+renderings, the reference str() for scalars (``1`` ≡ ``"1"``,
+``true`` ≡ ``"True"``, ``1`` ≢ ``1.0``) but compact JSON for composites,
+where the reference compares Python reprs: composites differing only in
+key order or in a nested 1 vs 1.0 (parse_json keeps no trailing ``.0``)
+are duplicates here and not there, and a string spelling a composite's
+Python repr duplicates it there and not here; open-object iteration order
+is the variant's sorted key order, not document order; numeric comparisons (bounds/enum/const/multipleOf) run in
 double precision, so integers beyond 2^53 may compare equal when CPython
 would distinguish them (see _sch for the integer/number classification
 corners above int64).
@@ -274,7 +278,7 @@ class Variant:
         return None
 
     def comparable(self, arr: Column) -> Column:
-        return F.transform(arr, lambda x: F.to_json(x))
+        return F.transform(arr, lambda x: _obs(x, _sch(x)))
 
     def present(self, b: Bound, rule: Rule, verbose: bool):
         return b.viol, b.fires

@@ -14,8 +14,11 @@ sandbox, an Iceberg table in production, identical read-side logic):
                                                             # the next baseline
 
 ``append`` also takes {column: (bucket, cnt)} histograms already built on
-the log's bounds, so a job that aggregates each watched column once for
-its drift check snapshots that same aggregate (scripts/run_validation_job.py).
+the log's bounds (frames, or their collected rows), so a job that
+aggregates each watched column once for its drift check snapshots that
+same aggregate (scripts/run_validation_job.py). A snapshot is written from
+its collected rows, with the run's values (run_id, ts) as data: no
+per-run literal reaches generated code.
 
 Every run appends one nbins-row histogram per watched column (bounded:
 columns × nbins rows per run); the newest PREVIOUS run is the baseline, so
@@ -27,13 +30,21 @@ from __future__ import annotations
 
 import os
 import time
-from typing import Mapping
+from typing import Iterable, Mapping, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from json_schema_py_spark.operators.drift import histogram
+from json_schema_py_spark.util import local_frame
+
+# a histogram: a (bucket, cnt) frame, or its collected (bucket, cnt) rows
+Histogram = Union[DataFrame, Iterable[tuple[int, int]]]
+
+BASELINE_SCHEMA = T.StructType(
+    [T.StructField("bucket", T.IntegerType()), T.StructField("cnt", T.LongType())]
+)
 
 HISTORY_SCHEMA = T.StructType(
     [
@@ -49,7 +60,7 @@ HISTORY_SCHEMA = T.StructType(
 def _rank_snapshots(h):
     """_ts_rank = 1 for each column's newest snapshot rows, 2 for the next,
     … (dense over ts so one snapshot's nbins rows share a rank) — the ONE
-    snapshot-identity rule shared by latest_baselines and prune."""
+    snapshot-identity rule shared by latest_counts and prune."""
     w = Window.partitionBy("column").orderBy(F.desc("ts"))
     return h.withColumn("_ts_rank", F.dense_rank().over(w))
 
@@ -74,7 +85,7 @@ class HistogramLog:
         self.path = path
         self.bounds = dict(bounds)
 
-    def append(self, df: DataFrame | Mapping[str, DataFrame], run_id: str) -> None:
+    def append(self, df: DataFrame | Mapping[str, Histogram], run_id: str) -> None:
         """Snapshot every watched column's histogram for ``run_id``.
 
         ``df`` is a frame carrying the watched columns, or the histograms
@@ -91,39 +102,30 @@ class HistogramLog:
         else:
             hists = {col: histogram(df, col, *b) for col, b in self.bounds.items()}
         ts = time.time()
-        parts = [
-            h.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(col).alias("column"),
-                F.col("bucket"),
-                F.col("cnt"),
-                F.lit(ts).alias("ts"),
-            )
+        rows = [
+            (run_id, col, b, c, ts)
             for col, h in hists.items()
+            for b, c in (h.select("bucket", "cnt").collect() if isinstance(h, DataFrame) else h)
         ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("append").parquet(self.path)
+        local_frame(self.spark, rows, HISTORY_SCHEMA).write.mode("append").parquet(self.path)
 
     def read(self) -> DataFrame:
         if not os.path.exists(self.path):
             return self.spark.createDataFrame([], HISTORY_SCHEMA)
         return self.spark.read.schema(HISTORY_SCHEMA).parquet(self.path)
 
-    def latest_baselines(
+    def latest_counts(
         self, exclude_run: str | None = None
-    ) -> dict[str, DataFrame]:
-        """{column: (bucket, cnt) histogram} from the NEWEST snapshot per
-        watched column (optionally excluding the current run's own appends —
-        an idempotent re-run must not use itself as its baseline). Empty dict
+    ) -> dict[str, list[tuple[int, int]]]:
+        """{column: [(bucket, cnt), ...]} of the NEWEST snapshot per watched
+        column (optionally excluding the current run's own appends — an
+        idempotent re-run must not use itself as its baseline). Empty dict
         when no history exists yet: the caller's first run simply has no
         drift check, which is the only honest answer.
 
-        The history is read once: the newest snapshots (at most columns ×
-        nbins rows) are collected and each baseline is a local frame, so
-        using a baseline never reads the log again and later appends do not
-        change it."""
+        One Spark job reads the history: the newest snapshots (at most
+        columns × nbins rows) are collected, so using the counts never
+        reads the log again and later appends do not change them."""
         if not os.path.exists(self.path):
             return {}
         h = self.read().where(F.col("column").isin(list(self.bounds)))
@@ -138,9 +140,16 @@ class HistogramLog:
         per_col: dict[str, list[tuple[int, int]]] = {}
         for r in rows:
             per_col.setdefault(r["column"], []).append((r["bucket"], r["cnt"]))
+        return per_col
+
+    def latest_baselines(
+        self, exclude_run: str | None = None
+    ) -> dict[str, DataFrame]:
+        """``latest_counts`` as {column: (bucket, cnt) histogram frame}, each
+        a local relation (run_validation's ``drift_baselines``)."""
         return {
-            c: self.spark.createDataFrame(hist, "bucket int, cnt long")
-            for c, hist in per_col.items()
+            c: local_frame(self.spark, hist, BASELINE_SCHEMA)
+            for c, hist in self.latest_counts(exclude_run).items()
         }
 
     def prune(self, older_than_ts: float, keep_newest: int = 2) -> int:

@@ -148,10 +148,10 @@ def spans_documents(
     ``docs`` substitutes a pre-read frame with the raw documents schema for
     the parquet read — the derivation is a stateless projection, so a
     ``readStream`` frame binds unchanged (the streaming drift arm of
-    scripts/run_validation_job.py). Not combinable with
+    scripts/run_validation_job.py). A stream is not combinable with
     ``include_source_file`` (``_metadata`` is a batch-scan column)."""
-    if docs is not None and include_source_file:
-        raise ValueError("include_source_file requires the batch parquet read")
+    if docs is not None and docs.isStreaming and include_source_file:
+        raise ValueError("include_source_file requires a batch parquet read")
     if docs is None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # project to unambiguous names first: the output re-uses the name

@@ -8,15 +8,21 @@ schema parameter), then PSI folds those columns as stateless expressions.
 A chained (window,bucket)→window two-agg design was tried first and
 rejected: multi-stateful append-mode pipelines need an extra
 watermark-advancing micro-batch per stage to flush, which finite
-AvailableNow replays don't reliably get. The baseline side is STATIC and
-tiny (nbins rows) — its proportions fold into literals driver-side, so
-the stream never joins anything: state is one row per open window.
+AvailableNow replays don't reliably get. The baseline is nbins counts whose
+proportions fold into literals (operators/drift.psi_of_counts), so the
+stream never joins anything: state is one row per open window, and
+``start_windows`` keeps it on one state partition.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import Iterable
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from json_schema_py_spark.operators.drift import bucket_expr, psi_of_counts
 
 
 def streaming_psi(
@@ -25,7 +31,7 @@ def streaming_psi(
     lo: float,
     hi: float,
     nbins: int,
-    baseline: DataFrame,
+    baseline: Iterable[tuple[int, int]],
     window_duration: str = "10 minutes",
     ts_col: str = "ts",
     watermark: str = "10 minutes",
@@ -34,38 +40,19 @@ def streaming_psi(
 ) -> DataFrame:
     """(window_start, window_end, n_rows, psi) per event-time window.
 
-    ``baseline`` is a STATIC (bucket, cnt) histogram (operators/drift
-    .histogram output) — collected driver-side (nbins rows) and folded
-    into literal proportions, identical to operators/drift.psi's math
-    (same eps clamp, same rounding) so batch and stream agree bucket for
-    bucket. Late rows beyond ``watermark`` are dropped by the engine;
-    windows emit once finalized (append mode).
+    ``baseline`` is the baseline histogram's (bucket, cnt) COUNTS, e.g.
+    ``HistogramLog.latest_counts()[col]`` or a collected operators/drift
+    .histogram; building the stream runs no Spark job. Each window's PSI is
+    ``psi_of_counts`` over its per-bucket counts, the same Column the
+    deployed job evaluates over its collected histogram, so batch and
+    stream agree bucket for bucket. Late rows beyond ``watermark`` are
+    dropped by the engine; windows emit once finalized (append mode).
 
     Pushdown caveat (probed): the NULL filter on ``col`` is pushed past
     the watermark node into the file scan, so rows with a NULL value
     never advance the watermark — watermark-driving heartbeat/sentinel
     rows must carry a NON-NULL value (they land in their own later
     window, which emits separately)."""
-    from json_schema_py_spark.operators.drift import bucket_expr
-
-    # aggregate before folding: a baseline accidentally built as a UNION of
-    # histograms carries duplicate bucket rows, and a dict comprehension
-    # would keep only the last row's count, silently deflating that
-    # bucket's q
-    qrows = {
-        r["bucket"]: r["cnt"]
-        for r in baseline.groupBy("bucket").agg(F.sum("cnt").alias("cnt")).collect()
-    }
-    if not set(qrows) <= set(range(nbins)):
-        # a baseline built with DIFFERENT binning would silently deflate
-        # every q (its extra buckets inflate qtot but never enter a term),
-        # diverging from batch psi() with no signal
-        raise ValueError(
-            f"baseline has buckets {sorted(set(qrows) - set(range(nbins)))} "
-            f"outside range({nbins}) — rebuild it with the same lo/hi/nbins"
-        )
-    qtot = sum(qrows.values()) or 1
-
     b = bucket_expr(col, lo, hi, nbins)
     per_w = (
         stream.withWatermark(ts_col, watermark)
@@ -80,21 +67,43 @@ def streaming_psi(
             F.count(F.lit(1)).alias("n_rows"),
         )
     )
-    tot = F.col("n_rows").cast("double")
-    terms: list[Column] = []
-    for bi in range(nbins):
-        q = max(qrows.get(bi, 0) / qtot, eps)
-        p = F.greatest(F.col(f"_c{bi}").cast("double") / tot, F.lit(eps))
-        terms.append((p - F.lit(q)) * F.log(p / F.lit(q)))
-    psi_col = terms[0]
-    for t in terms[1:]:
-        psi_col = psi_col + t
+    psi_col = psi_of_counts([F.col(f"_c{bi}") for bi in range(nbins)], baseline, eps, round_to)
     return per_w.select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         F.col("n_rows"),
-        F.round(psi_col, round_to).alias("psi"),
+        psi_col.alias("psi"),
     )
+
+
+def start_windows(windows: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
+    """Start an AvailableNow query appending ``windows`` (a streaming_psi
+    frame) as parquet at ``path``, its state on ONE partition.
+
+    The state is keyed by the window alone, so every row of a window lands
+    in one state partition whatever the count, and the partial aggregation
+    stays map-side; the session's shuffle partitions (200 under
+    spark-submit's defaults) would only commit that many near-empty state
+    stores per micro-batch. The query's session is cloned from the
+    caller's when the query is constructed inside ``start()``, so the
+    setting is applied around that call alone and the caller's session
+    keeps its own. A restarted query keeps the count its checkpoint
+    recorded."""
+    spark = windows.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        return (
+            windows.writeStream.format("parquet")
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, prev)
 
 
 def streaming_psi_from_log(
@@ -108,7 +117,7 @@ def streaming_psi_from_log(
     round_to: int = 6,
     exclude_run: str | None = None,
 ) -> DataFrame:
-    """streaming_psi with its baseline + bucket bounds pulled from a
+    """streaming_psi with its baseline counts + bucket bounds pulled from a
     plans/stats_history.HistogramLog — the live-ingest arm of the
     run-over-run drift loop: batch runs append snapshots, the stream
     drifts against WHAT THE LAST RUN SAW, with the bounds guaranteed
@@ -116,13 +125,13 @@ def streaming_psi_from_log(
     the log has no snapshot for ``col`` yet — a first run has no honest
     baseline (same contract as latest_baselines' empty dict).
 
-    ``exclude_run`` passes through to latest_baselines — a RETRIED run_id
+    ``exclude_run`` passes through to latest_counts — a RETRIED run_id
     whose earlier attempt already appended its snapshot must not baseline
     against itself (the batch loop's invariant holds for the stream too)."""
     if col not in log.bounds:
         raise ValueError(f"column {col!r} is not watched by this HistogramLog")
     lo, hi, nbins = log.bounds[col]
-    baselines = log.latest_baselines(exclude_run=exclude_run)
+    baselines = log.latest_counts(exclude_run=exclude_run)
     if col not in baselines:
         raise ValueError(
             f"HistogramLog at {log.path} has no snapshot for {col!r} yet — "

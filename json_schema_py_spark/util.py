@@ -2,9 +2,25 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """``rows`` as a local relation: the rows are data held in the plan.
+    Reading the frame back runs no Spark job (``createDataFrame`` of a
+    list parallelizes it over every core), and no value reaches generated
+    code as a literal, so a plan over per-run values compiles the same
+    classes every run."""
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -59,6 +59,7 @@ values = st.recursive(
         st.integers(-99, 99),
         st.floats(-99, 99, allow_nan=False).map(lambda x: round(x, 3)),
         st.text(alphabet="abxy Z", max_size=6),
+        st.sampled_from(["1", "1.0", "-2", "True", "False", "None"]),
     ),
     lambda kids: st.one_of(
         st.lists(kids, max_size=3),
@@ -66,8 +67,17 @@ values = st.recursive(
     ),
     max_leaves=6,
 )
+# uniqueItems compares by str(): 1 ≡ "1" and True ≡ "True", 1 ≢ 1.0. Flat
+# arrays of scalars that collide (or nearly) under that rule
+str_collisions = st.fixed_dictionaries({
+    "tags": st.lists(
+        st.sampled_from([1, 1.0, "1", "1.0", -2, "-2", True, "True", False, "False",
+                         None, "None", 0.5, "0.5"]),
+        max_size=4,
+    ),
+})
 docs_strategy = st.lists(
-    st.one_of(values, st.just(None)), min_size=1, max_size=8
+    st.one_of(values, str_collisions, st.just(None)), min_size=1, max_size=8
 )
 
 
@@ -97,6 +107,29 @@ def test_variant_matches_pyeval_sequences(spark, batch):
         # convention), which is exactly evaluate(rule, None)
         expected = sorted((c, p) for c, p, _ in evaluate(rule, d, ""))
         assert sorted(got.get(i, [])) == expected, f"doc={d!r}"
+
+
+def test_variant_unique_items_compares_like_pyeval(spark):
+    """uniqueItems duplicates follow pyeval's str() rule on scalars: a
+    number or boolean and the string spelling it are duplicates, an int
+    and the equal float are not."""
+    from json_schema_py_spark.plans.json_variant import validate_json_variant
+    from json_schema_py_spark.schema.model import normalize_schema
+    from json_schema_py_spark.schema.pyeval import evaluate
+
+    schema = {"type": "object", "properties": {"a": {"type": "array", "uniqueItems": True}}}
+    arrays = [[1, "1"], [True, "True"], [None, "None"], [0.5, "0.5"], [1, 1.0], [2.0, 2],
+              [1, True], [False, 0], ["x", 1, "1.0", 1.0]]
+    df = spark.createDataFrame(
+        [(i, json.dumps({"a": a})) for i, a in enumerate(arrays)], "doc_id long, payload string"
+    )
+    got: dict[int, list] = {}
+    for r in validate_json_variant(df, "payload", schema).collect():
+        got.setdefault(r["doc_id"], []).append((r["rule_id"], r["path"], r["observed"]))
+    rule = normalize_schema(schema)
+    for i, a in enumerate(arrays):
+        assert got.get(i, []) == [tuple(v)[:3] for v in evaluate(rule, {"a": a}, "")], a
+    assert sorted(got) == [0, 1, 2, 3, 8]
 
 
 def test_variant_stays_jvm_side(spark):

@@ -183,7 +183,9 @@ def test_streaming_psi_matches_batch_math(spark, tmp_path):
     baseline = histogram(df.where(F.minute("ts") == 1), "v", 0.0, 10.0, 5)
     stream = spark.readStream.schema(df.schema).parquet(src)
     q = (
-        streaming_psi(stream, "v", 0.0, 10.0, 5, baseline, "10 minutes", watermark="1 second")
+        streaming_psi(
+            stream, "v", 0.0, 10.0, 5, baseline.collect(), "10 minutes", watermark="1 second"
+        )
         .writeStream.format("memory")
         .queryName("psi_stream")
         .outputMode("append")
@@ -220,8 +222,8 @@ def test_streaming_psi_matches_batch_math(spark, tmp_path):
 
 def test_streaming_psi_baseline_with_duplicate_buckets(spark):
     """ADVICE r03: a baseline accidentally built as a UNION of two
-    histograms carries duplicate bucket rows; the dict fold must aggregate
-    them, not keep only the last row's count. A baseline unioned with
+    histograms carries duplicate bucket rows; the fold into proportions
+    must sum them, not keep only the last row's count. A baseline unioned with
     itself has the identical distribution, so psi must be unchanged.
     (streaming_psi's plan is batch-executable — withWatermark and
     F.window are no-ops / plain exprs on a batch frame — which lets this
@@ -237,7 +239,7 @@ def test_streaming_psi_baseline_with_duplicate_buckets(spark):
     doubled = base.unionByName(base)  # same distribution, duplicate rows
 
     def run(b):
-        out = streaming_psi(df, "v", 0.0, 10.0, 5, b, "10 minutes").collect()
+        out = streaming_psi(df, "v", 0.0, 10.0, 5, b.collect(), "10 minutes").collect()
         assert len(out) == 1
         return out[0]["psi"]
 

@@ -220,3 +220,112 @@ def test_job_reads_stats_history_once_per_run(spark, tmp_path):
 
     reading = [k for k in execs if scans_history(k)]
     assert len(reading) <= 1, [execs[k].description() for k in reading]
+
+
+def test_warm_job_run_compiles_no_new_code(spark, tmp_path):
+    """A warm job run with a baseline compiles no generated class: per-run
+    values (the lineage and history timestamps) travel as data, never as
+    literals Spark would inline into a new generated source."""
+    from test_plan_shapes import _compiles
+
+    out = str(tmp_path / "out")
+    for run_id in ("seed", "r1"):
+        _run(spark, SF, out, run_id)
+    before = _compiles(spark)
+    stdout = _run(spark, SF, out, "r2")
+    assert "identical=True" in stdout
+    assert _compiles(spark) - before == 0
+
+
+# A baseline run at sf0.001 under Spark's defaults (local[2], 200 shuffle
+# partitions), counted by test_job_cost_under_spark_submit_defaults's probe
+# while the drift loop re-read its histogram aggregate and the stream's
+# state spread over the session's 200 partitions: 48 jobs, 1,849 completed
+# tasks.
+_PARENT_JOBS, _PARENT_TASKS = 48, 1849
+
+_COST_PROBE = """
+import json, sys, tempfile
+sys.path[:0] = [sys.argv[1], sys.argv[1] + "/scripts"]
+import run_validation_job
+from pyspark.sql import SparkSession
+from pyspark.sql.streaming import StreamingQueryListener
+
+out = tempfile.mkdtemp()
+run_validation_job.main(sys.argv[2], out, "seed")
+spark = SparkSession.getActiveSession()
+sc = spark.sparkContext
+parts = []
+
+class Progress(StreamingQueryListener):
+    def onQueryStarted(self, e): pass
+    def onQueryProgress(self, e):
+        parts.extend(op.numShufflePartitions for op in e.progress.stateOperators)
+    def onQueryIdle(self, e): pass
+    def onQueryTerminated(self, e): pass
+
+spark.streams.addListener(Progress())
+store = sc._jsc.sc().statusStore()
+conv = sc._gateway.jvm.scala.jdk.javaapi.CollectionConverters
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+mark = max(j.jobId() for j in conv.asJava(store.jobsList(None)))
+run_validation_job.main(sys.argv[2], out, "r1")
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+jobs = [j for j in conv.asJava(store.jobsList(None)) if j.jobId() > mark]
+print("COST:", json.dumps({
+    "jobs": len(jobs),
+    "tasks": sum(j.numCompletedTasks() for j in jobs),
+    "state_partitions": parts,
+}))
+"""
+
+
+def test_job_cost_under_spark_submit_defaults():
+    """Under the session spark-submit gives the job (Spark's defaults: 200
+    shuffle partitions), a baseline run submits at most two thirds of the
+    jobs and a fifth of the tasks it did when the drift loop re-read its
+    histogram aggregate and the stream's state spread over the session's
+    partitions, and the stream's aggregation keeps one state partition.
+    (The run's other work, unchanged, is 24 of those jobs: the read-back
+    counts of the closing line alone are 6.)"""
+    import json
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell")
+    out = subprocess.run(
+        [sys.executable, "-c", _COST_PROBE, root, SF],
+        capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    line = next(x for x in out.stdout.splitlines() if x.startswith("COST:"))
+    cost = json.loads(line.split(" ", 1)[1])
+    assert cost["jobs"] <= _PARENT_JOBS * 2 // 3, cost
+    assert cost["tasks"] <= _PARENT_TASKS // 5, cost
+    assert cost["state_partitions"] and set(cost["state_partitions"]) == {1}, cost
+
+
+def test_failed_run_leaves_no_stream_running(spark, tmp_path, monkeypatch):
+    """A run with a baseline whose cross-row write fails raises, and its
+    streaming arm, started before the batch work, is stopped: no query
+    stays active and nothing the job persisted outlives it."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out = str(tmp_path / "out")
+    _run(spark, SF, out, "seed")
+    write = DataFrameWriter.parquet
+
+    def failing(self, path, *a, **kw):
+        if path.endswith("/violations_cross"):
+            raise RuntimeError("cross-row sink unavailable")
+        return write(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    jsc = spark.sparkContext._jsc
+    rdds0 = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(RuntimeError, match="cross-row sink unavailable"):
+        _run(spark, SF, out, "r1")
+    assert os.path.isdir(os.path.join(out, "drift_stream_ck", "r1"))  # it had started
+    assert spark.streams.active == []
+    assert set(jsc.getPersistentRDDs().keySet()) - rdds0 == set()
