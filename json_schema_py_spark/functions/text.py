@@ -93,7 +93,7 @@ def word_shingles(col: Column, k: int = 3, normalize: bool = False) -> Column:
     ``normalize=True`` canonicalizes the text first (normalize_text:
     lowercase, strip punctuation, collapse whitespace) — the standard
     decontamination convention, so a benchmark item quoted with different
-    casing/punctuation still matches (round-3 VERDICT item 2). Off by
+    casing/punctuation still matches. Off by
     default: dedup tiers that want raw-surface similarity keep it.
 
     PERF: built by zipping k shifted copies of the token array, NOT by
@@ -246,8 +246,8 @@ def repetition_metrics(col: Column, ngram_n: int = 2, round_to: int = 6) -> Colu
     All pure JVM sort+fold expressions, each with an exact DuckDB mirror
     (multiplicities via list folds). The lines and grams arrays are each
     referenced several times below, so both are bound ONCE as lambda
-    variables (the module's no-CSE doctrine — review r04: the inline form
-    re-split every document ~4x and re-tokenized it 2x per row)."""
+    variables (the module's no-CSE doctrine: the inline form re-splits
+    every document ~4x and re-tokenizes it 2x per row)."""
     n_chars = F.length(col)
 
     def with_bound(lines: Column, grams: Column) -> Column:

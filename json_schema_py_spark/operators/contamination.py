@@ -57,7 +57,7 @@ def _doc_shingles(
 def _shingle_hit_counts(doc_sh: DataFrame, bench_sh: DataFrame) -> DataFrame:
     """(sh, hits): corpus hit count per distinct benchmark shingle — ONE
     counting pipeline shared by the cap filter and the audit so the two
-    can never count differently (review r03). Pass the SAME
+    can never count differently. Pass the SAME
     max_shingle_hits to contamination_hits and contamination_hot_shingles
     or the audit reports the wrong exclusion set."""
     return (
@@ -77,8 +77,8 @@ def corpus_shingle_cms(
     depth: int = 3,
 ) -> DataFrame:
     """Count-min sketch over the corpus's per-doc DISTINCT word shingles —
-    the REUSABLE corpus artifact behind CMS-filtered decontamination
-    (round-5, VERDICT r04 item 7). Build it ONCE per corpus snapshot
+    the REUSABLE corpus artifact behind CMS-filtered decontamination.
+    Build it ONCE per corpus snapshot
     (one explode + one map-side-combinable groupBy, output bounded at
     depth×width rows no matter the corpus size), then screen EVERY eval
     suite against it via contamination_hits(shingle_cms=...) — the exact
@@ -130,7 +130,7 @@ def contamination_hits(
     punctuation, collapse whitespace) before shingling — real
     decontamination (and the 13-gram convention) normalizes first, or a
     benchmark item quoted with different casing/punctuation escapes the
-    scan entirely (round-3 VERDICT item 2).
+    scan entirely.
 
     ``shingle_cms`` (a corpus_shingle_cms frame built with matching
     shingle_k/normalize) replaces the exact hot-shingle counting pass —
@@ -139,7 +139,7 @@ def contamination_hits(
     column metadata, so they normally need not (and should not) be
     repeated here; an explicit ``cms_width``/``cms_depth`` is
     cross-checked and a mismatch raises instead of silently estimating 0
-    for every shingle (ADVICE r05). The swap
+    for every shingle. The swap
     is work-bound SAFE: CMS never undercounts, so est ≤ cap ⇒ true ≤ cap
     and every kept shingle is genuinely under the cap; overestimates can
     only exclude EXTRA borderline shingles (audit the delta with
@@ -243,37 +243,6 @@ def contamination_cms_overdrop(
     )
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    bench_id_col: str = "bench_id",
-    shingle_k: int = 8,
-    min_shared: int = 1,
-    max_shingle_hits: int | None = None,
-    normalize: bool = False,
-    shingle_cms: DataFrame | None = None,
-    cms_width: int | None = None,
-    cms_depth: int | None = None,
-) -> DataFrame:
-    """Corpus minus contaminated docs (left-anti on contamination_hits'
-    doc ids) — the drop list stays distributed; only the benchmark side
-    broadcasts. ``max_shingle_hits`` passes through to the hot-shingle cap
-    (review r03: without it the wrapper couldn't apply the scale contract
-    its own module mandates); ``shingle_cms`` passes through to the
-    sketch-backed cap filter (round-5)."""
-    hits = contamination_hits(
-        docs, benchmark, text_col, id_col, bench_text_col, bench_id_col,
-        shingle_k, min_shared, max_shingle_hits, normalize,
-        shingle_cms, cms_width, cms_depth,
-    ).select("doc_id").distinct()
-    return docs.join(
-        hits.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )
-
-
 # --- PII scan -------------------------------------------------------------
 
 # deliberately simple, deterministic patterns (shared verbatim with the
@@ -290,7 +259,7 @@ PII_PATTERNS: dict[str, str] = {
 def pii_total_col(text_col: Column, patterns: dict[str, str] | None = None) -> Column:
     """Total PII occurrence count across pattern classes as ONE Column —
     the shared primitive behind pii_scan and curation's 'pii' drop reason
-    (one definition so the two can never count differently, review r03)."""
+    (one definition so the two can never count differently)."""
     pats = PII_PATTERNS if patterns is None else patterns
     if not pats:
         raise ValueError("patterns must be non-empty (None selects the defaults)")
@@ -310,7 +279,7 @@ def pii_scan(
     """(doc_id, n_<class>..., pii_total) — occurrence counts per PII class
     via JVM-side regexp_count; one projection, no shuffle. ``patterns=None``
     selects PII_PATTERNS; an explicitly EMPTY dict is an error, never a
-    silent fallback (review r03)."""
+    silent fallback."""
     pats = PII_PATTERNS if patterns is None else patterns
     if not pats:
         raise ValueError("patterns must be non-empty (None selects the defaults)")
@@ -330,9 +299,9 @@ def pii_scan(
 
 # host = dot-separated labels; a label never starts/ends with '.', so a
 # sentence-final period after the URL is NOT swallowed into the domain
-# ("https://spam.example. Next" → spam.example, not spam.example.) —
-# review r04: the trailing dot split domain_counts buckets and defeated
-# blocklist matches on prose corpora
+# ("https://spam.example. Next" → spam.example, not spam.example.): a
+# trailing dot would split domain_counts and domain_cap buckets on prose
+# corpora
 _HOST = r"[A-Za-z0-9-]+(?:\.[A-Za-z0-9-]+)*"
 URL_PATTERN = rf"https?://{_HOST}(?::[0-9]+)?(?:/[^\s]*)?"
 _DOMAIN_FROM_URL = rf"https?://({_HOST})"
@@ -373,28 +342,6 @@ def domain_counts(
     return dedup.groupBy("domain").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("_urls").cast("long").alias("n_urls"),
-    )
-
-
-def flag_blocked_domains(
-    docs: DataFrame,
-    blocked: "list[str]",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, blocked_domains: array<string>) for docs citing ≥1 blocked
-    domain — the curation drop signal. The blocklist folds into the
-    projection as literals (blocklists are thousands of entries; beyond
-    that, broadcast-join the exploded domains instead)."""
-    if not blocked:
-        raise ValueError("blocked must name at least one domain")
-    bset = [b.lower() for b in blocked]
-    doms = F.array_distinct(url_domains(F.col(text_col)))
-    hits = F.filter(doms, lambda d: d.isin(bset))
-    return (
-        ensure_parallelism(docs)
-        .select(F.col(id_col).alias("doc_id"), hits.alias("blocked_domains"))
-        .where(F.size("blocked_domains") > 0)
     )
 
 

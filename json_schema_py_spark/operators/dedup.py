@@ -192,7 +192,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     threshold: float = 0.7,
     broadcast_candidates: bool = True,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard) via banded MinHash-LSH,
     verified with exact Jaccard ≥ threshold.
@@ -230,7 +229,7 @@ def minhash_lsh_pairs(
         F.transform(
             F.array(word_shingles(F.col(text_col), shingle_k)),
             lambda sh: F.when(
-                F.size(sh) > 0, _band_keys(sh, num_hashes, bands, hash_impl=hash_impl)
+                F.size(sh) > 0, _band_keys(sh, num_hashes, bands)
             ),
         ),
         0,
@@ -653,16 +652,6 @@ def simhash_oversized_buckets(
         banded.groupBy("block", "bval")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .where(F.col("cnt") > max_bucket_rows)
-    )
-
-
-def simhash_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Groups of docs sharing an identical simhash (Hamming distance 0)."""
-    s = simhash(df, text_col, id_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sort_array(F.collect_list("id")).alias("ids"))
-        .where(F.col("cnt") > 1)
     )
 
 

@@ -3,14 +3,17 @@
 No reference analogue (SURVEY.md §2.5) — the reference has no cross-run
 state. Buckets are fixed-width over [lo, hi) with under/overflow clamped to
 the edge buckets, so the bucket id is a pure projection: one groupBy(bucket)
-per side (map-side combinable, shuffle = nbins rows/partition at any scale),
-then PSI is an nbins-row join — driver-trivial.
+per side (map-side combinable, shuffle = nbins rows/partition at any scale).
 
-A histogram already collected (nbins rows) is compared with
+Every DISTRIBUTION_DRIFT verdict is ``drift_violations`` over
 ``psi_of_counts``: PSI over per-bucket count Columns against baseline
-proportions folded into literals. The streaming arm evaluates it over each
-window's counts and the deployed job over its collected counts
-(``histogram_psi``), so the two agree bit for bit.
+proportions folded into literals. Batch evaluates it over a collected
+histogram (``histogram_psi``), the streaming arm over each window's counts
+(streaming/drift_stream.streaming_psi), so the two agree bit for bit.
+``psi`` is the same math as a join of two histogram frames.
+
+A histogram with no rows has no distribution: PSI against it is NULL on
+every path, so it never becomes a drift row.
 """
 
 from __future__ import annotations
@@ -52,6 +55,12 @@ def histogram(df: DataFrame, col: str, lo: float, hi: float, nbins: int) -> Data
     )
 
 
+def _clamp(p: Column, eps: float) -> Column:
+    """``p`` raised to at least ``eps``; a NULL proportion (an empty
+    histogram's) stays NULL, where F.greatest would turn it into ``eps``."""
+    return F.when(p < eps, F.lit(eps)).otherwise(p)
+
+
 def psi(
     current: DataFrame,
     baseline: DataFrame,
@@ -62,17 +71,19 @@ def psi(
 
     PSI = Σ (p_i − q_i) · ln(p_i / q_i), proportions clamped at ``eps`` so
     empty buckets don't blow up. Returns a single row (psi double) — rounded
-    for cross-engine comparability. Rule of thumb: <0.1 stable, >0.25 drifted.
+    for cross-engine comparability; NULL when either histogram is empty.
+    Rule of thumb: <0.1 stable, >0.25 drifted.
     """
     cur = current.select(F.col("bucket"), F.col("cnt").alias("c_cur"))
     base = baseline.select(F.col("bucket"), F.col("cnt").alias("c_base"))
     joined = cur.join(base, "bucket", "full_outer").fillna(0, ["c_cur", "c_base"])
     tot = joined.agg(
-        F.sum("c_cur").alias("t_cur"), F.sum("c_base").alias("t_base")
+        F.nullif(F.sum("c_cur"), F.lit(0)).alias("t_cur"),
+        F.nullif(F.sum("c_base"), F.lit(0)).alias("t_base"),
     )
     j = joined.crossJoin(F.broadcast(tot))
-    p = F.greatest(F.col("c_cur") / F.col("t_cur"), F.lit(eps))
-    q = F.greatest(F.col("c_base") / F.col("t_base"), F.lit(eps))
+    p = _clamp(F.col("c_cur") / F.col("t_cur"), eps)
+    q = _clamp(F.col("c_base") / F.col("t_base"), eps)
     return j.agg(F.round(F.sum((p - q) * F.log(p / q)), round_to).alias("psi"))
 
 
@@ -87,10 +98,11 @@ def psi_of_counts(
     (proportions clamped at ``eps``, terms summed in bucket order, rounded
     to ``round_to``) with the baseline proportions folded into literals.
 
-    Duplicate baseline buckets are summed (a baseline built as a union of
-    histograms keeps its distribution). A baseline bucket outside
-    range(len(counts)) raises: it was built with different binning, and
-    would otherwise deflate every proportion without a signal."""
+    NULL when either side holds no rows. Duplicate baseline buckets are
+    summed (a baseline built as a union of histograms keeps its
+    distribution). A baseline bucket outside range(len(counts)) raises: it
+    was built with different binning, and would otherwise deflate every
+    proportion without a signal."""
     nbins = len(counts)
     base: dict[int, int] = {}
     for b, c in baseline:
@@ -100,12 +112,14 @@ def psi_of_counts(
             f"baseline has buckets {sorted(set(base) - set(range(nbins)))} "
             f"outside range({nbins}) — rebuild it with the same lo/hi/nbins"
         )
-    qtot = sum(base.values()) or 1
-    tot = reduce(add, counts).cast("double")
+    qtot = sum(base.values())
+    if not qtot:
+        return F.lit(None).cast("double")
+    tot = F.nullif(reduce(add, counts), F.lit(0)).cast("double")
     terms = []
     for bi, c in enumerate(counts):
         q = F.lit(max(base.get(bi, 0) / qtot, eps))
-        p = F.greatest(c.cast("double") / tot, F.lit(eps))
+        p = _clamp(c.cast("double") / tot, eps)
         terms.append((p - q) * F.log(p / q))
     return F.round(reduce(add, terms), round_to)
 
@@ -119,8 +133,8 @@ def histogram_psi(
     round_to: int = 6,
 ) -> DataFrame:
     """One-row (psi) frame: ``psi_of_counts`` of a collected (bucket, cnt)
-    histogram against ``baseline``. The counts are data in a local
-    relation, so reading the frame runs no Spark job."""
+    histogram against ``baseline`` (NULL when either is empty). The counts
+    are data in a local relation, so reading the frame runs no Spark job."""
     dense = [0] * nbins
     for b, c in current:
         dense[b] += c
@@ -134,20 +148,12 @@ def histogram_psi(
 def drift_violations(p: DataFrame, threshold: float = 0.25, column: str = "value") -> DataFrame:
     """A (psi) frame thresholded into the violations vocabulary: one
     (doc_id=NULL, rule_id=DISTRIBUTION_DRIFT, path=/<column>, observed=psi)
-    row when PSI exceeds the threshold — a table-level verdict row."""
+    row when PSI exceeds the threshold — a table-level verdict row. A NULL
+    psi (an empty histogram) is no row. Columns of ``p`` other than psi are
+    dropped, so one window's streaming_psi row thresholds like a batch one."""
     return p.where(F.col("psi") > threshold).select(
         F.lit(None).cast("string").alias("doc_id"),
         F.lit("DISTRIBUTION_DRIFT").alias("rule_id"),
         F.lit("/" + column).alias("path"),
         F.col("psi").cast("string").alias("observed"),
     )
-
-
-def psi_drift_violation(
-    current: DataFrame,
-    baseline: DataFrame,
-    threshold: float = 0.25,
-    column: str = "value",
-) -> DataFrame:
-    """``drift_violations`` of psi() between two histogram frames."""
-    return drift_violations(psi(current, baseline), threshold, column)

@@ -7,7 +7,7 @@ batches, never per-row Python (BASELINE.json input_hint mandate).
 
 Decode modes:
 
-* ``decode="ppm"`` — a REAL decoder (round 3): binary PPM/P6 images parse
+* ``decode="ppm"`` — a REAL decoder: binary PPM/P6 images parse
   with numpy alone (header tokenizer incl. comments, raw RGB plane), and
   feed real feature extraction (dims, channel means, luma stats) plus a
   nearest-neighbor thumbnailer (``ppm_thumbnails``). Undecodable payloads
@@ -101,7 +101,7 @@ def _parse_p6(payload: bytes):
     if not b[i : i + 1].isspace():
         # the byte after maxval MUST be a single whitespace — skipping a
         # junk byte here would shift the pixel plane by one and return
-        # garbage features instead of the documented NULL (review r03)
+        # garbage features instead of the documented NULL
         return None
     i += 1
     w, h, maxval = vals
@@ -157,7 +157,6 @@ def extract_media_features(media_with_payload: DataFrame, decode: str = "fake") 
     if decode not in ("ppm", "wav", "fake"):
         # never silently fall back to the fake decoder: a typo ('PPM',
         # 'p6') would return plausible md5 pseudo-features with no signal
-        # (review r03)
         raise ValueError(
             f"decode must be 'ppm', 'wav', 'fake', or 'real', got {decode!r}"
         )
@@ -212,7 +211,7 @@ def ppm_thumbnails(
 ) -> DataFrame:
     """(media_ref, thumb: array<double>) — nearest-neighbor luma thumbnail
     (row-major, h*w values in [0,1]) via the same Arrow-batched plumbing;
-    the RESIZE step of the decode/feature/resize/frame-sample family.
+    the RESIZE step of the decode/feature/resize family.
     NULL for undecodable payloads."""
     import numpy as np
 
@@ -247,25 +246,7 @@ def ppm_thumbnails(
     )
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per frame to decode
-    (media_ref, frame_idx). Pure expression — the expensive decode stage
-    consumes this plan via extract_media_features. Frame count is faked
-    deterministically from the ref hash (a real pipeline reads it from
-    container metadata)."""
-    n_frames = (F.pmod(F.xxhash64("media_ref"), F.lit(300)) + 1).cast("int")
-    return (
-        media.where(F.col("mime") == "video/mp4")
-        .select(
-            "media_ref",
-            F.explode(
-                F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
-            ).alias("frame_idx"),
-        )
-    )
-
-
-# --- audio: real WAV/PCM16 decode (round 4) -------------------------------
+# --- audio: real WAV/PCM16 decode -----------------------------------------
 
 
 def _parse_wav(payload: bytes):

@@ -42,8 +42,8 @@ from json_schema_py_spark.functions.text import token_count
 def _prefix_offsets(bucketed: DataFrame, value_col: str) -> DataFrame:
     """Per-bucket totals → driver-side EXCLUSIVE prefix offsets as a tiny
     (_b, _off) frame — the shared second pass of every distributed prefix
-    sum here (review r03: two hand-maintained copies had already needed
-    the same NULL-sum fix twice). Bounded driver traffic: one row per
+    sum here (one copy, so a fix such as the NULL-sum guard lands once).
+    Bounded driver traffic: one row per
     bucket."""
     totals = {
         r["_b"]: r["_sum"]
@@ -65,7 +65,7 @@ def _quantile_bucket_col(base: DataFrame, sur, n_buckets: int):
     Duplicate boundaries (heavy ties) leave some buckets empty, which the
     prefix-sum machinery handles as zero-total buckets."""
     if n_buckets <= 1:
-        # percentile_approx([]) fails analysis (ADVICE r04); one bucket
+        # percentile_approx([]) fails analysis; one bucket
         # needs no boundaries
         return F.lit(1).cast("long")
     qs = [i / n_buckets for i in range(1, n_buckets)]
@@ -92,7 +92,7 @@ def assign_token_spans(
     lexicographic); ids must be unique (validate upstream via
     operators/uniqueness).
 
-    STRING ids (round-2 VERDICT item 9) range-bucket on an ORDER-PRESERVING
+    STRING ids range-bucket on an ORDER-PRESERVING
     numeric surrogate: the first 7 UTF-8 bytes AFTER the common prefix of
     min(id)/max(id), zero-padded, read big-endian. Monotone w.r.t. Spark's
     binary string order (shared-prefix bytes compare equal; the first
@@ -103,7 +103,7 @@ def assign_token_spans(
     without it every id would collapse into one bucket (the global-sort
     death this operator exists to avoid).
 
-    ``bucket_mode`` (round-4, VERDICT r03 item 8): "range" (default)
+    ``bucket_mode``: "range" (default)
     splits the id span into uniform-width buckets — O(1) per row, right
     for roughly uniform id spaces (the dense doc-index case). "quantile"
     draws bucket boundaries from percentile_approx over the (surrogate)
@@ -243,14 +243,13 @@ def select_to_token_budget(
     ``budget_tokens``; the result is a strict prefix of the quality
     ordering, not a knapsack fit. Docs with a NULL, NaN, or
     non-double-castable quality score get keep=False and NULL cum_tokens —
-    unknown quality is never silently selected (review r03, ADVICE r03).
+    unknown quality is never silently selected.
 
     Scale shape — two-pass distributed prefix sum (never a single-
     partition global sort), with TWO bucketing regimes because quality
     scores are usually LOW-CARDINALITY (classifier buckets, {0..5}): a
     plain range-bucket on quality would put billions of tied rows into one
-    bucket — exactly the degenerate window this operator exists to avoid
-    (review r03).
+    bucket — exactly the degenerate window this operator exists to avoid.
 
     * nq ≤ 2048 distinct scores: bucket on the COMPOSITE surrogate
       qrank + id_fraction — strictly increasing in the (quality DESC, id)
@@ -266,7 +265,7 @@ def select_to_token_budget(
     # would break the prefix sum (Python sorted() and F.desc disagree on NaN
     # placement, so bucket offsets and window order diverge) and a value that
     # try_casts to NULL would be dropped by the rank join, losing the
-    # one-row-per-input-doc shape (ADVICE r03)
+    # one-row-per-input-doc shape
     qcast = F.col(quality_col).try_cast("double")
     bad_q = qcast.isNull() | F.isnan(qcast)
     null_rows = docs.where(bad_q).select(

@@ -43,7 +43,7 @@ def l2_norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     # try_divide: a zero-norm vector makes the denominator 0, which under
     # ANSI mode (Spark 4 default) is a DIVIDE_BY_ZERO task failure, not a
-    # NaN — undefined cosine surfaces as NULL instead (ADVICE r03)
+    # NaN — undefined cosine surfaces as NULL instead
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
@@ -68,8 +68,8 @@ def brute_force_topk(
 
 def _rank_topk(c: DataFrame, q: DataFrame, k: int, round_to: int) -> DataFrame:
     """Shared cosine-rank tail for the exact and quantized top-k paths
-    (one definition so tie-break/rounding/k semantics can never diverge —
-    review r03): ``c`` is (neighbor_id, cv), ``q`` is (query_id, qv); the
+    (one definition so tie-break/rounding/k semantics can never
+    diverge): ``c`` is (neighbor_id, cv), ``q`` is (query_id, qv); the
     query side broadcasts."""
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -89,7 +89,7 @@ def _rank_scored(scored: DataFrame, k: int, round_to: int) -> DataFrame:
     quantize_embeddings as scale=0 → all-zero qvec) have undefined cosine:
     NULL via try_divide, or NaN if a caller feeds pre-divided scores. NaN
     sorts ABOVE every real double descending (rank 1 for every query),
-    NULL would still occupy tail ranks — drop both (ADVICE r03)."""
+    NULL would still occupy tail ranks — drop both."""
     scored = scored.where(F.col("_score").isNotNull() & ~F.isnan(F.col("_score")))
     w = Window.partitionBy("query_id").orderBy(F.desc("_score"), F.asc("neighbor_id"))
     return (
@@ -310,20 +310,20 @@ def embedding_near_dup_pairs(
     )
 
 
-# --- int8 scalar quantization (round 3) -----------------------------------
+# --- int8 scalar quantization ---------------------------------------------
 
 
 def _quantized_cols(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(vec_id, scale, qvec) without any repartition — shared by
     quantize_embeddings (which parallelizes the corpus) and
     quantized_topk's QUERY side (about to be broadcast; a repartition
-    there is a wasted shuffle, review r03)."""
+    there is a wasted shuffle)."""
     v = F.col(vec_col)
     scale_expr = F.array_max(F.transform(v, lambda x: F.abs(x))).cast("double")
     # bind scale as a lambda VARIABLE: referenced inside the per-element
     # transform it would otherwise re-run the O(dim) array_max PER ELEMENT
-    # (the no-CSE-in-HOF-lambdas pitfall, review r03 — same trap that made
-    # minhash 40x slower before round 1's fix)
+    # (the no-CSE-in-HOF-lambdas pitfall: the same trap makes an unbound
+    # MinHash fold 40x slower)
     sq = F.get(
         F.transform(
             F.array(scale_expr),
@@ -355,8 +355,8 @@ def quantize_embeddings(
     quantization: scale = max(|v|), q_i = floor(v_i/scale*127 + 0.5)
     (explicit half-up — F.round's HALF_UP and DuckDB's round() disagree on
     negative halves, floor(+0.5) is identical everywhere). qvec is BYTE
-    elements (review r03: an int cast would store 4-byte INT32 on the lake
-    and void the 4x-smaller-than-float32 claim). At 100 TB the quantized
+    elements (an int cast would store 4-byte INT32 on the lake and void
+    the 4x-smaller-than-float32 claim). At 100 TB the quantized
     table is what you scan for candidate generation, refining survivors
     against the full-precision column. Zero vectors quantize to all-zero
     with scale 0."""
@@ -376,8 +376,8 @@ def quantized_topk(
     storage-honest comparison). The per-vector scale cancels out of
     cosine — cos(qa·sa/127, qb·sb/127) = Σ qa_i·qb_i / (‖qa‖·‖qb‖) — so
     the hot pair loop is a pure int8×int8 long accumulate (the point of
-    int8 at scale: no per-element dequantize multiply, round-4 VERDICT
-    item 7; measured 1.9x the dequantize formulation at sf0.1). Each
+    int8 at scale: no per-element dequantize multiply; measured 1.9x the
+    dequantize formulation at sf0.1). Each
     side's integer norm is computed ONCE per vector, not per pair.
     Same shape/determinism contract as brute_force_topk (shared ranking
     tail); scores differ from exact by the quantization error

@@ -146,16 +146,16 @@ def cms_table(
         # the build parameters travel WITH the sketch (column metadata —
         # zero-cost, no action): cms_estimates reads them back so a
         # width/depth mismatch is a loud ValueError instead of silent
-        # est=0 for every query (ADVICE r05)
+        # est=0 for every query
         .withMetadata("cnt", {"cms_width": width, "cms_depth": depth})
     )
 
 
 def _cms_buckets(value, width: int, depth: int):
     """array<struct<row,bucket>> — the ONE seeded (row, bucket) projection
-    shared by sketch build and query (review r04b: two verbatim copies
-    could drift, and a drifted query side silently estimates 0 for every
-    value — breaking the est >= true contract with no error)."""
+    shared by sketch build and query (two copies could drift, and a
+    drifted query side silently estimates 0 for every value — breaking the
+    est >= true contract with no error)."""
     from json_schema_py_spark.functions.text import stable_hash64
 
     return F.array(
@@ -188,7 +188,7 @@ def cms_estimates(
 
     width/depth MUST match the sketch's build parameters: a mismatch
     hashes into buckets the sketch never populated and every estimate
-    silently becomes 0 (ADVICE r05). cms_table stamps its parameters
+    silently becomes 0. cms_table stamps its parameters
     into the cnt column's metadata, so the default (None) reads them
     straight off the sketch — no way to mismatch; an EXPLICIT width/depth
     is cross-checked against that metadata and a conflict raises. Only a

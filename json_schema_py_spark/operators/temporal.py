@@ -50,7 +50,7 @@ def _contains_map(dt: T.DataType) -> bool:
 def _orderable(df: DataFrame, col: str) -> Column:
     """``col`` itself when its type is orderable, else its to_json form —
     a content-deterministic stand-in so tie-breaking never depends on row
-    layout even for map-typed payload columns (ADVICE r05)."""
+    layout even for map-typed payload columns."""
     if _contains_map(df.schema[col].dataType):
         return F.to_json(F.col(col))
     return F.col(col)
@@ -76,7 +76,7 @@ def as_of_join(
     Right-side ties on (key, ts) resolve to the last row in a
     content-deterministic order over the right payload columns
     (map-typed columns order by their to_json form — maps themselves
-    are not orderable; ADVICE r05).
+    are not orderable).
 
     ``right_ts`` must not appear in ``key_cols`` when ``tolerance_seconds``
     is set — the tolerance check reads the matched row's timestamp from
@@ -108,7 +108,7 @@ def as_of_join(
     ).where(
         # a NULL-timestamp right row can never satisfy right_ts <= left_ts,
         # but NULLS-FIRST ASC ordering would otherwise make it the carried
-        # match for left rows with no genuine predecessor (review r05)
+        # match for left rows with no genuine predecessor
         F.col("_ts").isNotNull()
     )
     lpay = F.struct(*[F.col(c) for c in left.columns]).alias("_lpay")
@@ -172,7 +172,7 @@ def interval_join(
     tail, exactly like the LSH/ngram bucket-cap pattern. Intervals with
     ``start > end`` or a NULL endpoint are also excluded (they contain no
     timestamp); audit them with interval_join_invalid so nothing is ever
-    silently dropped without a row (ADVICE r05)."""
+    silently dropped without a row."""
     keys = list(key_cols)
     # .cast("timestamp"): interval arithmetic yields TIMESTAMP_NTZ, which
     # unix_micros rejects (Spark 4 ANSI)
@@ -217,7 +217,7 @@ def interval_join_invalid(
 ) -> DataFrame:
     """The intervals interval_join excludes as INVALID — ``start > end``
     or either endpoint NULL (no timestamp can satisfy containment). The
-    companion audit to interval_join_oversized (ADVICE r05): between the
+    companion audit to interval_join_oversized: between the
     two, every input interval is either joined or accounted for."""
     return intervals.where(
         F.col(start_col).isNull()

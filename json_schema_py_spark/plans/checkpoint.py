@@ -82,8 +82,8 @@ def planning_fingerprint(spark: SparkSession) -> str:
 
 def stamp_verdicts(verdicts: DataFrame, spark: SparkSession) -> DataFrame:
     """Verdict rows → LINEAGE_SCHEMA shape (ts / attempt / layout stamped).
-    Shared by every lineage backend (parquet here, Iceberg in
-    sinks/iceberg.py) so a schema change cannot silently diverge. The
+    Every lineage write goes through it, so the stored schema has one
+    definition whatever table backs the log. The
     stamp is a one-row local relation joined on, not literals: Spark
     inlines a double literal into generated code, so a per-run ``ts``
     literal would compile new classes every run."""

@@ -1,24 +1,27 @@
 """Run-over-run statistics history: the operational drift loop.
 
-``run_validation`` takes drift baselines as an argument; production runs
-don't hand-carry histograms — they compare against WHAT THE LAST RUN SAW.
-This module closes that loop with an append-only histogram log (same
-storage doctrine as plans/checkpoint.LineageLog: parquet directory in the
-sandbox, an Iceberg table in production, identical read-side logic):
+Production runs don't hand-carry baseline histograms — they compare against
+WHAT THE LAST RUN SAW. This module closes that loop with an append-only
+histogram log (same storage doctrine as plans/checkpoint.LineageLog:
+parquet directory in the sandbox, an Iceberg table in production,
+identical read-side logic):
 
     log = HistogramLog(spark, path, bounds={"n_chars": (0.0, 600.0, 12)})
-    baselines = log.latest_baselines(exclude_run=run_id)   # {} on first run
-    run = run_validation(df, rulesets, drift_baselines=baselines,
-                         drift_histogram=None per-column bounds from log, ...)
-    log.append(df, run_id)                                  # this run becomes
-                                                            # the next baseline
+    baselines = log.latest_counts(exclude_run=run_id)   # {} on first run
+    current = {c: histogram(df, c, *b).collect() for c, b in log.bounds.items()}
+    drift = [
+        drift_violations(histogram_psi(spark, current[c], base, log.bounds[c][2]), column=c)
+        for c, base in baselines.items()
+    ]
+    log.append(current, run_id)                         # the next run's baseline
 
-``append`` also takes {column: (bucket, cnt)} histograms already built on
-the log's bounds (frames, or their collected rows), so a job that
-aggregates each watched column once for its drift check snapshots that
-same aggregate (scripts/run_validation_job.py). A snapshot is written from
-its collected rows, with the run's values (run_id, ts) as data: no
-per-run literal reaches generated code.
+``append`` takes {column: (bucket, cnt)} histograms already built on the
+log's bounds (frames, or their collected rows), so a job that aggregates
+each watched column once for its drift check snapshots that same
+aggregate (scripts/run_validation_job.py); given a frame instead, it
+builds the histograms itself. A snapshot is written from its collected
+rows, with the run's values (run_id, ts) as data: no per-run literal
+reaches generated code.
 
 Every run appends one nbins-row histogram per watched column (bounded:
 columns × nbins rows per run); the newest PREVIOUS run is the baseline, so
@@ -41,10 +44,6 @@ from json_schema_py_spark.util import local_frame
 
 # a histogram: a (bucket, cnt) frame, or its collected (bucket, cnt) rows
 Histogram = Union[DataFrame, Iterable[tuple[int, int]]]
-
-BASELINE_SCHEMA = T.StructType(
-    [T.StructField("bucket", T.IntegerType()), T.StructField("cnt", T.LongType())]
-)
 
 HISTORY_SCHEMA = T.StructType(
     [
@@ -142,22 +141,12 @@ class HistogramLog:
             per_col.setdefault(r["column"], []).append((r["bucket"], r["cnt"]))
         return per_col
 
-    def latest_baselines(
-        self, exclude_run: str | None = None
-    ) -> dict[str, DataFrame]:
-        """``latest_counts`` as {column: (bucket, cnt) histogram frame}, each
-        a local relation (run_validation's ``drift_baselines``)."""
-        return {
-            c: local_frame(self.spark, hist, BASELINE_SCHEMA)
-            for c, hist in self.latest_counts(exclude_run).items()
-        }
-
     def prune(self, older_than_ts: float, keep_newest: int = 2) -> int:
         """Retention: drop snapshots with ts < ``older_than_ts``; returns
         rows removed. For every column STILL WATCHED (in ``bounds``) the
         ``keep_newest`` most recent snapshots survive regardless of the
         cutoff (default 2: the current snapshot AND the previous one —
-        an idempotent re-run calls latest_baselines(exclude_run=own) and
+        an idempotent re-run calls latest_counts(exclude_run=own) and
         must still find a baseline after its own append).
         Columns no longer in bounds (dropped from the watch list, or an
         old bucket-grid epoch) age out by the cutoff alone. keep_newest=0

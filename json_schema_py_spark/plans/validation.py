@@ -28,8 +28,9 @@ per-row rulesets (all of them, not just the first) AND the cross-row engine
 checks attributable to its rows — cross-row violation counts are joined back
 by key, so a partition carrying a duplicate or FK miss can no longer be
 checkpointed as ``pass``. A duplicate spanning two partitions fails both
-(each must be reprocessed). Table-level checks (distribution drift) land on
-a ``__table__`` pseudo-partition row. Cross-row checks are only meaningful
+(each must be reprocessed). Table-level checks (distribution drift,
+operators/drift) have no partition to fail and are written beside the
+verdicts, not in them. Cross-row checks are only meaningful
 over the FULL table: on a checkpoint-resumed remainder they see only the
 remaining rows, so resumed runs must re-run uniqueness/FK table-wide (see
 plans/checkpoint.py docstring).
@@ -111,18 +112,11 @@ def run_validation(
     key_col: str = "doc_id",
     unique_key: Optional[str] = "doc_id",
     media_dim: Optional[DataFrame] = None,
-    drift_baselines: Optional[Mapping[str, DataFrame]] = None,
-    drift_histogram: Optional[tuple] = None,
-    drift_threshold: float = 0.25,
     run_id: str = "run-0",
     partition_key: Union[str, Column, None] = None,
 ) -> ValidationRun:
-    """Validate ``df`` against every ruleset plus the engine-level checks.
-
-    ``drift_baselines``: {column: baseline (bucket, cnt) histogram}; current
-    histograms use ``drift_histogram=(lo, hi, nbins)`` bounds. A PSI above
-    ``drift_threshold`` adds one table-level DISTRIBUTION_DRIFT row
-    (doc_id NULL) to the violations union and a ``__table__`` verdict row.
+    """Validate ``df`` against every ruleset plus the cross-row checks
+    (uniqueness on ``unique_key``, span FKs into ``media_dim``).
 
     Lazy: building the run submits no Spark job and persists nothing.
     ``violations`` and ``verdicts`` both read ``rules``; a caller that
@@ -159,26 +153,8 @@ def run_validation(
         cross_specs.append((uniqueness_violations(df, unique_key), unique_key))
     if media_dim is not None and "spans" in df.columns:
         cross_specs.append((spans_fk_violations(df, media_dim), "doc_id"))
-    cross_parts = [p for p, _ in cross_specs]
-
-    table_parts: list[DataFrame] = []
-    if drift_baselines:
-        from json_schema_py_spark.operators.drift import histogram, psi_drift_violation
-
-        for col, baseline in drift_baselines.items():
-            # drift_histogram: one (lo, hi, nbins) for every column, or a
-            # per-column mapping (the HistogramLog.bounds shape)
-            if isinstance(drift_histogram, Mapping):
-                lo, hi, nbins = drift_histogram[col]
-            else:
-                lo, hi, nbins = drift_histogram or (0.0, 1000.0, 20)
-            cur = histogram(df, col, lo, hi, nbins)
-            table_parts.append(
-                psi_drift_violation(cur, baseline, threshold=drift_threshold, column=col)
-            )
-
     violations = reduce(
-        lambda a, b: a.unionByName(b), [row_viols] + cross_parts + table_parts
+        lambda a, b: a.unionByName(b), [row_viols] + [p for p, _ in cross_specs]
     )
 
     # ---- verdicts: per-row rollup + cross-row attribution by key ----
@@ -272,19 +248,6 @@ def run_validation(
             )
         )
         verdicts = verdicts.unionByName(nullkey)
-    if table_parts:
-        tbl = (
-            reduce(lambda a, b: a.unionByName(b), table_parts)
-            .agg(F.count(F.lit(1)).alias("violations"))
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit("__table__").alias("partition_key"),
-                (F.col("violations") == 0).alias("pass"),
-                F.lit(0).cast("long").alias("docs"),
-                F.col("violations").cast("long"),
-            )
-        )
-        verdicts = verdicts.unionByName(tbl)
     return ValidationRun(violations=violations, verdicts=verdicts, rules=rules)
 
 
@@ -379,22 +342,4 @@ def schema_drift(df: DataFrame, expected: T.StructType) -> DataFrame:
             rows.append((name, status, None, ",".join(ats)))
     return df.sparkSession.createDataFrame(
         rows, "column string, status string, expected_type string, actual_type string"
-    )
-
-
-def schema_drift_violations(df: DataFrame, expected: T.StructType) -> DataFrame:
-    """schema_drift thresholded into the violations vocabulary: one
-    (doc_id NULL, rule_id=SCHEMA_DRIFT, path=/<column>, observed) row per
-    non-ok column — table-level rows, same shape as DISTRIBUTION_DRIFT,
-    so the run loop unions them without ceremony."""
-    d = schema_drift(df, expected)
-    return d.where(F.col("status") != "ok").select(
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit("SCHEMA_DRIFT").alias("rule_id"),
-        F.concat(F.lit("/"), F.col("column")).alias("path"),
-        F.concat_ws(
-            ":",
-            F.col("status"),
-            F.coalesce(F.col("actual_type"), F.lit("absent")),
-        ).alias("observed"),
     )

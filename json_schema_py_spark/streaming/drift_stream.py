@@ -1,6 +1,8 @@
 """Streaming distribution drift: per-event-time-window PSI against a
 static baseline histogram (the live-ingest arm of the run-over-run drift
-loop in plans/stats_history.py).
+loop in plans/stats_history.py). A window's DISTRIBUTION_DRIFT row is
+operators/drift.drift_violations over its streaming_psi row, the batch
+verdict's own thresholding.
 
 Shape: ONE streaming aggregation — groupBy(window) with nbins CONDITIONAL
 count columns (bucket membership is a pure projection, nbins is a static
@@ -104,73 +106,3 @@ def start_windows(windows: DataFrame, path: str, checkpoint: str) -> StreamingQu
         )
     finally:
         spark.conf.set(key, prev)
-
-
-def streaming_psi_from_log(
-    stream: DataFrame,
-    col: str,
-    log,
-    window_duration: str = "10 minutes",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    eps: float = 1e-6,
-    round_to: int = 6,
-    exclude_run: str | None = None,
-) -> DataFrame:
-    """streaming_psi with its baseline counts + bucket bounds pulled from a
-    plans/stats_history.HistogramLog — the live-ingest arm of the
-    run-over-run drift loop: batch runs append snapshots, the stream
-    drifts against WHAT THE LAST RUN SAW, with the bounds guaranteed
-    identical on both sides because both read ``log.bounds``. Raises when
-    the log has no snapshot for ``col`` yet — a first run has no honest
-    baseline (same contract as latest_baselines' empty dict).
-
-    ``exclude_run`` passes through to latest_counts — a RETRIED run_id
-    whose earlier attempt already appended its snapshot must not baseline
-    against itself (the batch loop's invariant holds for the stream too)."""
-    if col not in log.bounds:
-        raise ValueError(f"column {col!r} is not watched by this HistogramLog")
-    lo, hi, nbins = log.bounds[col]
-    baselines = log.latest_counts(exclude_run=exclude_run)
-    if col not in baselines:
-        raise ValueError(
-            f"HistogramLog at {log.path} has no snapshot for {col!r} yet — "
-            "append a batch run before streaming against it"
-        )
-    return streaming_psi(
-        stream, col, lo, hi, nbins, baselines[col],
-        window_duration, ts_col, watermark, eps, round_to,
-    )
-
-
-def streaming_drift_violations(
-    stream: DataFrame,
-    col: str,
-    log,
-    threshold: float = 0.25,
-    window_duration: str = "10 minutes",
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    eps: float = 1e-6,
-    round_to: int = 6,
-    exclude_run: str | None = None,
-) -> DataFrame:
-    """Per-window DISTRIBUTION_DRIFT violation rows, mirroring
-    run_validation's batch contract exactly — (doc_id NULL, rule_id,
-    path=/<column>, observed=psi-as-string), same PSI math, same rounding,
-    same threshold semantics (psi > threshold) — prefixed with the window
-    bounds a stream needs for attribution. A window whose distribution
-    matches the log's latest snapshot emits nothing, exactly as the batch
-    loop's psi_drift_violation emits no row."""
-    pw = streaming_psi_from_log(
-        stream, col, log, window_duration, ts_col, watermark, eps, round_to,
-        exclude_run,
-    )
-    return pw.where(F.col("psi") > threshold).select(
-        "window_start",
-        "window_end",
-        F.lit(None).cast("string").alias("doc_id"),
-        F.lit("DISTRIBUTION_DRIFT").alias("rule_id"),
-        F.lit("/" + col).alias("path"),
-        F.col("psi").cast("string").alias("observed"),
-    )

@@ -28,26 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state(spark, changelog_checkpointing: bool = True) -> None:
-    """Switch stateful streaming queries started AFTER this call to the
-    RocksDB state store (SURVEY §9.3). Mandatory at production key
-    cardinalities — a 10^12-doc fingerprint space cannot live in the default
-    HDFS-backed in-memory map; RocksDB keeps state off-heap/on-disk with
-    changelog (incremental) checkpointing. rocksdbjni ships with Spark, so
-    this is a config flip, not a dependency."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    if changelog_checkpointing:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-
-
 STREAK_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType()),

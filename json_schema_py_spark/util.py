@@ -23,7 +23,7 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
     return spark.createDataFrame(table, schema)
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition when the input has fewer partitions than cores.
 
     Small/compacted parquet inputs arrive as 1-2 partitions, which serializes
@@ -35,7 +35,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
         # no rdd on a streaming frame; micro-batch sizing is the stream's
         # own concern (validate paths call this and bind to streams)
         return df
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

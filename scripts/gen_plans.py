@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate PLANS.md from the LIVE optimizer output so the document can
-never drift from the code (round-2 lesson: hand-captured plan dumps went
-stale after the unrolling and LSH-diet changes).
+never drift from the code (a hand-captured plan dump goes stale with the
+next plan change).
 
     python scripts/gen_plans.py          # rewrites PLANS.md in place
 """

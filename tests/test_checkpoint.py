@@ -1,5 +1,5 @@
 """Lineage checkpoint / resume: idempotency under retry, durable partition
-identity, layout guard, full-union verdicts (north rule + ADVICE r01)."""
+identity, layout guard, full-union verdicts."""
 
 from __future__ import annotations
 
@@ -181,96 +181,59 @@ def test_verdicts_cover_all_rulesets_and_cross_row_checks(spark):
     assert cross_only.verdicts.where(~F.col("pass")).count() >= 1
 
 
-def test_run_validation_with_drift(spark):
-    """Drift baselines wired into the single validation plan: a shifted
-    column trips DISTRIBUTION_DRIFT (violations row + __table__ verdict);
-    a matching baseline doesn't."""
-    from pyspark.sql import functions as F2
-
-    from json_schema_py_spark.operators.drift import histogram
-    from json_schema_py_spark.plans.validation import run_validation
-    from json_schema_py_spark.sources.synth import DOCUMENTS_RULESET, spans_documents
-
-    sd = spans_documents(spark, SF).withColumn("n_spans", F2.size("spans"))
-    self_hist = histogram(sd, "n_spans", 0.0, 10.0, 10)
-    shifted = histogram(
-        sd.withColumn("n_spans", F2.col("n_spans") + 4), "n_spans", 0.0, 10.0, 10
-    )
-
-    clean = run_validation(
-        sd, {"structural": DOCUMENTS_RULESET},
-        drift_baselines={"n_spans": self_hist}, drift_histogram=(0.0, 10.0, 10),
-    )
-    assert clean.violations.where(F2.col("rule_id") == "DISTRIBUTION_DRIFT").count() == 0
-    tbl = clean.verdicts.where(F2.col("partition_key") == "__table__").collect()
-    assert len(tbl) == 1 and tbl[0]["pass"] and tbl[0]["violations"] == 0
-
-    drifted = run_validation(
-        sd, {"structural": DOCUMENTS_RULESET},
-        drift_baselines={"n_spans": shifted}, drift_histogram=(0.0, 10.0, 10),
-    )
-    rows = drifted.violations.where(F2.col("rule_id") == "DISTRIBUTION_DRIFT").collect()
-    assert len(rows) == 1 and rows[0]["path"] == "/n_spans"
-    tbl = drifted.verdicts.where(F2.col("partition_key") == "__table__").collect()
-    assert len(tbl) == 1 and not tbl[0]["pass"] and tbl[0]["violations"] == 1
-
-
 def test_histogram_log_drift_loop(spark, tmp_path):
-    """The operational drift loop: first run has no baseline (no drift
-    check), the second run compares against the first's snapshot, a shifted
-    corpus trips DISTRIBUTION_DRIFT, and a run never baselines against its
-    own appends (idempotent retry)."""
-    from pyspark.sql import functions as F2
-
+    """The operational drift loop, latest_counts → histogram_psi →
+    drift_violations: the first run has no baseline (no drift check), a
+    run on identical data finds no drift, a shifted corpus trips
+    DISTRIBUTION_DRIFT, and a retried run never baselines against its own
+    snapshot."""
+    from json_schema_py_spark.operators.drift import (
+        drift_violations,
+        histogram,
+        histogram_psi,
+    )
     from json_schema_py_spark.plans.stats_history import HistogramLog
-    from json_schema_py_spark.plans.validation import run_validation
-    from json_schema_py_spark.sources.synth import DOCUMENTS_RULESET, spans_documents
+    from json_schema_py_spark.sources.synth import spans_documents
 
     bounds = {"n_spans": (0.0, 10.0, 10)}
     log = HistogramLog(spark, str(tmp_path / "hist"), bounds)
-    sd = spans_documents(spark, SF).withColumn("n_spans", F2.size("spans"))
+    sd = spans_documents(spark, SF).withColumn("n_spans", F.size("spans"))
+    shifted = sd.withColumn("n_spans", F.col("n_spans") + 4)
 
-    # run 1: empty history → no drift baselines → no DISTRIBUTION_DRIFT part
-    assert log.latest_baselines(exclude_run="r1") == {}
-    r1 = run_validation(
-        sd, {"structural": DOCUMENTS_RULESET},
-        drift_baselines=log.latest_baselines(exclude_run="r1"),
-        drift_histogram=bounds, run_id="r1",
-    )
-    assert r1.violations.where(F2.col("rule_id") == "DISTRIBUTION_DRIFT").count() == 0
-    log.append(sd, "r1")
+    def run(df, run_id):
+        """One run: (its baselines, its drift rows); then its snapshot."""
+        current = histogram(df, "n_spans", *bounds["n_spans"]).collect()
+        baselines = log.latest_counts(exclude_run=run_id)
+        rows = [
+            tuple(r)
+            for c, base in baselines.items()
+            for r in drift_violations(
+                histogram_psi(spark, current, base, bounds[c][2]), column=c
+            ).collect()
+        ]
+        log.append({"n_spans": current}, run_id)
+        return baselines, rows
 
-    # run 2 on IDENTICAL data: baseline exists, no drift
-    b2 = log.latest_baselines(exclude_run="r2")
-    assert set(b2) == {"n_spans"}
-    r2 = run_validation(
-        sd, {"structural": DOCUMENTS_RULESET},
-        drift_baselines=b2, drift_histogram=bounds, run_id="r2",
-    )
-    assert r2.violations.where(F2.col("rule_id") == "DISTRIBUTION_DRIFT").count() == 0
-    log.append(sd, "r2")
-
+    # run 1: empty history → no baseline → no drift check
+    assert run(sd, "r1") == ({}, [])
+    # run 2 on IDENTICAL data: a baseline exists, no drift
+    b2, rows2 = run(sd, "r2")
+    assert set(b2) == {"n_spans"} and rows2 == []
     # run 3 on a SHIFTED corpus: drift fires vs run 2's snapshot
-    shifted = sd.withColumn("n_spans", F2.col("n_spans") + 4)
-    b3 = log.latest_baselines(exclude_run="r3")
-    r3 = run_validation(
-        shifted, {"structural": DOCUMENTS_RULESET},
-        drift_baselines=b3, drift_histogram=bounds, run_id="r3",
+    _, rows3 = run(shifted, "r3")
+    assert len(rows3) == 1
+    assert rows3[0][:3] == (None, "DISTRIBUTION_DRIFT", "/n_spans")
+
+    # a retried run 3 excludes its own snapshot: its baseline is run 2's
+    # histogram, while the unfiltered newest snapshot is run 3's shifted
+    # one — so the retry reaches run 3's verdict again
+    r2_hist = sorted(
+        (r["bucket"], r["cnt"])
+        for r in log.read().where(F.col("run_id") == "r2").collect()
     )
-    rows = r3.violations.where(F2.col("rule_id") == "DISTRIBUTION_DRIFT").collect()
-    assert len(rows) == 1 and rows[0]["path"] == "/n_spans"
-    log.append(shifted, "r3")
-
-    # retried run 3 must exclude its own snapshot from the baseline: the
-    # excluded view equals run 2's histogram, while the unfiltered newest
-    # snapshot is run 3's SHIFTED histogram — they must differ
-    from json_schema_py_spark.operators.drift import psi
-
-    b3r = log.latest_baselines(exclude_run="r3")
-    newest_all = log.latest_baselines()
-    r2_hist = log.read().where(F2.col("run_id") == "r2").select("bucket", "cnt")
-    assert psi(b3r["n_spans"], r2_hist).collect()[0]["psi"] == 0.0
-    assert psi(newest_all["n_spans"], r2_hist).collect()[0]["psi"] > 0.25
+    assert sorted(log.latest_counts(exclude_run="r3")["n_spans"]) == r2_hist
+    assert sorted(log.latest_counts()["n_spans"]) != r2_hist
+    assert run(shifted, "r3")[1] == rows3
 
 
 def test_cross_row_attribution_respects_unique_key_and_is_exact(spark):
@@ -325,7 +288,7 @@ def test_null_keyed_cross_row_violations_fail_a_nullkey_verdict(spark):
 
 
 def test_histogram_log_prune_keeps_baseline_pair(spark, tmp_path):
-    """Round-4 (review r04c): retention prune keeps each WATCHED column's
+    """Retention prune keeps each WATCHED column's
     two newest snapshots past any cutoff (an idempotent re-run excludes
     its own snapshot and still needs a baseline); unwatched columns age
     out by the cutoff alone; keep_newest=0 prunes unconditionally."""
@@ -344,7 +307,7 @@ def test_histogram_log_prune_keeps_baseline_pair(spark, tmp_path):
     assert removed == 4
     assert {r["run_id"] for r in log.read().collect()} == {"run-1", "run-2"}
     # the idempotent-re-run flow still has a baseline after pruning
-    assert "v" in log.latest_baselines(exclude_run="run-2")
+    assert "v" in log.latest_counts(exclude_run="run-2")
 
     # idempotent: nothing more to remove
     assert log.prune(_time.time() + 10) == 0

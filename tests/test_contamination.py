@@ -1,5 +1,5 @@
-"""Decontamination + PII scan: planted overlap is found, clean docs
-survive, and the corpus side never shuffles before the hit aggregation."""
+"""Decontamination + PII scan: planted overlap is found, and the corpus
+side never shuffles before the hit aggregation."""
 
 from __future__ import annotations
 
@@ -9,10 +9,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_contamination_hits_and_decontaminate(spark):
-    from json_schema_py_spark.operators.contamination import (
-        contamination_hits,
-        decontaminate,
-    )
+    from json_schema_py_spark.operators.contamination import contamination_hits
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
     # benchmark: verbatim copies of docs 0-4 → those docs are contaminated
@@ -38,12 +35,6 @@ def test_contamination_hits_and_decontaminate(spark):
         if r["bench_id"] == r["doc_id"] + 900000
     }
     assert exact == {(i, own[i]) for i in range(5)}
-
-    clean = decontaminate(docs, bench, shingle_k=8, min_shared=3)
-    kept = {r["doc_id"] for r in clean.select("doc_id").collect()}
-    dropped = {r["doc_id"] for r in hits.select("doc_id").distinct().collect()}
-    assert kept == {r["doc_id"] for r in docs.collect()} - dropped
-    assert not (set(range(5)) & kept)
 
 
 def test_contamination_corpus_side_never_shuffles_before_hits(spark):
@@ -138,15 +129,12 @@ def test_contamination_hot_shingle_cap_and_audit(spark):
 
 
 def test_normalized_shingling_catches_perturbed_quotes(spark):
-    """Round-4 (VERDICT r03 item 2): a benchmark item quoted with different
-    casing/punctuation escapes RAW shingling entirely; normalize=True
-    canonicalizes both sides and catches every plant. Also pins
+    """A benchmark item quoted with different casing/punctuation escapes
+    RAW shingling entirely; normalize=True canonicalizes both sides and
+    catches every plant. Also pins
     word_shingles(normalize=True) == word_shingles over normalize_text."""
     from json_schema_py_spark.functions.text import normalize_text, word_shingles
-    from json_schema_py_spark.operators.contamination import (
-        contamination_hits,
-        decontaminate,
-    )
+    from json_schema_py_spark.operators.contamination import contamination_hits
 
     docs = spark.createDataFrame(
         [
@@ -184,9 +172,6 @@ def test_normalized_shingling_catches_perturbed_quotes(spark):
         assert ns[(i, 900 + i)] == max(
             v for (d, b), v in ns.items() if b == 900 + i
         )
-    # decontaminate passes normalize through
-    kept = decontaminate(docs, bench, shingle_k=8, min_shared=5, normalize=True)
-    assert kept.count() < 20
     # word_shingles(normalize=True) ≡ word_shingles(normalize_text(col))
     a = docs.select(word_shingles(F.col("text"), 3, normalize=True).alias("s"))
     b = docs.select(word_shingles(normalize_text(F.col("text")), 3).alias("s"))
@@ -194,13 +179,9 @@ def test_normalized_shingling_catches_perturbed_quotes(spark):
 
 
 def test_domain_extraction_and_blocklist(spark):
-    """Round-4: URL→domain extraction (scheme/case/www normalization,
-    ports, paths), corpus domain counts with per-doc dedup, and the
-    blocklist flagger."""
-    from json_schema_py_spark.operators.contamination import (
-        domain_counts,
-        flag_blocked_domains,
-    )
+    """URL→domain extraction (scheme/case/www normalization, ports,
+    paths) and corpus domain counts with per-doc dedup."""
+    from json_schema_py_spark.operators.contamination import domain_counts
 
     docs = spark.createDataFrame(
         [
@@ -213,14 +194,6 @@ def test_domain_extraction_and_blocklist(spark):
     )
     got = {r["domain"]: (r["n_docs"], r["n_urls"]) for r in domain_counts(docs).collect()}
     assert got == {"foo.com": (2, 4), "bar.org": (1, 1), "spam.example": (1, 1)}
-
-    flagged = {r["doc_id"]: sorted(r["blocked_domains"]) for r in
-               flag_blocked_domains(docs, ["SPAM.example", "foo.com"]).collect()}
-    assert flagged == {1: ["foo.com"], 2: ["foo.com"], 4: ["spam.example"]}
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="at least one"):
-        flag_blocked_domains(docs, [])
 
 
 def test_contamination_cms_filter_contract(spark):

@@ -219,47 +219,6 @@ def test_merge_index_equals_rebuild_and_closes_the_loop(spark):
     assert all(v == ("exact_dup", i) for i, v in re_probe.items())
 
 
-def test_incremental_stream_matches_batch(spark, tmp_path):
-    """AvailableNow micro-batch probes against the same snapshot indexes
-    produce EXACTLY the batch verdicts of the batches' union."""
-    from json_schema_py_spark.operators.incremental import (
-        corpus_index,
-        incremental_dedup,
-    )
-    from json_schema_py_spark.streaming.incremental_stream import (
-        incremental_dedup_stream,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = docs.where("doc_id < 400")
-    batch = docs.where("doc_id >= 400").select(
-        (F.col("doc_id") + 1000).alias("doc_id"), "text"
-    )
-    # two micro-batch files
-    src = str(tmp_path / "incoming")
-    batch.where("doc_id % 2 = 0").coalesce(1).write.mode("append").parquet(src)
-    batch.where("doc_id % 2 = 1").coalesce(1).write.mode("append").parquet(src)
-    exact, band = corpus_index(corpus)
-    expected = {
-        (r["doc_id"], r["verdict"], r["matched_id"], r["jaccard"])
-        for r in incremental_dedup(batch, corpus, exact, band).collect()
-    }
-
-    out = str(tmp_path / "verdicts")
-    stream = spark.readStream.schema(batch.schema).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    q = incremental_dedup_stream(
-        stream, corpus, exact, band, out, str(tmp_path / "ck")
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["doc_id"], r["verdict"], r["matched_id"], r["jaccard"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == expected and len(got) == batch.count()
-
-
 def test_incremental_no_forced_broadcast(spark):
     """Scale doctrine: both the exact probe and the band probe are plain
     shuffle equi-joins — nothing corpus-scale is ever force-broadcast."""

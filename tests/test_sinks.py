@@ -38,24 +38,3 @@ def test_partitioned_sink_roundtrip_and_pruning(spark, tmp_path):
     # production default; exactly-once comes from the run_id dedup upstream)
     write_violations(v, out)
     assert read_violations(spark, out).count() == 2 * v.count()
-
-
-def test_iceberg_bindings_gated(spark):
-    """No iceberg runtime in this container: the bindings must probe and
-    fail with actionable guidance (never an opaque ClassNotFoundException);
-    with the jar present the same entry points are the production path."""
-    import pytest
-
-    from json_schema_py_spark.sinks.iceberg import (
-        IcebergLineageLog,
-        iceberg_available,
-        write_violations_iceberg,
-    )
-
-    if iceberg_available(spark):  # pragma: no cover - jar not shipped here
-        pytest.skip("iceberg runtime present; bindings exercised elsewhere")
-    v = spark.createDataFrame([("d1", "X", "/p", "1")], "doc_id string, rule_id string, path string, observed string")
-    with pytest.raises(RuntimeError, match="Iceberg runtime"):
-        write_violations_iceberg(v, "lake.db.violations")
-    with pytest.raises(RuntimeError, match="Iceberg runtime"):
-        IcebergLineageLog(spark, "lake.db.lineage")

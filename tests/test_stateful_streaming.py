@@ -64,58 +64,3 @@ def test_violation_streaks(spark, tmp_path):
     expected = validate(ev, schema, key_col="event_id").count()
     assert "NUMBER_TOO_SMALL" in rows
     assert rows["NUMBER_TOO_SMALL"]["violations_in_batch"] == expected
-
-
-def test_first_seen_dedup_under_rocksdb_state_store(spark, tmp_path):
-    """Same stateful operator, RocksDB state store (the production provider
-    for unbounded key spaces — SURVEY §9.3): identical output, and the
-    checkpoint actually materializes RocksDB state files."""
-    import os
-
-    from json_schema_py_spark.functions.text import text_fingerprint
-    from json_schema_py_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        streaming_first_seen,
-        use_rocksdb_state,
-    )
-
-    src = str(tmp_path / "in")
-    d = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
-    dup = d.where(F.col("doc_id") < 5).withColumn("doc_id", F.col("doc_id") + 9000)
-    d.unionByName(dup).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        text_fingerprint(F.col("text")).alias("fingerprint"),
-    ).repartition(3).write.parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    try:
-        assert (
-            spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-            == ROCKSDB_PROVIDER
-        )
-        stream = spark.readStream.schema("doc_id string, fingerprint string").parquet(src)
-        ck = str(tmp_path / "ck_rocks")
-        q = (
-            streaming_first_seen(stream)
-            .writeStream.format("memory")
-            .queryName("first_seen_rocks")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        fps = [r["fingerprint"] for r in spark.sql("select * from first_seen_rocks").collect()]
-        assert len(fps) == 60 and len(set(fps)) == 60
-        # RocksDB layout present under the state checkpoint
-        state_dir = os.path.join(ck, "state")
-        found = []
-        for root, _dirs, files in os.walk(state_dir):
-            found.extend(files)
-        assert any(f.endswith(".zip") or f.endswith(".changelog") for f in found), found
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

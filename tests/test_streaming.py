@@ -221,7 +221,7 @@ def test_streaming_psi_matches_batch_math(spark, tmp_path):
 
 
 def test_streaming_psi_baseline_with_duplicate_buckets(spark):
-    """ADVICE r03: a baseline accidentally built as a UNION of two
+    """A baseline accidentally built as a UNION of two
     histograms carries duplicate bucket rows; the fold into proportions
     must sum them, not keep only the last row's count. A baseline unioned with
     itself has the identical distribution, so psi must be unchanged.
@@ -247,28 +247,31 @@ def test_streaming_psi_baseline_with_duplicate_buckets(spark):
 
 
 def test_streaming_drift_loop_matches_batch_verdict(spark, tmp_path):
-    """Round-4 (VERDICT r03 item 5): the HistogramLog's latest snapshot
-    feeds streaming_psi directly, and a drifted window emits the SAME
-    DISTRIBUTION_DRIFT violation row (rule_id, path, observed) that
-    run_validation's batch drift loop produces on the identical rows vs
-    the identical baseline. A non-drifted window emits nothing on both
-    sides."""
+    """The HistogramLog's latest snapshot baselines streaming_psi, and
+    each window's DISTRIBUTION_DRIFT verdict — drift_violations over its
+    streaming_psi row — equals the batch verdict, drift_violations over
+    histogram_psi of the same rows against the same counts. A drifted
+    window emits the identical row on both sides; a mirror window emits
+    nothing on both."""
     from datetime import datetime
 
-    from json_schema_py_spark.plans.stats_history import HistogramLog
-    from json_schema_py_spark.plans.validation import run_validation
-    from json_schema_py_spark.streaming.drift_stream import (
-        streaming_drift_violations,
-        streaming_psi_from_log,
+    from json_schema_py_spark.operators.drift import (
+        drift_violations,
+        histogram,
+        histogram_psi,
     )
+    from json_schema_py_spark.plans.stats_history import HistogramLog
+    from json_schema_py_spark.streaming.drift_stream import streaming_psi
 
     log = HistogramLog(spark, str(tmp_path / "hist"), bounds={"v": (0.0, 10.0, 5)})
+    lo, hi, nbins = log.bounds["v"]
 
     # run-0 (batch): uniform snapshot becomes the baseline
     base_rows = [(float(i % 10),) for i in range(200)]
     log.append(spark.createDataFrame(base_rows, "v double"), "run-0")
+    base = log.latest_counts()["v"]
 
-    # stream: window A mirrors the baseline, window B is drifted hard
+    # stream: window 10:00 mirrors the baseline, window 10:10 is drifted hard
     rows = [(datetime(2026, 1, 1, 10, 1), float(i % 10)) for i in range(200)]
     rows += [(datetime(2026, 1, 1, 10, 11), 9.0) for _ in range(200)]
     sdf = spark.createDataFrame(rows, "ts timestamp, v double")
@@ -281,8 +284,8 @@ def test_streaming_drift_loop_matches_batch_verdict(spark, tmp_path):
 
     stream = spark.readStream.schema(sdf.schema).parquet(src)
     q = (
-        streaming_drift_violations(
-            stream, "v", log, threshold=0.25,
+        streaming_psi(
+            stream, "v", lo, hi, nbins, base,
             window_duration="10 minutes", watermark="1 second",
         )
         .writeStream.format("memory").queryName("drift_loop")
@@ -292,39 +295,25 @@ def test_streaming_drift_loop_matches_batch_verdict(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    got = spark.sql("select * from drift_loop").collect()
+    windows = spark.table("drift_loop")
+
+    def verdict(p):
+        return [tuple(r) for r in drift_violations(p, column="v").collect()]
+
+    by_minute = {
+        m: verdict(windows.where(F.minute("window_start") == m)) for m in (0, 10, 30)
+    }
     # the drifted 10:10 window AND the 10:30 sentinel window (one row
     # concentrated in bucket 0 IS drifted vs the uniform baseline — a
     # correct verdict, not noise); the mirror 10:00 window emits nothing
     # and the final sentinel window never closes
-    assert {r["window_start"].minute for r in got} == {10, 30}, got
-    r = next(x for x in got if x["window_start"].minute == 10)
-    assert (r["doc_id"], r["rule_id"], r["path"]) == (None, "DISTRIBUTION_DRIFT", "/v")
+    assert {m for m, v in by_minute.items() if v} == {10, 30}, by_minute
+    assert by_minute[10][0][:3] == (None, "DISTRIBUTION_DRIFT", "/v")
 
-    # batch loop on the drifted window's rows vs the same log baseline
-    drifted = spark.createDataFrame([(i, 9.0) for i in range(200)], "doc_id long, v double")
-    run = run_validation(
-        drifted,
-        {"r": {"properties": {"v": {"type": "number"}}}},
-        unique_key=None,
-        drift_baselines=log.latest_baselines(),
-        drift_histogram=log.bounds,
-        drift_threshold=0.25,
-    )
-    batch_rows = [
-        (x["rule_id"], x["path"], x["observed"])
-        for x in run.violations.where(F.col("rule_id") == "DISTRIBUTION_DRIFT").collect()
-    ]
-    assert batch_rows == [(r["rule_id"], r["path"], r["observed"])]
-
-    # guards: unwatched column, missing snapshot
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not watched"):
-        streaming_psi_from_log(stream, "w", log)
-    empty_log = HistogramLog(spark, str(tmp_path / "none"), bounds={"v": (0.0, 1.0, 2)})
-    with _pytest.raises(ValueError, match="no snapshot"):
-        streaming_psi_from_log(stream, "v", empty_log)
+    # batch verdicts on each data window's rows vs the same log baseline
+    for m in (0, 10):
+        cur = histogram(sdf.where(F.minute("ts") == m + 1), "v", lo, hi, nbins).collect()
+        assert verdict(histogram_psi(spark, cur, base, nbins)) == by_minute[m]
 
 
 def test_quality_and_repetition_metrics_bind_to_streams(spark, tmp_path):

@@ -198,7 +198,7 @@ def test_streaming_arm_compares_each_runs_own_windows(spark, tmp_path):
 
 def test_job_reads_stats_history_once_per_run(spark, tmp_path):
     """A run with a baseline reads the stats history in one SQL execution:
-    ``latest_baselines`` collects the newest snapshot once, and the PSI
+    ``latest_counts`` collects the newest snapshot once, and the PSI
     violation, the streaming arm and its batch comparison all use those
     collected rows (reading it lazily per baseline took five executions at
     sf0.001)."""
